@@ -273,6 +273,17 @@ def cmd_repair(args) -> int:
     return 0
 
 
+def cmd_verify(args) -> int:
+    """Format check of an existing index (IndexBuilder.verify); exits 1
+    when any invariant is violated."""
+    from aspublic_spark.index.build import IndexBuilder
+
+    spark = _spark(args)
+    result = IndexBuilder(spark, args.index).verify()
+    print(json.dumps(result))
+    return 0 if result["ok"] else 1
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="aspublic_spark")
     p.add_argument("--cpus", type=int, default=0)
@@ -353,12 +364,20 @@ def main(argv=None) -> int:
     rp = sub.add_parser("repair", help="roll pending markers forward, GC orphan state")
     rp.add_argument("--index", required=True)
 
+    vf = sub.add_parser(
+        "verify",
+        help="check stored blocks: ascending doc ids, min/max_doc, "
+             "unique postings, dense block_ids",
+    )
+    vf.add_argument("--index", required=True)
+
     args = p.parse_args(argv)
     return {
         "package": cmd_package, "build": cmd_build,
         "search": cmd_search, "serve": cmd_serve,
         "ingest": cmd_ingest, "prune": cmd_prune,
         "compact": cmd_compact, "repair": cmd_repair,
+        "verify": cmd_verify,
     }[args.cmd](args)
 
 

@@ -318,16 +318,16 @@ def _raw_postings_arrow_factory(
         np.cumsum(lens[:-1], out=doc_off[1:])
         pos_in_doc = np.arange(total, dtype=np.int64) - doc_off[doc_idx]
         # np.lexsort is STABLE and the token stream arrives doc-major
-        # with positions ascending, so sorting by the GROUP keys alone
-        # preserves (doc, pos) order within equal keys — half the sort
-        # keys of the naive (…, doc, pos) sort
+        # with positions ascending, so equal sort keys keep (row, pos)
+        # order — no position key needed
         if partial_salt_threshold is not None:
             # partial path: sort ONCE in the shuffle-final order
             # (slice, term, doc, pos) so _emit_partials needs no second
             # lexsort and per-block payloads are contiguous slices of
-            # the positions buffer; (doc, term) groups stay contiguous
-            # with in-order positions either way
-            order = np.lexsort((codes, slice_sub[doc_idx]))
+            # the positions buffer. The doc_id key is required: doc_id
+            # is a hash or a user key, not row order, and a block's doc
+            # ids must ascend (doc-gap codec, min_doc/max_doc pruning)
+            order = np.lexsort((doc_sub[doc_idx], codes, slice_sub[doc_idx]))
         else:
             order = codes.argsort(kind="stable")
         di_s, co_s, po_s = doc_idx[order], codes[order], pos_in_doc[order]
@@ -909,6 +909,52 @@ def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
     return pack
 
 
+def _verify_blocks_arrow_factory():
+    """mapInArrow fn for :meth:`IndexBuilder.verify`: packed blocks ->
+    one row per posting (gen, term, fld, doc_id) plus two per-block
+    flags carried on the block's first posting: ``bad_order`` (decoded
+    doc ids not strictly ascending) and ``bad_range`` (``min_doc`` /
+    ``max_doc`` not the decoded extremes)."""
+    import pyarrow as pa
+
+    from aspublic_spark.query.engine import _decode_blocks_batch
+
+    def run(batches):
+        for batch in batches:
+            d = _decode_blocks_batch(batch, with_positions=False)
+            if d is None:
+                continue
+            blk, ids = d["blk"], d["doc_id"]
+            starts = np.flatnonzero(np.r_[True, blk[1:] != blk[:-1]])
+            step_ok = np.ones(ids.size, dtype=bool)
+            step_ok[1:] = ids[1:] > ids[:-1]
+            step_ok[starts] = True
+            b = blk[starts]
+            mn = batch.column("min_doc").to_numpy(zero_copy_only=False)[b]
+            mx = batch.column("max_doc").to_numpy(zero_copy_only=False)[b]
+            bad_order = np.zeros(ids.size, dtype=np.int32)
+            bad_order[starts] = ~np.logical_and.reduceat(step_ok, starts)
+            bad_range = np.zeros(ids.size, dtype=np.int32)
+            bad_range[starts] = (np.minimum.reduceat(ids, starts) != mn) | (
+                np.maximum.reduceat(ids, starts) != mx
+            )
+            gen = batch.column("gen").to_numpy(zero_copy_only=False).astype(np.int32)
+            fld = batch.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
+            yield pa.record_batch(
+                [
+                    pa.array(gen[blk], type=pa.int32()),
+                    _one_chunk(batch.column("term")).take(pa.array(blk)),
+                    pa.array(fld[blk], type=pa.int32()),
+                    pa.array(ids, type=pa.int64()),
+                    pa.array(bad_order, type=pa.int32()),
+                    pa.array(bad_range, type=pa.int32()),
+                ],
+                names=["gen", "term", "fld", "doc_id", "bad_order", "bad_range"],
+            )
+
+    return run
+
+
 def _unpack_blocks_to_raw_factory(store_positions: bool, with_gen: bool = True):
     """mapInArrow fn: packed blocks -> shuffle-ready raw postings rows.
 
@@ -1047,8 +1093,8 @@ class IndexBuilder:
         corpus volume (~1M docs per slice, floor 8, cap 4096; bounded
         LIMIT probe so small inputs never pay a count pass). Slices are
         the doc-hash partitions of the index and the ONLY co-location
-        key a phrase match can shuffle packed blocks by (see engine.py
-        _phrase_match_factory), so they cap phrase parallelism AND set
+        key the query evaluator can shuffle packed blocks by (see engine.py
+        _fused_score_factory), so they cap query parallelism AND set
         the per-task decoded-positions memory unit (~24B per
         phrase-term occurrence in a slice; 1M docs x ~20 tokens with a
         20% Zipf head ~= 100MB decoded per task). Sizing is by VOLUME,
@@ -1754,6 +1800,82 @@ class IndexBuilder:
         if touched or self._global_stale():
             self.refresh_global()
         return {"repaired": touched, "gc": gc}
+
+    def verify(self) -> dict:
+        """Check every live generation's packed postings against the
+        on-disk format's invariants; returns violation counts, all 0 on
+        a healthy index:
+
+        - ``blocks_out_of_order``: blocks whose decoded doc ids are not
+          strictly ascending;
+        - ``blocks_bad_range``: blocks whose ``min_doc``/``max_doc``
+          are not the decoded extremes;
+        - ``duplicate_postings``: extra copies of a (doc, term, fld)
+          posting within one generation;
+        - ``groups_bad_block_ids``: (slice, term, fld, salt) groups
+          whose block_ids are not dense 0..k-1.
+
+        Doc-range pruning and the doc-gap codec trust the first two: a
+        violating block can be skipped although it holds a match. An
+        index built by the partial-block path between 4126dc7 and the
+        fix that sorts its postings by doc violates them. ``compact()``
+        repairs such an index, because its raw-row pack sorts every
+        posting by doc — when it merges: with two or more live
+        generations, or with a new ``n_slices`` (a single generation at
+        the same slicing is left as is). Three Spark jobs; the decode
+        touches doc ids only, never positions."""
+        live = self._live_gens()
+        out = {
+            "blocks": 0,
+            "blocks_out_of_order": 0,
+            "blocks_bad_range": 0,
+            "duplicate_postings": 0,
+            "groups_bad_block_ids": 0,
+        }
+        if live:
+            blocks = self.spark.read.option("basePath", self._p("postings")).parquet(
+                *[self._p("postings", f"gen={g}") for g in live]
+            )
+            post = blocks.select(
+                "gen", "term", "fld", "n", "min_doc", "max_doc", "doc_gaps", "tfs", "dls"
+            ).mapInArrow(
+                _verify_blocks_arrow_factory(),
+                "gen int, term string, fld int, doc_id long, bad_order int, bad_range int",
+            )
+            r = (
+                post.groupBy("gen", "term", "fld", "doc_id")
+                .agg(
+                    F.count("*").alias("c"),
+                    F.sum("bad_order").alias("o"),
+                    F.sum("bad_range").alias("r"),
+                )
+                .agg(F.sum(F.col("c") - 1), F.sum("o"), F.sum("r"))
+                .first()
+            )
+            g = (
+                blocks.groupBy("gen", "slice", "term", "fld", "salt")
+                .agg(
+                    F.count("*").alias("k"),
+                    F.countDistinct("block_id").alias("kd"),
+                    F.max("block_id").alias("mx"),
+                )
+                .agg(
+                    F.sum("k"),
+                    F.sum(
+                        ((F.col("kd") != F.col("k")) | (F.col("mx") != F.col("k") - 1)).cast("int")
+                    ),
+                )
+                .first()
+            )
+            out.update(
+                blocks=int(g[0] or 0),
+                blocks_out_of_order=int(r[1] or 0),
+                blocks_bad_range=int(r[2] or 0),
+                duplicate_postings=int(r[0] or 0),
+                groups_bad_block_ids=int(g[1] or 0),
+            )
+        out["ok"] = not any(v for key, v in out.items() if key != "blocks")
+        return out
 
     def _global_stale(self) -> bool:
         """True when the committed global stats lag the live generation

@@ -1,16 +1,17 @@
 """BM25 query engine over the packed inverted index.
 
 Executes the reference's whole search surface (viewer.py
-``/api/unstable/search`` -> db_sqlite.search, db_sqlite.py:62-144) as
-DataFrame plans:
+``/api/unstable/search`` -> db_sqlite.search, db_sqlite.py:62-144).
+Every query — the sqlite-style and websearch surfaces (AND terms,
+phrases, NOT terms and groups, OR groups; Q2-Q5) and the raw-FTS5
+boolean grammar (NEAR, ``^`` anchors, prefixes, per-leaf column
+filters) — becomes one boolean tree over term, phrase and NEAR leaves,
+and ONE evaluator answers it: the query terms' packed blocks are
+repartitioned by doc-hash slice (so every posting of a doc meets in
+one task) and a single mapInArrow pass decodes them, sums BM25 per doc
+and evaluates the tree over per-doc presence and positional masks.
+Around it:
 
-- boolean AND of terms      -> posting intersection (groupBy doc +
-  distinct-term count, Q2)
-- NOT terms                 -> anti-join (Q3)
-- phrase queries            -> position-adjacency join chain over
-  decoded position arrays (Q4) — JVM-side array_contains, no UDF
-- OR groups                 -> union semantics with per-group
-  any-match qualification (Q5, websearch backend)
 - tri-state role/tool, time range, conv_id prefix -> pushed-down
   structured predicates on the docs table (Q6-Q8)
 - index->row join           -> final join of scored doc ids back to
@@ -22,39 +23,42 @@ DataFrame plans:
 - scoring                   -> Okapi BM25 k1=1.2 b=0.75 (Q11), the
   latent capability of the FTS5 index the reference builds
 
-plus block-max pruning (north_rule): packed blocks carry
-(min_doc, max_doc, max_tf, min_dl); the engine reads block
-METADATA first (Parquet column pruning — the varint payloads are not
-touched), computes each block's score upper bound AT QUERY TIME from
-(max_tf, min_dl) under the current per-field avgdl (safe under
-cross-generation avgdl drift — a pack-time bound would go stale),
-establishes a score threshold from a cheap partial pass, and
+plus block-max pruning for flat queries over enough postings: packed
+blocks carry (min_doc, max_doc, max_tf, min_dl); the engine reads
+block METADATA first (Parquet column pruning — the varint payloads
+are not touched), computes each block's score upper bound AT QUERY
+TIME from (max_tf, min_dl) under the current per-field avgdl (safe
+under cross-generation avgdl drift — a pack-time bound would go
+stale), establishes a score threshold from a cheap partial pass, and
 drops blocks that provably cannot contribute a top-k document, plus
-doc-range intersection pruning for AND queries. Both prunes are
-lossless: results are identical to the exhaustive plan (tested).
+doc-range intersection pruning for AND queries. Both prunes return the
+exhaustive plan's results only while every stored block's doc ids
+ascend and its (min_doc, max_doc) are their extremes —
+``IndexBuilder.verify()`` checks that on an existing index, and the
+tests compare pruned with exhaustive top-k on indexes keyed by
+descending and random user keys.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aspublic_spark import BM25_B, BM25_K1
 from aspublic_spark.index import codec
 from aspublic_spark.index.build import (
-    bm25_weight_col,
     dictionary_location,
     live_gen_paths,
     read_stats,
 )
 from aspublic_spark.index.fsio import fs_for
-from aspublic_spark.query.parser import Node, ParsedQuery, parse_query
+from aspublic_spark.query.parser import Node, ParsedQuery, _col_conflicts, parse_query
 
 _UNPACK_SCHEMA = "term string, fld int, doc_id long, tf int, dl int"
 _UNPACK_POS_SCHEMA = _UNPACK_SCHEMA + ", positions array<int>"
@@ -176,105 +180,31 @@ def _unpack_arrow_factory(with_positions: bool):
 
     return unpack
 
-
-def _decode_positions_by_term(batches):
-    """Decode PACKED position blocks into per-term occurrence arrays:
-    term -> (doc_ids, flds, abs_positions), all int64 numpy.
-
-    Fully vectorized: per block, positions decode in one varint pass
-    with record boundaries derived from the tfs column (record k is
-    [n=tf_k, first, deltas...]), absolute positions via grouped cumsum.
-    Shared by the phrase and NEAR matchers."""
-    from collections import defaultdict
-
-    per = defaultdict(lambda: ([], [], []))  # term -> (docs, flds, pos)
-    for pdf in batches:
-        for row in pdf.itertuples(index=False):
-            r = row._asdict()
-            ids = codec.delta_decode_docs(r["doc_gaps"])
-            if ids.size == 0:
-                continue
-            tfs = codec.decode_varints(r["tfs"]).astype(np.int64)
-            flat = codec.decode_varints(r["positions"]).astype(np.int64)
-            # vectorized record split: header positions from tfs
-            lens = tfs + 1
-            hstart = np.zeros(lens.size, dtype=np.int64)
-            np.cumsum(lens[:-1], out=hstart[1:])
-            keep = np.ones(flat.size, dtype=bool)
-            keep[hstart] = False  # drop the n_pos headers
-            vals = flat[keep]
-            c = np.cumsum(vals)
-            vstart = np.zeros(tfs.size, dtype=np.int64)
-            np.cumsum(tfs[:-1], out=vstart[1:])
-            base = np.where(vstart > 0, c[vstart - 1], 0)
-            abs_pos = c - np.repeat(base, tfs)  # grouped cumsum
-            if abs_pos.size and int(abs_pos.max()) >= (1 << 24):
-                raise RuntimeError(
-                    "position exceeds 2^24 (16M tokens in one field "
-                    "of one doc) — positional key packing would overflow"
-                )
-            d, f, p = per[r["term"]]
-            d.append(np.repeat(ids, tfs))
-            f.append(np.full(abs_pos.size, int(r["fld"]), dtype=np.int64))
-            p.append(abs_pos)
-    return {t: tuple(np.concatenate(x) for x in v) for t, v in per.items()}
-
-
-def _near_match_factory(operands: list, n: int):
-    """mapInPandas fn over PACKED blocks of the NEAR group's terms (one
-    partition holds complete doc-hash slices): emit doc_ids where ONE
-    occurrence of each DISTINCT operand PHRASE can be chosen within a
-    single field such that max(start) - min(end) <= n + 1 over the
-    chosen occurrence intervals [start, end] (end = start + len - 1).
+def _near_set_from_cat(cat: dict, uniq: list, span: int) -> np.ndarray:
+    """NEAR evaluation over a per-partition occurrence catalog
+    (term -> (docs, flds, positions)); returns the doc ids where ONE
+    occurrence of each DISTINCT operand phrase in ``uniq`` can be
+    chosen within a single field such that max(start) - min(end) <=
+    ``span`` (= n + 1) over the chosen occurrence intervals [start,
+    end]. An operand is a tuple of slots, a slot a tuple of terms any
+    of which fills it. The partition holds complete doc-hash slices,
+    so the result is exact.
 
     That is FTS5's observable ``NEAR(p1 .. pk, n)`` semantics — pinned
     by randomized live-FTS5 differentials (tests): for single-token
-    operands it reduces to the previously pinned max(pos) - min(pos)
-    <= n + 1 (k-independent, NOT the documented span formula); phrase
-    operands contribute their occurrence INTERVALS; duplicate operands
-    collapse (NEAR(a a, 0) matches a lone 'a'); matching never spans
-    columns; the default n is 10 (parser).
+    operands it reduces to max(pos) - min(pos) <= n + 1 (k-independent,
+    NOT the documented span formula); duplicate operands collapse
+    (NEAR(a a, 0) matches a lone 'a'); matching never spans columns.
 
-    Vectorized: occurrences pack into the same int64 keys as the
-    phrase matcher (doc ordinal << 32 | fld << 24 | pos); a phrase
-    operand's occurrence-START key set is the same offset-corrected
-    np.intersect1d chain the phrase matcher runs. Every operand
-    occurrence's END key is a candidate for min(end) (the chosen
-    minimum end is always one of them); at anchor e, operand i (length
-    L) matches iff it has a start in [e - L + 1, e + n + 1] within the
-    same (doc, fld) group — one searchsorted per operand over the
-    partition's anchors, no per-occurrence Python. The window lower
-    bound clamps to the group base (a phrase near position 0 must not
-    probe into the previous group); overflow past the upper bound into
-    the next field ordinal is impossible: positions cap at 2^24-1 and
-    the explicit group-equality check rejects cross-field hits."""
-    def _norm(op):
-        if isinstance(op, str):
-            return ((op,),)
-        return tuple(
-            (sl,) if isinstance(sl, str) else tuple(sl) for sl in op
-        )
-
-    # operand = tuple of SLOTS, slot = tuple of member terms (a plain
-    # token is a 1-member slot; an expanded prefix marker is the stem's
-    # dictionary expansion — ANY member fills the slot, exactly like
-    # the phrase matcher's list slots)
-    uniq = list(dict.fromkeys(_norm(op) for op in operands))
-    span = int(n) + 1
-
-    def run(batches):
-        cat = _decode_positions_by_term(batches)
-        docs = _near_set_from_cat(cat, uniq, span)
-        yield pd.DataFrame({"doc_id": docs})
-
-    return run
-
-
-def _near_set_from_cat(cat: dict, uniq: list, span: int) -> np.ndarray:
-    """NEAR evaluation over a per-partition occurrence catalog
-    (term -> (docs, flds, positions)); returns the matching doc ids.
-    Shared by the standalone NEAR matcher and the fused scoring pass
-    (both are slice-complete, so the partition-local result is exact)."""
+    Vectorized: occurrences pack into the phrase matcher's int64 keys
+    (doc ordinal << 32 | fld << 24 | pos); a phrase operand's start
+    keys are the same offset-corrected np.intersect1d chain. Every
+    operand occurrence's END key is a candidate for min(end); at anchor
+    e, operand i (length L) matches iff it has a start in
+    [e - L + 1, e + span] within the same (doc, fld) group — one
+    searchsorted per operand. The lower bound clamps to the group base;
+    positions cap at 2^24-1 and the group-equality check rejects
+    cross-field hits."""
     empty = np.empty(0, dtype=np.int64)
     live_ops = []
     for op in uniq:
@@ -330,61 +260,20 @@ def _near_set_from_cat(cat: dict, uniq: list, span: int) -> np.ndarray:
         else empty
     )
 
-
-def _phrase_match_factory(phrase: list[str], anchored: bool = False):
-    """mapInPandas fn over PACKED blocks of the phrase's terms (one
-    partition holds complete doc-hash slices): emit doc_ids where the
-    phrase occurs adjacently within a single field.
-
-    Fully vectorized: per block, positions decode in one varint pass
-    with record boundaries derived from the tfs column (record k is
-    [n=tf_k, first, deltas...]), absolute positions via grouped cumsum;
-    per partition, each term's (doc, fld, pos-offset) triples pack into
-    int64 keys (doc ordinal << 32 | fld << 24 | pos) and the phrase
-    match is a chain of np.intersect1d — no per-posting Python, no
-    decoded-array shuffle. A doc's blocks for ALL terms share its slice
-    (slice = hash(doc_id)), so matches never span partitions and the
-    output needs no distinct.
-
-    Scale note: slice is the ONLY co-location key derivable from block
-    metadata (doc ids are hashes, so block doc-ranges span the whole
-    id space and cannot sub-partition), which makes n_slices the
-    phrase-match parallelism ceiling AND the per-task memory unit
-    (~24B per phrase-term posting occurrence in the slice). Size
-    n_slices at build time so one slice's Zipf-head positions fit an
-    executor: hundreds-to-thousands of slices at 100 TB, not the
-    single-digit defaults used for local tests.
-
-    A slot may be a LIST of terms (FTS5 prefix phrase ``"a b"*``: the
-    last slot is the stem's dictionary expansion) — its occurrence set
-    is the union of its members', so ANY member extends the phrase.
-    Slice co-location still holds per member term, so the partition-
-    local match stays exact."""
-    terms = list(phrase)
-
-    def run(batches):
-        cat = _decode_positions_by_term(batches)
-        docs = _phrase_set_from_cat(cat, terms, anchored)
-        yield pd.DataFrame({"doc_id": docs})
-
-    return run
-
-
-def _phrase_set_from_cat(cat: dict, terms: list, anchored: bool) -> np.ndarray:
+def _phrase_set_from_cat(cat: dict, slots: list, anchored: bool) -> np.ndarray:
     """Phrase/anchor evaluation over a per-partition occurrence catalog
     (term -> (docs, flds, positions)); returns the matching doc ids.
-    Shared by the standalone phrase matcher and the fused scoring pass
-    (both are slice-complete, so the partition-local result is exact)."""
+    Each slot is a tuple of terms, ANY of which fills it (a plain token
+    is a 1-member slot; a prefix marker is the stem's expansion).
+
+    Vectorized: each term's (doc, fld, pos-offset) triples pack into
+    int64 keys (doc ordinal << 32 | fld << 24 | pos) and the phrase
+    match is a chain of np.intersect1d — no per-posting Python. The
+    partition holds complete doc-hash slices, so the result is exact."""
     empty = np.empty(0, dtype=np.int64)
-    # a str slot absent from this partition's slices -> no match
-    # here; a list slot needs at least one member present
     live_slots: list[list[str]] = []
-    for slot in terms:
-        members = [slot] if isinstance(slot, str) else [
-            t for t in slot if t in cat
-        ]
-        if isinstance(slot, str) and slot not in cat:
-            members = []
+    for slot in slots:
+        members = [t for t in slot if t in cat]
         if not members:
             return empty
         live_slots.append(members)
@@ -424,33 +313,49 @@ def _phrase_set_from_cat(cat: dict, terms: list, anchored: bool) -> np.ndarray:
 
 
 def _fused_score_factory(spec: dict):
-    """mapInArrow fn over slice-repartitioned PACKED blocks: unpack,
-    score, qualify and apply every positional/NOT constraint in ONE
-    Python pass, emitting the fully qualified ``(doc_id, score)``
-    candidate set.
+    """mapInArrow fn, the engine's one query evaluator: over the PACKED
+    blocks of a query it unpacks, scores and evaluates the query's
+    boolean tree in ONE Python pass, emitting the matching
+    ``(doc_id, score)`` set.
 
-    Replaces the flat path's unpack stage + JVM groupBy-fold exchange +
-    per-phrase matcher passes + NOT anti-joins with a single stage:
-    because ``slice = hash(doc_id)`` co-locates every term's postings
-    for one doc, the partition-local evaluation is exact — the same
-    invariant the phrase matcher always relied on.
+    The evaluation is partition-local, so it is exact only when every
+    posting of a doc sits in one partition: the caller repartitions by
+    ``slice`` (slice = hash(doc_id) co-locates every term's postings
+    for a doc), or keeps the scan partitions when the query reads a
+    single (term, fld) and no NOT side (each doc has one posting).
 
-    Bit-identity with the JVM plan (north-rule rank identity): the BM25
-    weight is computed with the same elementwise double ops in the same
-    association order as ``bm25_weight_col``; per-doc contributions are
-    summed SEQUENTIALLY in the same canonical (term, fld, w) ascending
-    order as the ``array_sort``+``aggregate`` fold (the j-th item of
-    every doc's sorted run is added in iteration j — never a pairwise
-    numpy reduction, whose different association would drift last
-    ulps); UTF-8 byte order (JVM string compare) equals code-point
-    order (Python compare), so the canonical order itself is identical.
+    Rows carry a ``_neg`` flag: the positive side holds the terms of
+    SCORING leaves (block-max pruning may thin it), the NOT side the
+    terms of leaves under a NOT (never theta-pruned). A term on both
+    sides is read twice, and each leaf reads only its own side.
 
-    ``spec`` is pure picklable data:
-      need_pos, scaled {(term, fld): w}, avgdl {fld: a}, and_terms,
-      or_term_groups, mixed [(terms, [phrase])], phrases, anchors,
-      nears [(normalized ops, span)], not_terms, not_groups,
-      not_phrases.
-    """
+    Documents considered are those with a scoring posting. A doc
+    holding none of the scoring leaves' terms can match only through a
+    leaf under two negations (``!a NOT !b`` is ``b AND NOT a``): when
+    the tree has one (``neg_universe``), NOT-side postings enter the
+    fold too, with weight 0.0 (x + 0.0 == x, so no score changes).
+
+    Scores are bit-identical across any partitioning (north-rule rank
+    identity): the BM25 weight uses the same elementwise double ops in
+    the same association order as ``bm25_weight_col``, and per-doc
+    contributions are summed SEQUENTIALLY in canonical (label, fld, w)
+    ascending order (the j-th item of every doc's sorted run is added
+    in iteration j — never a pairwise numpy reduction, whose different
+    association would drift last ulps). A prefix stem scores as ONE
+    virtual label ``stem*`` per (doc, fld) with tf summed over its
+    expansion terms (FTS5's bm25 counts a prefix as a single phrase; a
+    term shared by two stems counts toward each).
+
+    ``spec`` is pure picklable data: need_pos, neg_universe, scaled
+    {(label, fld): weight * idf}, avgdl {fld: a}, stems
+    {label: (terms, flds)} and the tree. Tree nodes are ``("and",
+    kids)``, ``("or", kids)``, ``("not", (left, right))``, ``("unot",
+    (kid,))`` and three leaves: ``("has", neg, terms, flds)`` — any of
+    the terms in any of the fields; ``("phrase", neg, slots, flds,
+    anchored)``; ``("near", neg, ops, span, flds)`` — one occurrence of
+    each op within one field, max(start) - min(end) <= span. A slot is
+    a tuple of terms any of which fills it, an op a tuple of slots,
+    and ``flds`` None for every field."""
     import pyarrow as pa
 
     k1p1 = BM25_K1 + 1.0
@@ -467,47 +372,85 @@ def _fused_score_factory(spec: dict):
         if d is None:
             return
         blk = d["blk"]
-        tcol = rb.column("term")
-        de = tcol.dictionary_encode()
-        codes_b = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        de = rb.column("term").dictionary_encode()
         tstrings = de.dictionary.to_pylist()
-        fld_b = rb.column("fld").to_numpy(zero_copy_only=False).astype(np.int64)
-        neg_b = rb.column("_neg").to_numpy(zero_copy_only=False).astype(bool)
-        code_p = codes_b[blk]
-        fld_p = fld_b[blk]
-        neg_p = neg_b[blk]
+        code_p = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)[blk]
+        fld_p = rb.column("fld").to_numpy(zero_copy_only=False).astype(np.int64)[blk]
+        neg_p = rb.column("_neg").to_numpy(zero_copy_only=False).astype(bool)[blk]
         doc_p, tf_p, dl_p = d["doc_id"], d["tf"], d["dl"]
         code_of = {t: i for i, t in enumerate(tstrings)}
-        n_codes = len(tstrings)
+        labels = tstrings + list(spec["stems"])
+        label_of = {t: i for i, t in enumerate(labels)}
         n_fld = max(spec["avgdl"]) + 1 if spec["avgdl"] else 1
 
-        # -- scoring rows: positive-polarity postings ------------------
-        scale_lookup = np.full((max(n_codes, 1), n_fld), np.nan)
+        def rows_of(terms, neg: bool, flds) -> np.ndarray:
+            """Posting mask: any of ``terms`` on one side, in ``flds``."""
+            codes = [code_of[t] for t in terms if t in code_of]
+            m = (code_p == codes[0]) if len(codes) == 1 else np.isin(code_p, codes)
+            m &= neg_p == neg
+            if flds is not None:
+                m &= np.isin(fld_p, flds)
+            return m
+
+        # -- scoring rows: scaled postings + virtual stem rows ---------
+        scale_lookup = np.full((len(labels), n_fld), np.nan)
         for (t, f), v in spec["scaled"].items():
-            c = code_of.get(t)
+            c = label_of.get(t)
             if c is not None and f < n_fld:
                 scale_lookup[c, f] = v
         avg_arr = np.ones(n_fld, dtype=np.float64)
         for f, a in spec["avgdl"].items():
             avg_arr[f] = a
-        sel = ~neg_p & ~np.isnan(scale_lookup[code_p, fld_p])
-        doc_s = doc_p[sel]
+        scale_p = scale_lookup[code_p, fld_p]
+        sel = np.flatnonzero(
+            (~neg_p & ~np.isnan(scale_p)) | (neg_p & spec["neg_universe"])
+        )
+        parts = [
+            (
+                doc_p[sel], code_p[sel], fld_p[sel], tf_p[sel], dl_p[sel],
+                np.where(neg_p[sel], 0.0, scale_p[sel]),
+            )
+        ]
+        for label, (terms, flds) in spec["stems"].items():
+            lab = label_of[label]
+            r = np.flatnonzero(
+                rows_of(terms, False, flds) & ~np.isnan(scale_lookup[lab, fld_p])
+            )
+            if r.size == 0:
+                continue
+            r = r[np.lexsort((fld_p[r], doc_p[r]))]
+            rd, rf = doc_p[r], fld_p[r]
+            first = np.flatnonzero(
+                np.r_[True, (rd[1:] != rd[:-1]) | (rf[1:] != rf[:-1])]
+            )
+            parts.append(
+                (
+                    rd[first],
+                    np.full(first.size, lab, dtype=np.int64),
+                    rf[first],
+                    np.add.reduceat(tf_p[r], first),
+                    dl_p[r][first],  # dl is per (doc, fld)
+                    scale_lookup[lab, rf[first]],
+                )
+            )
+        doc_s, lab_s, fld_s, tf_s, dl_s, scale_s = (
+            np.concatenate(c) for c in zip(*parts)
+        )
         if doc_s.size == 0:
             return
-        tfd = tf_p[sel].astype(np.float64)
-        dld = dl_p[sel].astype(np.float64)
-        avg = avg_arr[fld_p[sel]]
-        scale = scale_lookup[code_p[sel], fld_p[sel]]
-        w = scale * (
-            tfd * k1p1 / (tfd + BM25_K1 * (1.0 - BM25_B + BM25_B * dld / avg))
+        tfd = tf_s.astype(np.float64)
+        dld = dl_s.astype(np.float64)
+        w = scale_s * (
+            tfd * k1p1
+            / (tfd + BM25_K1 * (1.0 - BM25_B + BM25_B * dld / avg_arr[fld_s]))
         )
 
         # -- canonical-order sequential fold per doc -------------------
-        term_rank = np.empty(n_codes, dtype=np.int64)
-        term_rank[
-            np.argsort(np.asarray(tstrings, dtype=object))
-        ] = np.arange(n_codes)
-        order = np.lexsort((w, fld_p[sel], term_rank[code_p[sel]], doc_s))
+        # UTF-8 byte order (JVM string compare) equals code-point order
+        # (Python compare), so the canonical order matches the JVM's
+        lab_rank = np.empty(len(labels), dtype=np.int64)
+        lab_rank[np.argsort(np.asarray(labels, dtype=object))] = np.arange(len(labels))
+        order = np.lexsort((w, fld_s, lab_rank[lab_s], doc_s))
         ds, ws = doc_s[order], w[order]
         gstart = np.empty(ds.size, dtype=bool)
         gstart[0] = True
@@ -521,149 +464,101 @@ def _fused_score_factory(spec: dict):
             m = idx_in_g == j
             score[gid[m]] = score[gid[m]] + ws[m]
 
-        # -- presence masks over docs_u --------------------------------
-        # Scoring (positive, scaled) rows already sit in the fold's doc
-        # groups, so their presence is a vectorized compare + scatter
-        # through ``gid`` — no per-term binary search (searchsorted over
-        # ~docs_u-sized term lists was HALF the evaluator on heavy AND
-        # queries). The remaining rows (NOT side, and any positive row
-        # without a scale entry) are located in docs_u with ONE shared
-        # searchsorted, then every term's mask is a compare + scatter
-        # over that precomputed position map. Bit-identical masks to
-        # the per-term search (same membership test, same docs_u).
-        code_sorted = code_p[sel][order]
-        rest_idx = np.flatnonzero(~sel)
-        if rest_idx.size:
-            rest_doc = doc_p[rest_idx]
-            rest_pos = np.searchsorted(docs_u, rest_doc)
-            rest_hit = rest_pos < docs_u.size
-            rest_pos_c = np.where(rest_hit, rest_pos, 0)
-            rest_hit &= docs_u[rest_pos_c] == rest_doc
-            rest_code = code_p[rest_idx]
-            rest_neg = neg_p[rest_idx]
-        else:
-            rest_pos_c = rest_hit = rest_code = rest_neg = None
+        # -- each posting's doc ordinal in docs_u (-1: not a candidate) --
+        # Scaled postings already sit in the fold's doc groups, so their
+        # ordinal is a scatter through ``gid`` — no per-term binary
+        # search (searchsorted over ~docs_u-sized term lists was HALF
+        # the evaluator on heavy AND queries). Every other posting is
+        # located with ONE shared searchsorted.
+        row_u = np.full(doc_p.size, -1, dtype=np.int64)
+        g_of = np.empty(order.size, dtype=np.int64)
+        g_of[order] = gid
+        row_u[sel] = g_of[: sel.size]
+        rest = np.flatnonzero(row_u < 0)
+        if rest.size:
+            ii = np.minimum(np.searchsorted(docs_u, doc_p[rest]), docs_u.size - 1)
+            hit = docs_u[ii] == doc_p[rest]
+            row_u[rest[hit]] = ii[hit]
 
-        def present_mask(term: str, negside: bool) -> np.ndarray:
-            m = np.zeros(docs_u.size, dtype=bool)
-            c = code_of.get(term)
-            if c is None:
-                return m
-            if not negside:
-                m[gid[code_sorted == c]] = True
-            if rest_hit is not None:
-                r = (rest_code == c) & (rest_neg == negside) & rest_hit
-                m[rest_pos_c[r]] = True
-            return m
+        def mask_rows(m: np.ndarray) -> np.ndarray:
+            out = np.zeros(docs_u.size, dtype=bool)
+            r = row_u[m]
+            out[r[r >= 0]] = True
+            return out
 
-        def mask_from_docs(docs_arr: np.ndarray) -> np.ndarray:
-            m = np.zeros(docs_u.size, dtype=bool)
+        def mask_docs(docs_arr: np.ndarray) -> np.ndarray:
+            out = np.zeros(docs_u.size, dtype=bool)
             if docs_arr.size:
-                ii = np.searchsorted(docs_u, docs_arr)
-                inb = ii < docs_u.size
-                ii, da = ii[inb], docs_arr[inb]
-                hit = docs_u[ii] == da
-                m[ii[hit]] = True
-            return m
+                ii = np.minimum(np.searchsorted(docs_u, docs_arr), docs_u.size - 1)
+                out[ii[docs_u[ii] == docs_arr]] = True
+            return out
 
-        ok = np.ones(docs_u.size, dtype=bool)
-        for t in spec["and_terms"]:
-            ok &= present_mask(t, False)
-        for g in spec["or_term_groups"]:
-            gm = np.zeros(docs_u.size, dtype=bool)
-            for t in g:
-                gm |= present_mask(t, False)
-            ok &= gm
-
-        # -- positional constraints ------------------------------------
+        # -- positional catalogs ---------------------------------------
         if spec["need_pos"]:
             pos_flat = d["pos"]
             pstart = np.zeros(tf_p.size, dtype=np.int64)
             np.cumsum(tf_p[:-1], out=pstart[1:])
 
-            def build_cat(terms_needed, negside: bool) -> dict:
-                cat = {}
-                for t in terms_needed:
-                    c = code_of.get(t)
-                    if c is None:
-                        continue
-                    ridx = np.flatnonzero((code_p == c) & (neg_p == negside))
-                    if ridx.size == 0:
-                        continue
-                    tf_r = tf_p[ridx]
-                    tot = int(tf_r.sum())
-                    excl = np.zeros(ridx.size, dtype=np.int64)
-                    np.cumsum(tf_r[:-1], out=excl[1:])
-                    gather = (
-                        np.repeat(pstart[ridx], tf_r)
-                        + np.arange(tot, dtype=np.int64)
-                        - np.repeat(excl, tf_r)
+        def leaf_cat(neg: bool, terms, flds) -> dict:
+            """term -> (docs, flds, positions) per occurrence."""
+            cat = {}
+            for t in terms:
+                ridx = np.flatnonzero(rows_of((t,), neg, flds))
+                if ridx.size == 0:
+                    continue
+                tf_r = tf_p[ridx]
+                tot = int(tf_r.sum())
+                excl = np.zeros(ridx.size, dtype=np.int64)
+                np.cumsum(tf_r[:-1], out=excl[1:])
+                gather = (
+                    np.repeat(pstart[ridx], tf_r)
+                    + np.arange(tot, dtype=np.int64)
+                    - np.repeat(excl, tf_r)
+                )
+                pos_occ = pos_flat[gather]
+                if pos_occ.size and int(pos_occ.max()) >= (1 << 24):
+                    raise RuntimeError(
+                        "position exceeds 2^24 (16M tokens in one "
+                        "field of one doc) — positional key packing "
+                        "would overflow"
                     )
-                    pos_occ = pos_flat[gather]
-                    if pos_occ.size and int(pos_occ.max()) >= (1 << 24):
-                        raise RuntimeError(
-                            "position exceeds 2^24 (16M tokens in one "
-                            "field of one doc) — positional key packing "
-                            "would overflow"
-                        )
-                    cat[t] = (
-                        np.repeat(doc_p[ridx], tf_r),
-                        np.repeat(fld_p[ridx], tf_r),
-                        pos_occ,
-                    )
-                return cat
+                cat[t] = (
+                    np.repeat(doc_p[ridx], tf_r),
+                    np.repeat(fld_p[ridx], tf_r),
+                    pos_occ,
+                )
+            return cat
 
-            def _flat_terms(slots):
-                return {
-                    t
-                    for sl in slots
-                    for t in ([sl] if isinstance(sl, str) else sl)
-                }
+        # -- the tree: leaf masks memoized, so a leaf repeated across
+        # the tree is evaluated once -----------------------------------
+        memo: dict = {}
 
-            pos_terms = set()
-            for ph in spec["phrases"] + spec["anchors"]:
-                pos_terms |= _flat_terms(ph)
-            for ops, _sp in spec["nears"]:
-                for op in ops:
-                    pos_terms |= _flat_terms(op)
-            for _tg, pgs in spec["mixed"]:
-                for ph in pgs:
-                    pos_terms |= _flat_terms(ph)
-            pos_cat = build_cat(sorted(pos_terms), False) if pos_terms else {}
-            for ph in spec["phrases"]:
-                ok &= mask_from_docs(_phrase_set_from_cat(pos_cat, list(ph), False))
-            for ph in spec["anchors"]:
-                ok &= mask_from_docs(_phrase_set_from_cat(pos_cat, list(ph), True))
-            for ops, sp in spec["nears"]:
-                ok &= mask_from_docs(_near_set_from_cat(pos_cat, ops, sp))
-            for tg, pgs in spec["mixed"]:
-                gm = np.zeros(docs_u.size, dtype=bool)
-                for t in tg:
-                    gm |= present_mask(t, False)
-                for ph in pgs:
-                    gm |= mask_from_docs(
-                        _phrase_set_from_cat(pos_cat, list(ph), False)
-                    )
-                ok &= gm
-            if spec["not_phrases"]:
-                neg_terms = set()
-                for ph in spec["not_phrases"]:
-                    neg_terms |= _flat_terms(ph)
-                neg_cat = build_cat(sorted(neg_terms), True)
-                for ph in spec["not_phrases"]:
-                    ok &= ~mask_from_docs(
-                        _phrase_set_from_cat(neg_cat, list(ph), False)
-                    )
+        def ev(node) -> np.ndarray:
+            kind = node[0]
+            if kind in ("and", "or"):
+                m = np.full(docs_u.size, kind == "and")
+                for c in node[1]:
+                    m = (m & ev(c)) if kind == "and" else (m | ev(c))
+                return m
+            if kind == "not":
+                return ev(node[1][0]) & ~ev(node[1][1])
+            if kind == "unot":
+                return ~ev(node[1][0])
+            if node not in memo:
+                if kind == "has":
+                    memo[node] = mask_rows(rows_of(node[2], node[1], node[3]))
+                elif kind == "phrase":
+                    _k, neg, slots, flds, anchored = node
+                    cat = leaf_cat(neg, sorted({t for sl in slots for t in sl}), flds)
+                    memo[node] = mask_docs(_phrase_set_from_cat(cat, slots, anchored))
+                else:  # near
+                    _k, neg, ops, span, flds = node
+                    terms = sorted({t for op in ops for sl in op for t in sl})
+                    cat = leaf_cat(neg, terms, flds)
+                    memo[node] = mask_docs(_near_set_from_cat(cat, list(ops), span))
+            return memo[node]
 
-        # -- NOT exclusions --------------------------------------------
-        for t in spec["not_terms"]:
-            ok &= ~present_mask(t, True)
-        for g in spec["not_groups"]:
-            gm = np.ones(docs_u.size, dtype=bool)
-            for t in g:
-                gm &= present_mask(t, True)
-            ok &= ~gm
-
+        ok = ev(spec["tree"])
         out_d = docs_u[ok]
         if out_d.size:
             yield pa.record_batch(
@@ -677,7 +572,7 @@ def _fused_score_factory(spec: dict):
     return run
 
 
-# -- raw-FTS5 boolean tree helpers (generic evaluation path) ------------
+# -- query tree helpers ------------------------------------------------
 def _tree_walk_leaves(node: Node, specs: tuple, scoring: bool, out: list):
     """Collect (leaf, colspec chain, scoring?) triples. A leaf under a
     NOT right operand (or our hybrid ``!``) never scores — matching the
@@ -785,8 +680,8 @@ def _leaf_stems(leaf: Node) -> tuple:
 
 
 def _tree_positional_key(leaf: Node):
-    """Identity of a positional leaf (shared flag column per distinct
-    phrase/NEAR/anchor/prefix-phrase across the tree)."""
+    """Identity of a positional leaf (phrase/NEAR/anchor/prefix-phrase);
+    None for leaves that need no positions."""
     if leaf.kind == "phrase" and len(leaf.toks) > 1:
         return ("phrase", leaf.toks)
     if leaf.kind == "near":
@@ -796,6 +691,52 @@ def _tree_positional_key(leaf: Node):
     if leaf.kind == "prefix_phrase":
         return ("pp", leaf.toks, leaf.stem)
     return None
+
+
+
+def _flat_tree(pq: ParsedQuery) -> Node:
+    """The flat ParsedQuery fields as the equivalent boolean tree: every
+    positive constraint ANDed, the NOT side ORed under one binary NOT
+    (single NOT terms and NOT prefixes exclude on any match, a
+    conjunctive NOT group only when all its terms occur, a NOT phrase
+    on adjacency)."""
+    def term(t: str) -> Node:
+        return Node("term", toks=(t,))
+
+    def phrase(ph) -> Node:
+        return Node("phrase", toks=tuple(ph))
+
+    pos = (
+        [term(t) for t in pq.and_terms]
+        + [phrase(ph) for ph in pq.phrases]
+        + [
+            Node("near", toks=tuple((t,) for t in dict.fromkeys(tg)), n=n)
+            for tg, n in pq.nears
+        ]
+        + [Node("anchor", toks=tuple(ph)) for ph in pq.anchors]
+        + [
+            Node("col", kids=(phrase(toks),), spec=(tuple(names), exclude))
+            for names, exclude, toks in pq.col_filters
+            if toks
+        ]
+        + [Node("prefix", stem=s) for s in pq.prefixes]
+        + [
+            Node("prefix_phrase", toks=tuple(lead), stem=s)
+            for lead, s in pq.prefix_phrases
+        ]
+        + [
+            Node("or", kids=tuple([term(t) for t in tg] + [phrase(ph) for ph in pg]))
+            for tg, pg in pq.or_operands()
+        ]
+    )
+    neg = (
+        [term(t) for t in pq.not_terms]
+        + [Node("and", kids=tuple(term(t) for t in g)) for g in pq.not_groups]
+        + [phrase(ph) for ph in pq.not_phrases]
+        + [Node("prefix", stem=s) for s in pq.not_prefixes]
+    )
+    root = Node("and", kids=tuple(pos))
+    return Node("not", kids=(root, Node("or", kids=tuple(neg)))) if neg else root
 
 
 @dataclass
@@ -896,10 +837,6 @@ class SearchEngine:
         # fall back to the shuffle join)
         self.broadcast_cand_max_postings = 1_000_000
         self._cache = cache_tables
-        # internal escape hatch for A/B-testing the fused slice-local
-        # candidate path against the staged plan (results are identical;
-        # tests assert bit-equality through both)
-        self._fused = True
         self._docs_df = None
         self._dict_df = None
         self._blocks_df = None
@@ -1124,110 +1061,6 @@ class SearchEngine:
             d = d.filter(extra_filter)  # arbitrary predicate on docs meta
         return d
 
-    # -- phrase evaluation (Q4) ----------------------------------------
-    def _phrase_docs(self, phrase: list[str], blocks: DataFrame) -> DataFrame:
-        """Docs where the phrase occurs adjacently within a SINGLE field
-        (FTS5 phrases never span columns).
-
-        Evaluated over the PACKED blocks: the phrase terms' blocks are
-        shuffled by ``slice`` (the doc-hash partition of the index, so
-        every term's postings for one doc land in the same task) still
-        varint-COMPRESSED — the heaviest column in the index never
-        crosses an exchange decoded — and one mapInPandas decodes +
-        intersects positions entirely in vectorized numpy. This
-        replaced a per-(doc,fld) DataFrame self-join of decoded
-        array<int> position columns (Arrow list transfer + join shuffle
-        of the arrays dominated q_phrase, ~2.6x q_and at sf0.1).
-
-        A slot may be a LIST of terms (prefix phrase ``"a b"*``: the
-        stem's expansion) — any member extends the phrase."""
-        flat = sorted(
-            {t for s in phrase for t in ([s] if isinstance(s, str) else s)}
-        )
-        pb = blocks.filter(F.col("term").isin(flat)).select(
-            "slice", "term", "fld", "doc_gaps", "tfs", "positions"
-        )
-        return pb.repartition("slice").mapInPandas(
-            _phrase_match_factory(list(phrase)), "doc_id long"
-        )
-
-    def _anchor_docs(self, phrase: list, blocks: DataFrame) -> DataFrame:
-        """Docs matching FTS5's ``^``-anchor (``^term`` / ``^"a b"``):
-        the term/phrase occurs at the very START of a column (live
-        probe: position 0 of ANY indexed field qualifies). Same packed-
-        block plan as a phrase; the matcher just keeps windows whose
-        first-token position is 0. A slot may be a LIST of terms (an
-        expanded prefix marker — ``^tw*`` is probed valid FTS5)."""
-        flat = sorted(
-            {t for sl in phrase for t in ([sl] if isinstance(sl, str) else sl)}
-        )
-        pb = blocks.filter(F.col("term").isin(flat)).select(
-            "slice", "term", "fld", "doc_gaps", "tfs", "positions"
-        )
-        return pb.repartition("slice").mapInPandas(
-            _phrase_match_factory(list(phrase), anchored=True), "doc_id long"
-        )
-
-    def _resolve_col_filters(self, pq: ParsedQuery):
-        """Resolve column filters (``col:``, ``{a b}:``, ``-col:``,
-        ``-{a b}:``) to allowed field-ordinal SETS.
-
-        Returns (col_single: term -> fld set, col_phrases: [(tokens,
-        fld set)], fld_of: term -> fld set for EVERY restricted term).
-        Raises FTS5's "no such column" for unknown names, and a clear
-        error for the shapes our per-(term, field) scoring model
-        cannot express (one term both restricted and unrestricted, or
-        restricted by two DIFFERENT filters — FTS5 treats those as
-        independent phrases; we refuse rather than silently misscore).
-        An exclusion covering every indexed column yields an empty set,
-        which the caller resolves to an empty result (probed: FTS5
-        matches nothing there)."""
-        if not pq.col_filters:
-            return {}, [], {}
-        col_map = {c.lower(): i for i, c in enumerate(self.text_cols)}
-        col_single: dict[str, frozenset[int]] = {}
-        col_phrases: list[tuple[list[str], frozenset[int]]] = []
-        fld_of: dict[str, frozenset[int]] = {}
-        for cnames, exclude, toks in pq.col_filters:
-            listed = set()
-            for cname in cnames:
-                f = col_map.get(cname.lower())
-                if f is None:
-                    raise ValueError(f"no such column: {cname}")
-                listed.add(f)
-            fset = (
-                frozenset(range(self.n_fields)) - listed
-                if exclude
-                else frozenset(listed)
-            )
-            for t in toks:
-                if t in fld_of and fld_of[t] != fset:
-                    raise ValueError(
-                        f"term '{t}' is column-filtered by two different "
-                        "filters — unsupported"
-                    )
-                fld_of[t] = fset
-            if len(toks) == 1:
-                col_single[toks[0]] = fset
-            elif toks:
-                col_phrases.append((toks, fset))
-        unrestricted = (
-            set(pq.and_terms)
-            | {t for ph in pq.phrases for t in ph}
-            | {t for tg, _n in pq.nears for t in tg}
-            | {t for ph in pq.anchors for t in ph}
-            | {t for lead, _s in pq.prefix_phrases for t in lead}
-            | {t for g in pq.or_groups for t in g}
-            | {t for g in pq.or_phrase_groups for ph in g for t in ph}
-        )
-        both = sorted(set(fld_of) & unrestricted)
-        if both:
-            raise ValueError(
-                f"terms {both} appear both column-filtered and "
-                "unfiltered in one query — unsupported"
-            )
-        return col_single, col_phrases, fld_of
-
     def expand_prefix(self, stems: list[str]) -> dict[str, dict[str, dict[int, dict]]]:
         """Expand FTS5 prefix stems against the dictionary: stem ->
         {term: {fld: dictionary row}}.
@@ -1287,28 +1120,6 @@ class SearchEngine:
                 self._prefix_cache[s] = exp
         return {s: self._prefix_cache[s] for s in stems}
 
-    def _near_docs(self, operands: list, n: int, blocks: DataFrame) -> DataFrame:
-        """Docs matching FTS5 ``NEAR(p1 .. pk, n)``: one occurrence per
-        distinct operand phrase within a single field, max(start) -
-        min(end) <= n+1 over the chosen occurrence intervals (pinned by
-        randomized live-FTS5 differentials — see _near_match_factory).
-        Operands may be bare terms or token tuples (phrase operands).
-        Same plan shape as a phrase: the terms' PACKED blocks shuffle by
-        slice still compressed, one mapInPandas does the vectorized
-        window test."""
-        ops = [
-            ((op,),) if isinstance(op, str)
-            else tuple((sl,) if isinstance(sl, str) else tuple(sl) for sl in op)
-            for op in operands
-        ]
-        flat = sorted({t for op in ops for sl in op for t in sl})
-        nb = blocks.filter(F.col("term").isin(flat)).select(
-            "slice", "term", "fld", "doc_gaps", "tfs", "positions"
-        )
-        return nb.repartition("slice").mapInPandas(
-            _near_match_factory(ops, n), "doc_id long"
-        )
-
     def _coarse_intervals(self, rare: DataFrame, nbuck: int) -> DataFrame:
         """Coarsen a term's (min_doc, max_doc) block intervals to at most
         ``nbuck`` covering intervals, fully distributed: bucket by the
@@ -1345,7 +1156,7 @@ class SearchEngine:
         docs_filtered: DataFrame,
         has_doc_filters: bool,
         stats: dict[str, dict[int, dict]],
-        fused_probe=None,
+        not_terms: list[str],
     ):
         info = {"theta": 0.0, "range_pruned": False, "theta_pruned": False}
         # per-block score upper bound (safe under avgdl drift); avgdl is
@@ -1467,27 +1278,14 @@ class SearchEngine:
                 .filter(F.col("_rn") <= max(1, math.ceil(2 * k / self.block_size)))
                 .drop("_rn")
             )
-            if fused_probe is not None:
-                # one mapInArrow pass scores + qualifies + NOT-excludes
-                # the probe blocks (same machinery as the main fused
-                # candidate path — one exchange fewer than the staged
-                # unpack -> groupBy-fold -> anti-join probe, and the
-                # plan shape is shared with the main query). The
-                # candidate set is identical to the staged probe's, so
-                # theta is the same valid lower bound.
-                qual1 = fused_probe(top_blocks, not_blocks)
-            else:
-                phase1 = self.unpack(top_blocks)
-                scored1 = self._score(phase1, scaled_map)
-                # phrase alternatives dropped from OR groups:
-                # conservative subset -> theta stays a valid lower
-                # bound (see _qualify)
-                qual1 = self._qualify(
-                    scored1, pq.and_terms, [tg for tg, _ in pq.or_operands()]
-                )
-                if not_blocks is not None:
-                    nd = self.unpack(not_blocks).select("doc_id").distinct()
-                    qual1 = qual1.join(nd, "doc_id", "left_anti")
+            qual1 = self._probe_candidates(
+                top_blocks,
+                not_blocks,
+                scaled_map,
+                list(pq.and_terms),
+                [tg for tg, _pg in pq.or_operands()],
+                not_terms,
+            )
             if has_doc_filters:
                 qual1 = qual1.join(docs_filtered.select("doc_id"), "doc_id", "left_semi")
             top = qual1.orderBy(F.col("score").desc()).limit(k).collect()
@@ -1513,92 +1311,6 @@ class SearchEngine:
                 info["theta_pruned"] = True
         return pos_blocks.drop("_ub"), not_blocks, info
 
-    # -- scoring + qualification ----------------------------------------
-    def _score(
-        self,
-        unpacked: DataFrame,
-        scaled_map: dict[tuple[str, int], float],
-        with_keys: bool = False,
-    ) -> DataFrame:
-        """Per-doc BM25 summed over (term, field) contributions; the
-        map value for (t, f) is field_weight_f * idf(t, f), so the total
-        is sum_f w_f * BM25_f — FTS5's multi-column bm25(fts, w1, w2).
-
-        Contributions are summed in CANONICAL (term, fld) ORDER
-        (array_sort before the fold), not with F.sum: float addition is
-        non-associative and a plain sum's order depends on partitioning,
-        which would make scores — and tie-breaks near the k-th rank —
-        run-dependent. This way scores are bit-identical across any
-        partitioning/cluster size (north_rule rank-identity)."""
-        scaled_expr = F.create_map(
-            *[
-                x
-                for (t, f), v in scaled_map.items()
-                for x in (F.lit(_tf_key(t, f)), F.lit(v))
-            ]
-        )
-        avgdl_expr = F.create_map(
-            *[
-                x
-                for f, a in self.avgdl_by_fld.items()
-                for x in (F.lit(f), F.lit(a))
-            ]
-        )
-        w = scaled_expr[_tf_key_col()] * bm25_weight_col(
-            F.col("tf"), F.col("dl"), avgdl_expr[F.col("fld")]
-        )
-        cols = [
-            "doc_id",
-            F.aggregate(
-                "_tw", F.lit(0.0), lambda acc, x: acc + x["_w"]
-            ).alias("score"),
-            F.transform("_tw", lambda x: x["term"]).alias("_terms"),
-        ]
-        if with_keys:
-            # per-(term, field) presence keys — the boolean-tree path
-            # qualifies column-restricted leaves against these (a bare
-            # term array cannot distinguish WHICH field matched)
-            cols.append(
-                F.transform(
-                    "_tw",
-                    lambda x: F.concat_ws(
-                        "\x00", x["term"], x["fld"].cast("string")
-                    ),
-                ).alias("_tkeys")
-            )
-        return (
-            unpacked.withColumn("_w", w)
-            .groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct("term", "fld", "_w"))).alias("_tw"))
-            .select(*cols)
-        )
-
-    def _qualify(
-        self,
-        scored: DataFrame,
-        and_terms: list[str],
-        or_term_groups: list[list[str]],
-    ) -> DataFrame:
-        """Term-level qualification: every AND term present, and at least
-        one alternative of each group in ``or_term_groups``. Groups with
-        phrase alternatives are applied by the caller (they need the
-        positional phrase-doc sets); passing only their term
-        alternatives here yields a conservative SUBSET — which is
-        exactly what the theta-probe phase needs for a safe bound."""
-        out = scored
-        need = sorted(set(and_terms))
-        if need:
-            cond = F.lit(True)
-            for t in need:
-                cond = cond & F.array_contains("_terms", t)
-            out = out.filter(cond)
-        for g in or_term_groups:
-            gcond = F.lit(False)
-            for t in sorted(set(g)):
-                gcond = gcond | F.array_contains("_terms", t)
-            out = out.filter(gcond)
-        return out
-
     def _probe_candidates(
         self,
         top_blocks: DataFrame,
@@ -1608,92 +1320,96 @@ class SearchEngine:
         or_term_groups: list[list[str]],
         not_any_terms: list[str],
     ) -> DataFrame:
-        """Theta-probe candidates via the fused one-pass scorer:
+        """Theta-probe candidates through the query evaluator:
         positionless, term-level qualification only, NOT side excluded
-        on ANY match — exactly the staged probe's conservative
-        candidate set (phrase alternatives dropped from OR groups,
-        conjunctive NOT groups treated as any-match), so the k-th
-        score is the same valid theta lower bound."""
+        on ANY match. Phrase alternatives are dropped from OR groups
+        and conjunctive NOT groups exclude on any term, so the set is a
+        SUBSET of the true results and its k-th score a valid theta
+        lower bound."""
+        def has(terms, neg=False):
+            return ("has", neg, tuple(sorted(set(terms))), None)
+
+        tree = (
+            "and",
+            tuple(has([t]) for t in sorted(set(and_terms)))
+            + tuple(("or", tuple(has([t]) for t in sorted(set(g)))) for g in or_term_groups),
+        )
+        if not_any_terms:
+            tree = ("not", (tree, has(not_any_terms, True)))
         spec = {
             "need_pos": False,
+            "neg_universe": False,
             "scaled": dict(scaled_map),
             "avgdl": dict(self.avgdl_by_fld),
-            "and_terms": sorted(set(and_terms)),
-            "or_term_groups": [sorted(set(g)) for g in or_term_groups],
-            "mixed": [],
-            "phrases": [],
-            "anchors": [],
-            "nears": [],
-            "not_terms": sorted(set(not_any_terms)),
-            "not_groups": [],
-            "not_phrases": [],
+            "stems": {},
+            "tree": tree,
         }
-        sel = ["slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"]
-        src = top_blocks.select(*sel).withColumn("_neg", F.lit(False))
-        if not_blocks is not None:
-            src = src.unionByName(
-                not_blocks.select(*sel).withColumn("_neg", F.lit(True))
-            )
-        return src.repartition(max(1, self.n_slices), "slice").mapInArrow(
-            _fused_score_factory(spec), "doc_id long, score double"
-        )
+        return self._evaluate(top_blocks, not_blocks, spec)
 
-    def _fused_candidates(
+    def _evaluate(
         self,
-        pq: ParsedQuery,
         pos_blocks: DataFrame,
-        not_blocks: DataFrame | None,
-        scaled_map: dict,
-        or_ops: list,
-        live_groups: list,
-        live_nphrases: list,
-        not_single: list,
+        neg_blocks: DataFrame | None,
+        spec: dict,
+        exchange: bool = True,
     ) -> DataFrame:
-        """One-pass candidate evaluation over slice-complete partitions
-        of the packed blocks (see :func:`_fused_score_factory`). The
-        positive and NOT sides ride the same scan/shuffle, tagged with
-        a ``_neg`` flag; the positions column is read only when a
-        positional constraint exists. Partition count = n_slices (the
-        index's phrase-parallelism ceiling — scale-adaptive: slices
-        auto-size with corpus volume at build time)."""
-        mixed = [(sorted(set(tg)), pg) for tg, pg in or_ops if pg]
-        need_pos = bool(
-            pq.phrases or pq.anchors or pq.nears or live_nphrases or mixed
+        """Run the query evaluator (:func:`_fused_score_factory`) over
+        the packed blocks. The positive and NOT sides ride the same
+        scan, tagged with ``_neg``; the positions column is read only
+        when a positional leaf exists. The exchange co-locates each
+        doc's postings in ``n_slices`` partitions (slices auto-size
+        with corpus volume at build time)."""
+        cols = ["slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
+            ["positions"] if spec["need_pos"] else []
         )
-
-        def _norm_near(op):
-            if isinstance(op, str):
-                return ((op,),)
-            return tuple((sl,) if isinstance(sl, str) else tuple(sl) for sl in op)
-
-        spec = {
-            "need_pos": need_pos,
-            "scaled": dict(scaled_map),
-            "avgdl": dict(self.avgdl_by_fld),
-            "and_terms": sorted(set(pq.and_terms)),
-            "or_term_groups": [sorted(set(tg)) for tg, pg in or_ops if not pg],
-            "mixed": mixed,
-            "phrases": [list(ph) for ph in pq.phrases],
-            "anchors": [list(ph) for ph in pq.anchors],
-            "nears": [
-                (list(dict.fromkeys(_norm_near(op) for op in tg)), int(nn) + 1)
-                for tg, nn in pq.nears
+        src = reduce(
+            DataFrame.unionByName,
+            [
+                b.select(*cols).withColumn("_neg", F.lit(neg))
+                for b, neg in ((pos_blocks, False), (neg_blocks, True))
+                if b is not None
             ],
-            "not_terms": list(not_single),
-            "not_groups": [sorted(set(g)) for g in live_groups],
-            "not_phrases": [list(ph) for ph in live_nphrases],
+        )
+        if exchange:
+            src = src.repartition(max(1, self.n_slices), "slice")
+        return src.mapInArrow(_fused_score_factory(spec), "doc_id long, score double")
+
+    def _annotate(self, node: Node, fs: frozenset) -> Node:
+        """Dissolve ``col`` wrappers, intersecting nested specs (probed
+        FTS5 behavior), and stamp each LEAF's resolved field set onto
+        its free ``spec`` slot. Raises FTS5's "no such column" for an
+        unknown name."""
+        if node.kind == "col":
+            names, exclude = node.spec
+            col_map = {c.lower(): i for i, c in enumerate(self.text_cols)}
+            listed = set()
+            for nm in names:
+                f = col_map.get(nm.lower())
+                if f is None:
+                    raise ValueError(f"no such column: {nm}")
+                listed.add(f)
+            sub = frozenset(range(self.n_fields)) - listed if exclude else frozenset(listed)
+            return self._annotate(node.kids[0], fs & sub)
+        if node.kids:
+            return replace(node, kids=tuple(self._annotate(c, fs) for c in node.kids))
+        if node.kind in ("true", "false"):
+            return node
+        return replace(node, spec=tuple(sorted(fs)))
+
+    def _stem_dfs(self, stems: dict) -> dict:
+        """Exact per-field df of each virtual ``stem*`` label (distinct
+        docs holding any of its expansion terms): ONE job over the
+        expansions' blocks, unpruned, bounded by the capped expansion."""
+        parts = [
+            self.unpack(self.blocks(terms).filter(F.col("fld").isin(flds)))
+            .select(F.lit(label).alias("label"), "fld", "doc_id")
+            for label, (terms, flds) in stems.items()
+        ]
+        u = reduce(DataFrame.unionByName, parts)
+        return {
+            (r["label"], int(r["fld"])): int(r["count"])
+            for r in u.distinct().groupBy("label", "fld").count().collect()
         }
-        sel = ["slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
-            ["positions"] if need_pos else []
-        )
-        src = pos_blocks.select(*sel).withColumn("_neg", F.lit(False))
-        if not_blocks is not None:
-            src = src.unionByName(
-                not_blocks.select(*sel).withColumn("_neg", F.lit(True))
-            )
-        return src.repartition(max(1, self.n_slices), "slice").mapInArrow(
-            _fused_score_factory(spec), "doc_id long, score double"
-        )
 
     # -- main entry -------------------------------------------------------
     def search(
@@ -1718,7 +1434,18 @@ class SearchEngine:
         ``field_weights``: per-indexed-column BM25 weights, the analog
         of FTS5's ``bm25(fts, w1, w2, ...)`` (reference indexes text +
         subject, db_sqlite.py:27). Defaults to 1.0 per field (FTS5
-        default); total score = sum_f w_f * BM25_f."""
+        default); total score = sum_f w_f * BM25_f.
+
+        Every query — flat or a raw-FTS5 tree — is evaluated as a
+        boolean tree by ONE mapInArrow pass (:func:`_fused_score_factory`).
+        Column filters are PER-LEAF (FTS5 treats ``text:a OR
+        subject:a`` as two independent phrases of the same term); one
+        documented scoring deviation: a term restricted differently in
+        two scoring leaves scores each (term, field) contribution ONCE
+        (FTS5's bm25 would count a field hit once per covering phrase).
+        Non-scoring leaves — NOT right operands and hybrid ``!`` — never
+        add to the score. Block-max pruning runs for flat queries only:
+        theta is unsound under OR/NOT tree structure."""
         self._maybe_auto_refresh()
         k = max(1, min(int(k), 100))  # reference clamp, viewer.py:123
         pq = parser(q, tok=self._tok) if isinstance(q, str) else (q or ParsedQuery())
@@ -1733,11 +1460,6 @@ class SearchEngine:
             if order == "bm25"
             else [F.col("ts").desc()] + [F.col(c).asc() for c in self.key_cols]
         )
-
-        if pq.tree is not None:
-            # raw-FTS5 boolean structure the flat model can't express:
-            # generic expression-tree evaluation
-            return self._search_tree(pq, k, docs_f, key_meta, order_cols, field_weights)
 
         if pq.is_empty():
             # pure structured query (reference requires q, but recency
@@ -1756,580 +1478,17 @@ class SearchEngine:
             )
             return SearchResult(out, pq, {})
 
-        pos_terms = pq.positive_terms
-        # ONE dictionary lookup job for the whole query: positive terms
-        # + NOT-group/NOT-phrase terms together (both term_stats calls
-        # below hit the per-term cache)
-        ng_all = (
-            {t for g in pq.not_groups for t in g}
-            | {t for ph in pq.not_phrases for t in ph}
-            | set(pq.not_terms)
-        )
-        self.term_stats(list(dict.fromkeys(pos_terms)) + sorted(ng_all))
-        stats = self.term_stats(pos_terms)
-        col_single, col_phrases, fld_of = self._resolve_col_filters(pq)
-        # prefix stems (FTS5 `ab*`) expand against the dictionary: ONE
-        # job for all uncached stems; each positive stem becomes a
-        # VIRTUAL scoring term (tf summed over matching tokens, df =
-        # distinct matching docs — FTS5's bm25 counts a prefix as a
-        # single phrase, pinned by probe)
-        pos_stems = list(
-            dict.fromkeys(pq.prefixes + [s for _l, s in pq.prefix_phrases])
-        )
-        all_stems = sorted(set(pos_stems) | set(pq.not_prefixes))
-        pfx_exp = self.expand_prefix(all_stems) if all_stems else {}
-        # an AND/phrase/NEAR/anchor/col-filter term absent -> empty
-        required = (
-            set(pq.and_terms)
-            | {t for ph in pq.phrases for t in ph}
-            | {t for tg, _n in pq.nears for t in tg}
-            | {t for ph in pq.anchors for t in ph}
-            | {t for lead, _s in pq.prefix_phrases for t in lead}
-            | set(fld_of)
-        )
-        if (
-            any(t not in stats for t in required)
-            or not (any(t in stats for t in pos_terms) or pos_stems)
-            # a positive stem with an empty expansion -> empty (FTS5:
-            # `zz*` with no matching token matches nothing)
-            or any(not pfx_exp.get(s) for s in pos_stems)
-            # a col-restricted term absent from every ALLOWED column ->
-            # empty (this also covers an exclusion spanning all fields)
-            or any(
-                not (set(stats.get(t, {})) & fs) for t, fs in fld_of.items()
-            )
-        ):
-            empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
-                "doc_id", *key_meta, "score"
-            )
-            return SearchResult(empty, pq, {"empty": True})
-        # OR groups where no alternative exists -> unsatisfiable (a
-        # phrase alternative is live only if ALL its terms exist)
-        or_ops = [
-            (
-                [t for t in tg if t in stats],
-                [ph for ph in pg if all(t in stats for t in ph)],
-            )
-            for tg, pg in pq.or_operands()
-        ]
-        if any(not tg and not pg for tg, pg in or_ops):
-            empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
-                "doc_id", *key_meta, "score"
-            )
-            return SearchResult(empty, pq, {"empty": True})
-
-        live_terms = [t for t in pos_terms if t in stats]
-        fw = list(field_weights) if field_weights is not None else []
-        fw += [1.0] * (self.n_fields - len(fw))
-        # (term, fld) -> field_weight * idf(term in that field); df is
-        # per-field, like per-column FTS5 statistics
-        scaled_map = {
-            (t, f): fw[f] * self.idf(s["df"])
-            for t in live_terms
-            for f, s in stats[t].items()
-            # a col-restricted term scores ONLY its allowed columns
-            # (FTS5: col:t matches — and bm25 counts — those hits)
-            if t not in fld_of or f in fld_of[t]
-        }
-        pos_blocks = self.blocks(live_terms)
-        if fld_of:
-            # drop the restricted terms' other-field blocks at the scan
-            # (fld rides the block metadata, so this is a pushed filter,
-            # and the phrase/NEAR matchers downstream see only the
-            # restricted column's positions)
-            cond = None
-            for t, fs in fld_of.items():
-                c = (F.col("term") == F.lit(t)) & ~F.col("fld").isin(sorted(fs))
-                cond = c if cond is None else (cond | c)
-            pos_blocks = pos_blocks.filter(~cond)
-        # positive-prefix branch: each stem scores as ONE virtual term
-        # ("stem*" — NUL-free and star-free real terms can't collide).
-        # The expansion's packed blocks unpack positionless (same pushed
-        # In-filter scan as regular terms) and aggregate per (doc, fld):
-        # tf sums across matching tokens — one small extra shuffle,
-        # bounded by the expansion's postings. The virtual df (distinct
-        # matching docs per field, exact) needs one extra JOB over that
-        # branch — paid only when a stem expands to >=2 terms (a
-        # single-term stem's df is its dictionary df, free). In-field
-        # tf sums stay int32-safe: positions cap at 2^24 per field.
-        pfx_labels = [s + "*" for s in pos_stems]
-        pfx_branch = None
-        if pos_stems:
-            all_exp = sorted({t for s in pos_stems for t in pfx_exp[s]})
-            unp_pfx = self.unpack(self.blocks(all_exp))
-            parts = []
-            for s in pos_stems:
-                parts.append(
-                    unp_pfx.filter(F.col("term").isin(sorted(pfx_exp[s])))
-                    .groupBy("doc_id", "fld")
-                    .agg(
-                        F.sum("tf").cast("int").alias("tf"),
-                        F.max("dl").alias("dl"),
-                    )
-                    .select(
-                        F.lit(s + "*").alias("term"), "fld", "doc_id", "tf", "dl"
-                    )
-                )
-            pfx_branch = parts[0]
-            for p in parts[1:]:
-                pfx_branch = pfx_branch.unionByName(p)
-            if any(len(pfx_exp[s]) > 1 for s in pos_stems):
-                # the virtual-df count job below and the main collect
-                # both consume this branch; a lazy localCheckpoint
-                # materializes it ONCE (at the count job) instead of
-                # re-running the expansion scan + aggregation in the
-                # main query — the branch is bounded by the (capped)
-                # expansion's postings, so holding it is safe
-                pfx_branch = pfx_branch.localCheckpoint(eager=False)
-                dfrows = pfx_branch.groupBy("term", "fld").count().collect()
-                for r in dfrows:
-                    scaled_map[(r["term"], int(r["fld"]))] = fw[
-                        int(r["fld"])
-                    ] * self.idf(int(r["count"]))
-            else:
-                for s in pos_stems:
-                    for m in pfx_exp[s].values():
-                        for f, row in m.items():
-                            scaled_map[(s + "*", f)] = fw[f] * self.idf(row["df"])
-        # NOT side: single terms exclude on any match; conjunctive NOT
-        # groups (sqlite `!"a b"` -> NOT (a AND b)) exclude only docs
-        # containing ALL group terms; negated phrases (websearch
-        # `-"a b"`) exclude on adjacent occurrence. Groups/phrases with
-        # a term absent from the corpus can never match — dropped.
-        ns_stats = self.term_stats(sorted(set(pq.not_terms)))
-        # a single NOT term absent from the corpus excludes nothing —
-        # dropping it here skips its whole anti-join stage
-        not_single = sorted(t for t in set(pq.not_terms) if t in ns_stats)
-        ng_terms = {t for g in pq.not_groups for t in g} | {
-            t for ph in pq.not_phrases for t in ph
-        }
-        ng_stats = self.term_stats(sorted(ng_terms)) if ng_terms else {}
-        live_groups = [g for g in pq.not_groups if all(t in ng_stats for t in g)]
-        live_nphrases = [ph for ph in pq.not_phrases if all(t in ng_stats for t in ph)]
-        # NOT prefixes reduce exactly to single NOT terms: exclude on
-        # ANY expansion-term match (their dictionary rows came back
-        # with the expansion, so no extra stats job)
-        npfx_terms = sorted(
-            {t for s in pq.not_prefixes for t in pfx_exp.get(s, {})}
-        )
-        not_all_terms = sorted(
-            set(not_single)
-            | set(npfx_terms)
-            | {t for g in live_groups for t in g}
-            | {t for ph in live_nphrases for t in ph}
-        )
-        not_blocks = self.blocks(not_all_terms) if not_all_terms else None
-
-        info: dict = {}
-        total_df = sum(s["df"] for t in live_terms for s in stats[t].values())
-        # the expansions' volume counts toward the broadcast/prune
-        # decisions (terms shared by overlapping stems count once per
-        # stem — a safe overestimate)
-        total_df += sum(
-            s2["df"]
-            for s in pos_stems
-            for m in pfx_exp[s].values()
-            for s2 in m.values()
-        )
-        # pruning pays for its extra jobs only when there is real volume
-        # to skip; below the threshold the exhaustive plan is faster
-        if block_max and order == "bm25" and total_df >= self.prune_min_postings:
-            pq_pr = pq
-            if pq.col_filters:
-                # the pruner sees col-restricted singles as AND terms
-                # (their scoring rows are already field-restricted, so
-                # term-level qualification is exact) and col phrases as
-                # phrases (adjacency -> theta must stay off)
-                from dataclasses import replace as _dc_replace
-
-                pq_pr = _dc_replace(
-                    pq,
-                    and_terms=list(pq.and_terms) + sorted(col_single),
-                    phrases=list(pq.phrases) + [ph for ph, _f in col_phrases],
-                )
-            fused_probe = None
-            if self._fused and not pos_stems and not pq.prefix_phrases and not pq.not_prefixes:
-                _pq_pr = pq_pr
-
-                def fused_probe(tb, nb):
-                    return self._probe_candidates(
-                        tb,
-                        nb,
-                        scaled_map,
-                        list(_pq_pr.and_terms),
-                        [tg for tg, _pg in _pq_pr.or_operands()],
-                        not_all_terms,
-                    )
-
-            pos_blocks, not_blocks, info = self._prune_blocks(
-                pos_blocks, not_blocks, pq_pr, scaled_map, k, docs_f,
-                has_doc_filters, stats, fused_probe=fused_probe,
-            )
-
-        mixed_groups = [(tg, pg) for tg, pg in or_ops if pg]
-        # positions are required only for phrase work that can actually
-        # run: LIVE alternatives/NOT-phrases (a dead phrase — one whose
-        # terms are absent from the corpus — never evaluates positions,
-        # so a positionless index answers the rest of the query fine)
-        if (
-            pq.phrases
-            or mixed_groups
-            or live_nphrases
-            or pq.nears
-            or pq.anchors
-            or col_phrases
-            or pq.prefix_phrases  # standalone prefixes never need positions
-        ) and not self.store_positions:
-            raise ValueError(
-                "phrase queries need positions, but this index was built "
-                "with store_positions=False"
-            )
-        # Scoring NEVER needs positions: unpack positionless (the varint
-        # positions payload — the largest column in the index — is
-        # column-pruned away at the parquet scan and never decoded).
-        # Positions are decoded separately below, only for blocks of
-        # terms that actually appear in a phrase.
-        single_path = (
-            len(scaled_map) == 1
-            and not pq.phrases
-            and not pq.nears
-            and not pq.anchors
-            and not col_phrases  # col-restricted SINGLES still qualify
-            and not pq.prefixes
-            and not pq.prefix_phrases
-            and not or_ops
-            and len(set(pq.and_terms)) <= 1
-        )
-        # A small single-term query coalesces the block scan to a few
-        # splits: each unpack task is a Python worker round-trip, and
-        # ~30 near-empty tasks cost more scheduling than the decode.
-        # Multi-term queries keep full scan parallelism — their _score
-        # groupBy wants parallel map-side partials (coalescing them
-        # measured ~0.2 s SLOWER at sf0.1) — and Zipf-head queries keep
-        # it for the decode itself.
-        fused_ok = (
-            self._fused
-            and not single_path
-            and not pos_stems
-            and not pq.prefix_phrases
-            and not pq.not_prefixes
-            and not pq.col_filters
-        )
-        if fused_ok:
-            # Fused slice-local path: unpack + canonical-order scoring +
-            # qualification + phrase/NEAR/anchor windows + NOT
-            # exclusions in ONE mapInArrow pass over slice-complete
-            # partitions of the packed blocks (_fused_score_factory —
-            # bit-identical to the staged plan by construction: slice =
-            # hash(doc_id) co-locates every term's postings for a doc,
-            # the invariant the phrase matcher always relied on). The
-            # staged plan below remains for prefix-expansion branches
-            # and column filters (which need cross-slice jobs or
-            # per-field scan restrictions) and for the single-term
-            # fast path.
-            cand = self._fused_candidates(
-                pq, pos_blocks, not_blocks, scaled_map, or_ops,
-                live_groups, live_nphrases, not_single,
-            )
-            not_blocks = None  # exclusions already applied in the pass
-        else:
-            unpack_src = pos_blocks
-            if single_path and total_df <= self.broadcast_cand_max_postings:
-                # A small single-term query coalesces the block scan to
-                # a few splits: each unpack task is a Python worker
-                # round-trip, and ~30 near-empty tasks cost more
-                # scheduling than the decode.
-                unpack_src = pos_blocks.coalesce(4)
-            unpacked = self.unpack(unpack_src)
-            if pfx_branch is not None:
-                # the virtual prefix rows score through the same fold as
-                # real (term, field) postings — their scaled_map entries
-                # were added above
-                unpacked = unpacked.unionByName(pfx_branch)
-            if single_path:
-                # single (term, field): each doc appears exactly once in the
-                # unpacked postings, so the groupBy-and-fold of _score is a
-                # pure pass-through — score directly, one less exchange.
-                # Bit-identical to the fold (0.0 + w == w in IEEE754) and
-                # qualification is trivially satisfied.
-                ((_t, f), v) = next(iter(scaled_map.items()))
-                cand = unpacked.select(
-                    "doc_id",
-                    (
-                        F.lit(v)
-                        * bm25_weight_col(
-                            F.col("tf"), F.col("dl"), self.avgdl_by_fld.get(f, 1.0)
-                        )
-                    ).alias("score"),
-                )
-            else:
-                scored = self._score(unpacked, scaled_map)
-                # pure-term OR groups qualify here; groups with live phrase
-                # alternatives need the positional phrase-doc sets below
-                cand = self._qualify(
-                    # col-restricted singles qualify as AND terms: their
-                    # scoring rows are already field-restricted, so term
-                    # presence here IS presence in the required column.
-                    # Standalone-prefix labels qualify exactly too: the
-                    # virtual row exists iff some expansion term matched
-                    # (prefix-PHRASE stems qualify via their adjacency
-                    # semi-join below instead)
-                    scored,
-                    list(pq.and_terms)
-                    + sorted(col_single)
-                    + [s + "*" for s in pq.prefixes],
-                    [tg for tg, pg in or_ops if not pg],
-                )
-
-            for ph in pq.phrases:
-                # same estimation hole as the NOT side: the phrase-doc set
-                # comes out of mapInPandas, so broadcast it when the
-                # dictionary bounds it small (adjacent docs <= min term df)
-                phd = self._phrase_docs(ph, pos_blocks)
-                bound = min(
-                    sum(s["df"] for s in stats[t].values()) for t in set(ph)
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    phd = F.broadcast(phd)
-                cand = cand.join(phd, "doc_id", "left_semi")
-            for tg, nn in pq.nears:
-                # NEAR doc sets share the phrase path's estimation hole
-                # (mapInPandas output): broadcast under the dictionary
-                # bound (near docs <= min term df)
-                nd = self._near_docs(tg, nn, pos_blocks)
-                bound = min(sum(s["df"] for s in stats[t].values()) for t in set(tg))
-                if bound <= self.broadcast_cand_max_postings:
-                    nd = F.broadcast(nd)
-                cand = cand.join(nd, "doc_id", "left_semi")
-            for ph in pq.anchors:
-                # ^-anchored term/phrase: same bound, same semi-join shape
-                ad = self._anchor_docs(ph, pos_blocks)
-                bound = min(sum(s["df"] for s in stats[t].values()) for t in set(ph))
-                if bound <= self.broadcast_cand_max_postings:
-                    ad = F.broadcast(ad)
-                cand = cand.join(ad, "doc_id", "left_semi")
-            for ph, f in col_phrases:
-                # col-restricted phrase: pos_blocks already dropped these
-                # terms' other-field blocks, so the phrase matcher only
-                # sees — and can only match within — the required column
-                phd = self._phrase_docs(ph, pos_blocks)
-                bound = min(
-                    sum(s2["df"] for f2, s2 in stats[t].items() if f2 in f)
-                    for t in set(ph)
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    phd = F.broadcast(phd)
-                cand = cand.join(phd, "doc_id", "left_semi")
-            for lead, stem in pq.prefix_phrases:
-                # FTS5 `"a b"*`: leading tokens adjacent, then ANY stem
-                # expansion term — the matcher's last slot is the term SET.
-                # Fresh blocks (not pos_blocks): the expansion terms were
-                # never in the scoring scan, and a range-pruned lead block
-                # set would under-match
-                exp_terms = sorted(pfx_exp[stem])
-                ppd = self._phrase_docs(
-                    list(lead) + [exp_terms],
-                    self.blocks(sorted(set(lead) | set(exp_terms))),
-                )
-                bound = min(
-                    min(sum(s2["df"] for s2 in stats[t].values()) for t in set(lead)),
-                    sum(
-                        s2["df"]
-                        for m in pfx_exp[stem].values()
-                        for s2 in m.values()
-                    ),
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    ppd = F.broadcast(ppd)
-                cand = cand.join(ppd, "doc_id", "left_semi")
-            for tg, pg in mixed_groups:
-                # satisfied by any term alternative OR any adjacent phrase
-                # alternative (websearch `"a b" OR c` keeps adjacency)
-                tcond = F.lit(False)
-                for t in sorted(set(tg)):
-                    tcond = tcond | F.array_contains("_terms", t)
-                phd = self._phrase_docs(pg[0], pos_blocks)
-                for ph in pg[1:]:
-                    phd = phd.unionByName(self._phrase_docs(ph, pos_blocks))
-                phd = phd.distinct().withColumn("_pm", F.lit(1))
-                cand = (
-                    cand.join(phd, "doc_id", "left")
-                    .filter(tcond | F.col("_pm").isNotNull())
-                    .drop("_pm")
-                )
-            cand = cand.drop("_terms")
-
-        if not_blocks is not None:
-            unp_not = self.unpack(not_blocks)
-
-            # the dictionary bounds each excluded-doc set driver-side
-            # (sum of per-field df for single terms; min df over a
-            # conjunctive group/phrase — docs holding ALL terms can't
-            # outnumber the rarest). Small NOT sides broadcast into the
-            # anti-join (BroadcastHashJoin LeftAnti): the candidate side
-            # is never shuffled just to subtract a handful of doc_ids.
-            # mapInPandas output defeats size ESTIMATION, so without the
-            # hint these anti-joins sort-merge.
-            def _bcast_if_small(nd, df_bound: int):
-                return (
-                    F.broadcast(nd)
-                    if df_bound <= self.broadcast_cand_max_postings
-                    else nd
-                )
-
-            def _total_df(t, st):
-                return sum(s["df"] for s in st.get(t, {}).values())
-
-            if not_single or npfx_terms:
-                nsingle = sorted(set(not_single) | set(npfx_terms))
-                nd = unp_not.filter(F.col("term").isin(nsingle)).select("doc_id")
-                # NOT-prefix bound from the expansion rows (a term in
-                # two stems counts twice — safe overestimate)
-                bound = sum(_total_df(t, ns_stats) for t in not_single) + sum(
-                    s2["df"]
-                    for s in pq.not_prefixes
-                    for m in pfx_exp.get(s, {}).values()
-                    for s2 in m.values()
-                )
-                if bound <= self.broadcast_cand_max_postings:
-                    # no distinct: a broadcast hash anti-join is a set
-                    # probe, duplicate build keys are harmless — the
-                    # distinct's full shuffle is pure overhead here
-                    nd = F.broadcast(nd)
-                else:
-                    # shuffle path: distinct's map-side partial agg
-                    # shrinks the exchange (df docs -> unique docs)
-                    nd = nd.distinct()
-                cand = cand.join(nd, "doc_id", "left_anti")
-            for g in live_groups:
-                gset = sorted(set(g))
-                gd = (
-                    unp_not.filter(F.col("term").isin(gset))
-                    .groupBy("doc_id")
-                    .agg(F.countDistinct("term").alias("_n"))
-                    .filter(F.col("_n") == len(gset))
-                    .select("doc_id")
-                )
-                bound = min(_total_df(t, ng_stats) for t in gset)
-                cand = cand.join(_bcast_if_small(gd, bound), "doc_id", "left_anti")
-            for ph in live_nphrases:
-                phd = self._phrase_docs(ph, not_blocks)
-                bound = min(_total_df(t, ng_stats) for t in set(ph))
-                cand = cand.join(_bcast_if_small(phd, bound), "doc_id", "left_anti")
-
-        # the index->row join (Q9): when the dictionary says the whole
-        # candidate side is small (total df across the query's terms —
-        # known driver-side, no extra job), broadcast it so the join
-        # probes the docs table instead of sort-merging it. Zipf-head
-        # queries exceed the bound and keep the shuffle join (AQE picks
-        # the strategy from runtime sizes there).
-        cand_out = cand
-        if total_df <= self.broadcast_cand_max_postings:
-            cand_out = F.broadcast(cand)
-        out = (
-            cand_out.join(docs_f.select("doc_id", *key_meta), "doc_id")
-            .select("doc_id", *key_meta, "score")
-            .orderBy(*order_cols)
-            .limit(k)
-        )
-        return SearchResult(out, pq, info)
-
-    # -- generic boolean-tree evaluation (raw-FTS5 surface) --------------
-    def _search_tree(
-        self,
-        pq: ParsedQuery,
-        k: int,
-        docs_f: DataFrame,
-        key_meta: list[str],
-        order_cols: list,
-        field_weights: list[float] | None,
-    ) -> SearchResult:
-        """Evaluate a raw-FTS5 boolean expression tree that the flat
-        ParsedQuery model can't express (``a OR (b NOT c)``,
-        ``NEAR(a b) OR c``, ``text:(x OR y)``, ``col:NEAR(...)``,
-        ``col:a*``, ...).
-
-        Plan shape: ONE positionless unpack over every leaf term's
-        blocks (whatever its polarity — a doc can satisfy the tree
-        through negations, so the candidate universe is docs holding
-        ANY leaf term; docs holding none evaluate like the empty
-        document, which was proven non-matching below), the same
-        canonical-order score fold as the flat path (non-scoring
-        leaves — NOT right operands and hybrid ``!`` — carry weight
-        0.0: they flag presence without perturbing the sum, and
-        x + 0.0 == x in IEEE754 so scores stay bit-identical to the
-        flat plan on flat-equivalent trees), one flag column per
-        DISTINCT positional leaf (phrase/NEAR/anchor/prefix-phrase
-        doc sets LEFT-joined, broadcast under the dictionary bound),
-        and the tree compiled to a single Catalyst boolean over the
-        ``_terms`` array + flags. Block-max pruning stays off: theta
-        is unsound under OR/NOT structure and these queries are the
-        rare tail — the exhaustive plan is the correct default.
-
-        Column filters are PER-LEAF (FTS5 treats ``text:a OR
-        subject:a`` as two independent phrases of the same term):
-        an annotate pass resolves each leaf's colspec chain to a field
-        set carried on the leaf, the block scan reads the UNION of a
-        term's allowed fields (pushed filter), qualification tests
-        per-(term, field) presence keys (``_tkeys``), and each
-        positional matcher sees only its own leaf's fields. One
-        documented scoring deviation: a term restricted differently in
-        two scoring leaves scores each (term, field) contribution
-        ONCE (FTS5's bm25 would count a field hit once per covering
-        phrase); match sets are exact either way (differentials)."""
+        info: dict = {} if pq.tree is None else {"tree": True}
         full = frozenset(range(self.n_fields))
-        col_map = {c.lower(): i for i, c in enumerate(self.text_cols)}
-
-        def spec_fset(spec: tuple) -> frozenset:
-            names, exclude = spec
-            listed = set()
-            for nm in names:
-                f = col_map.get(nm.lower())
-                if f is None:
-                    raise ValueError(f"no such column: {nm}")
-                listed.add(f)
-            return frozenset((set(full) - listed) if exclude else listed)
-
-        def annotate(node: Node, fs: frozenset) -> Node:
-            """Dissolve ``col`` wrappers, intersecting nested specs
-            (probed FTS5 behavior), and stamp each LEAF's resolved
-            field set onto its free ``spec`` slot."""
-            if node.kind == "col":
-                return annotate(node.kids[0], fs & spec_fset(node.spec))
-            if node.kids:
-                return Node(
-                    node.kind,
-                    kids=tuple(annotate(c, fs) for c in node.kids),
-                    toks=node.toks,
-                    n=node.n,
-                    stem=node.stem,
-                )
-            if node.kind in ("true", "false"):
-                return node
-            return Node(
-                node.kind,
-                toks=node.toks,
-                n=node.n,
-                stem=node.stem,
-                spec=tuple(sorted(fs)),
-            )
-
-        tree = annotate(pq.tree, full)
-        raw_leaves: list = []
-        _tree_walk_leaves(tree, (), True, raw_leaves)
-        all_terms = sorted(
-            {t for lf, _s, _c in raw_leaves for t in _leaf_terms(lf)}
-        )
-        all_stems = sorted(
-            {st for lf, _s, _c in raw_leaves for st in _leaf_stems(lf)}
-        )
-
+        tree = self._annotate(pq.tree if pq.tree is not None else _flat_tree(pq), full)
+        leaves: list = []
+        _tree_walk_leaves(tree, (), True, leaves)
         # ONE dictionary job for all terms, one for all stems
-        stats = self.term_stats(all_terms)
-        pfx_exp = self.expand_prefix(all_stems) if all_stems else {}
-
-        def live_flds(t: str, fs) -> set:
-            return set(stats.get(t, {})) & set(fs)
+        stats = self.term_stats(
+            sorted({t for lf, _s, _c in leaves for t in _leaf_terms(lf)})
+        )
+        stems = sorted({st for lf, _s, _c in leaves for st in _leaf_stems(lf)})
+        pfx_exp = self.expand_prefix(stems) if stems else {}
 
         def stem_live(s: str, fs) -> dict:
             """stem's expansion restricted to the given fields:
@@ -2342,13 +1501,14 @@ class SearchEngine:
             return out
 
         def dead_leaf(leaf: Node) -> bool:
+            # a term absent from every allowed field, or a stem whose
+            # expansion is empty there (FTS5: `zz*` matches nothing)
             fs = set(leaf.spec)
             return any(
-                not live_flds(t, fs) for t in _leaf_terms(leaf)
+                not set(stats.get(t, {})) & fs for t in _leaf_terms(leaf)
             ) or any(not stem_live(st, fs) for st in _leaf_stems(leaf))
 
         tree = _tree_simplify(tree, dead_leaf)
-        info: dict = {"tree": True}
         if tree.kind == "false":
             empty = docs_f.limit(0).withColumn("score", F.lit(0.0)).select(
                 "doc_id", *key_meta, "score"
@@ -2361,274 +1521,184 @@ class SearchEngine:
                 "index (FTS5 refuses `NOT a` the same way)"
             )
 
-        # SURVIVING leaves only: the scan reads the UNION of each
-        # term's allowed fields across its live leaves; scoring fields
-        # are the union over live SCORING leaves (a folded-away scoring
-        # leaf must not grant weight to a term that only survives
-        # NOT-side — the flat path's NOT terms never score either).
-        # Positional flags key on (shape, field set): the same phrase
-        # under two different column filters is two distinct FTS5
-        # phrases with two distinct doc sets.
-        leaves: list = []
+        # SURVIVING leaves only. reads[neg]: term -> fields that side
+        # scans (the union over its leaves; each leaf narrows to its own
+        # fields inside the evaluator). A folded-away scoring leaf must
+        # not grant weight to a term that only survives NOT-side.
+        leaves = []
         _tree_walk_leaves(tree, (), True, leaves)
-        used_terms: set[str] = set()
-        used_stems: set[str] = set()
-        scan_fld: dict[str, set] = {}
-        score_fld: dict[str, set] = {}
-        scan_stem: dict[str, set] = {}
-        score_stem: dict[str, set] = {}
-        pos_leaves: dict[tuple, Node] = {}
-        for leaf, _specs, sc in leaves:
-            key = _tree_positional_key(leaf)
-            if key is not None:
-                pos_leaves.setdefault(key + (leaf.spec,), leaf)
+        reads: tuple[dict, dict] = ({}, {})
+        score_flds: dict[str, set] = {}
+        score_stems: dict[str, tuple[set, set]] = {}
+        rows = {t: m for exp in pfx_exp.values() for t, m in exp.items()}
+        rows.update(stats)
+        need_pos = False
+        for leaf, _specs, scoring in leaves:
             fs = set(leaf.spec)
+            side = reads[not scoring]
+            need_pos |= _tree_positional_key(leaf) is not None
             for t in _leaf_terms(leaf):
-                used_terms.add(t)
-                scan_fld.setdefault(t, set()).update(fs)
-                if sc:
-                    score_fld.setdefault(t, set()).update(fs)
+                side.setdefault(t, set()).update(fs)
+                if scoring:
+                    score_flds.setdefault(t, set()).update(fs)
             for st in _leaf_stems(leaf):
-                used_stems.add(st)
-                scan_stem.setdefault(st, set()).update(fs)
-                if sc:
-                    score_stem.setdefault(st, set()).update(fs)
-
-        if pos_leaves and not self.store_positions:
+                exp = stem_live(st, fs)
+                for t in exp:
+                    side.setdefault(t, set()).update(fs)
+                if scoring:
+                    terms, flds = score_stems.setdefault(st + "*", (set(), set()))
+                    terms.update(exp)
+                    flds.update(fs)
+        if need_pos and not self.store_positions:
             raise ValueError(
                 "phrase queries need positions, but this index was built "
                 "with store_positions=False"
             )
 
-        live_terms = sorted(
-            t for t in used_terms if live_flds(t, scan_fld[t])
-        )
-        live_stems = sorted(
-            s for s in used_stems if stem_live(s, scan_stem[s])
-        )
         fw = list(field_weights) if field_weights is not None else []
         fw += [1.0] * (self.n_fields - len(fw))
-        # weight 0.0 for (term, field) pairs scanned only for NOT-side
-        # presence: the fold keeps them out of the sum but their keys
-        # still land in _tkeys for qualification
+        # (label, fld) -> field_weight * idf(label in that field); df is
+        # per-field, like per-column FTS5 statistics
         scaled_map = {
-            (t, f): (
-                fw[f] * self.idf(stats[t][f]["df"])
-                if f in score_fld.get(t, ())
-                else 0.0
-            )
-            for t in live_terms
-            for f in sorted(live_flds(t, scan_fld[t]))
+            (t, f): fw[f] * self.idf(s["df"])
+            for t, fs in score_flds.items()
+            for f, s in stats[t].items()
+            if f in fs
         }
-
-        pos_blocks = self.blocks(live_terms)
-        restricted = {
-            t: fs for t in live_terms if (fs := scan_fld[t]) != full
+        stems_spec = {
+            label: (sorted(terms), sorted(flds))
+            for label, (terms, flds) in score_stems.items()
         }
-        if restricted:
-            # drop fields no leaf allows at the scan (fld rides the
-            # block metadata — a pushed filter); per-LEAF narrowing
-            # happens again at each positional matcher's source
-            cond = None
-            for t, fs in restricted.items():
-                c = (F.col("term") == F.lit(t)) & ~F.col("fld").isin(sorted(fs))
-                cond = c if cond is None else (cond | c)
-            pos_blocks = pos_blocks.filter(~cond)
-
-        unpacked = self.unpack(pos_blocks)
-
-        # virtual prefix branch, exactly the flat path's: per stem one
-        # "stem*" row per (doc, fld) with tf summed over the expansion
-        def _stem_df_total(s: str, fs) -> int:
-            return sum(
-                r["df"]
-                for m in stem_live(s, fs).values()
-                for r in m.values()
-            )
-
-        if live_stems:
-            all_exp = sorted(
-                {t for s in live_stems for t in stem_live(s, scan_stem[s])}
-            )
-            exp_blocks = self.blocks(all_exp)
-            parts = []
-            for s in live_stems:
-                src = exp_blocks.filter(
-                    F.col("term").isin(sorted(stem_live(s, scan_stem[s])))
-                )
-                if scan_stem[s] != full:
-                    src = src.filter(F.col("fld").isin(sorted(scan_stem[s])))
-                parts.append(
-                    self.unpack(src)
-                    .groupBy("doc_id", "fld")
-                    .agg(
-                        F.sum("tf").cast("int").alias("tf"),
-                        F.max("dl").alias("dl"),
-                    )
-                    .select(
-                        F.lit(s + "*").alias("term"), "fld", "doc_id", "tf", "dl"
-                    )
-                )
-            branch = parts[0]
-            for p in parts[1:]:
-                branch = branch.unionByName(p)
-
-            def _stem_w(s: str, f: int, df: int) -> float:
-                return (
-                    fw[f] * self.idf(df)
-                    if f in score_stem.get(s, ())
-                    else 0.0
-                )
-
-            # virtual per-field df: exact (one job) when any stem has a
-            # multi-term expansion, free from the dictionary otherwise
-            if any(
-                len(stem_live(s, scan_stem[s])) > 1 for s in live_stems
-            ):
-                for r in branch.groupBy("term", "fld").count().collect():
-                    scaled_map[(r["term"], int(r["fld"]))] = _stem_w(
-                        r["term"][:-1], int(r["fld"]), int(r["count"])
-                    )
+        if stems_spec:
+            # a one-term expansion's df is its dictionary df (free); a
+            # wider one costs one count job
+            if any(len(terms) > 1 for terms, _f in stems_spec.values()):
+                dfs = self._stem_dfs(stems_spec)
             else:
-                for s in live_stems:
-                    for m in stem_live(s, scan_stem[s]).values():
-                        for f, row in m.items():
-                            scaled_map[(s + "*", f)] = _stem_w(s, f, row["df"])
-            unpacked = unpacked.unionByName(branch)
+                dfs = {
+                    (label, f): r["df"]
+                    for label, (terms, flds) in stems_spec.items()
+                    for t in terms
+                    for f, r in rows[t].items()
+                    if f in flds
+                }
+            for (label, f), n in dfs.items():
+                scaled_map[(label, f)] = fw[f] * self.idf(n)
 
-        cand = self._score(unpacked, scaled_map, with_keys=True)
+        def side_blocks(side: dict) -> DataFrame | None:
+            if not side:
+                return None
+            b = self.blocks(sorted(side))
+            # drop fields no leaf allows at the scan (fld rides the
+            # block metadata, so this is a pushed filter)
+            cond = None
+            for t, fs in sorted(side.items()):
+                if fs != full:
+                    c = (F.col("term") == F.lit(t)) & ~F.col("fld").isin(sorted(fs))
+                    cond = c if cond is None else (cond | c)
+            return b if cond is None else b.filter(~cond)
 
-        # one flag column per distinct positional (leaf, field set) —
-        # LEFT join: the tree may OR or negate it, so a semi/anti join
-        # would be wrong
-        flag_col: dict[tuple, str] = {}
+        pos_blocks, neg_blocks = side_blocks(reads[0]), side_blocks(reads[1])
         total_df = sum(
-            s["df"] for t in live_terms for f, s in stats[t].items()
-            if f in scan_fld[t]
-        ) + sum(_stem_df_total(s, scan_stem[s]) for s in live_stems)
-
-        def _term_df(t: str) -> int:
-            # scan-union df: an upper bound of any leaf-restricted set
-            return sum(
-                s["df"] for f, s in stats[t].items() if f in scan_fld[t]
+            r["df"] for t, fs in reads[0].items() for f, r in rows[t].items() if f in fs
+        )
+        # pruning pays for its extra jobs only when there is real volume
+        # to skip; below the threshold the exhaustive plan is faster
+        if (
+            pq.tree is None
+            and not _col_conflicts(pq)
+            and block_max
+            and order == "bm25"
+            and total_df >= self.prune_min_postings
+        ):
+            # the pruner sees col-restricted singles as AND terms (their
+            # blocks are already field-restricted at the scan, so
+            # term-level qualification is exact) and col phrases as
+            # phrases (adjacency -> theta must stay off)
+            toks = [t for _n, _e, t in pq.col_filters if t]
+            pq_pr = replace(
+                pq,
+                and_terms=list(pq.and_terms) + [t[0] for t in toks if len(t) == 1],
+                phrases=list(pq.phrases) + [t for t in toks if len(t) > 1],
+            )
+            pos_blocks, neg_blocks, info = self._prune_blocks(
+                pos_blocks, neg_blocks, pq_pr, scaled_map, k, docs_f,
+                has_doc_filters, stats, sorted(reads[1]),
             )
 
-        def _leaf_block_src(leaf: Node) -> DataFrame:
-            """Narrow the block source to THIS leaf's fields.
-            pos_blocks covers each term's scan-union fields; a leaf
-            restricted below that union (or carrying prefix stems,
-            whose expansions are never in the scoring scan) gets its
-            own pushed-filter source."""
-            fs = set(leaf.spec)
-            stems = set(_leaf_stems(leaf))
-            plain = set(_leaf_terms(leaf))
-            if not stems:
-                if fs == full:
-                    return pos_blocks
-                return pos_blocks.filter(
-                    ~F.col("term").isin(sorted(plain))
-                    | F.col("fld").isin(sorted(fs))
-                )
-            exp = {t for st in stems for t in stem_live(st, fs)}
-            src = self.blocks(sorted(plain | exp))
-            if fs != full:
-                src = src.filter(F.col("fld").isin(sorted(fs)))
-            return src
+        double_negated = []
 
-        def _expand_slots(slots, fs) -> list:
-            """Marker slots become their stem's (leaf-field-restricted)
-            expansion — the positional matchers' list slots."""
-            return [
-                sl if isinstance(sl, str) else sorted(stem_live(sl[1], fs))
-                for sl in slots
-            ]
-
-        def _leaf_bound(leaf: Node) -> int:
-            vals = [_term_df(t) for t in set(_leaf_terms(leaf))]
-            vals += [
-                _stem_df_total(st, set(leaf.spec))
-                for st in set(_leaf_stems(leaf))
-            ]
-            return min(vals)
-
-        for i, key in enumerate(sorted(pos_leaves, key=repr)):
-            leaf = pos_leaves[key]
-            fs = set(leaf.spec)
-            name = f"_pf{i}"
-            flag_col[key] = name
-            src = _leaf_block_src(leaf)
-            bound = _leaf_bound(leaf)
-            if leaf.kind == "near":
-                ops = [_expand_slots(op, fs) for op in leaf.toks]
-                fdf = self._near_docs(ops, leaf.n, src)
-            elif leaf.kind == "anchor":
-                fdf = self._anchor_docs(_expand_slots(leaf.toks, fs), src)
-            elif leaf.kind == "prefix_phrase":
-                fdf = self._phrase_docs(
-                    list(leaf.toks) + [sorted(stem_live(leaf.stem, fs))], src
-                )
-            else:  # multi-token phrase (slots may carry prefix markers)
-                fdf = self._phrase_docs(_expand_slots(leaf.toks, fs), src)
-            fdf = fdf.withColumn(name, F.lit(True))
-            if bound <= self.broadcast_cand_max_postings:
-                fdf = F.broadcast(fdf)
-            cand = cand.join(fdf, "doc_id", "left")
-
-        def _presence(label: str, fields) -> object:
-            """Presence of ``label`` in any of ``fields`` — an OR over
-            the per-(term, field) keys the fold emitted."""
-            cond = F.lit(False)
-            for f in sorted(fields):
-                cond = cond | F.array_contains("_tkeys", _tf_key(label, f))
-            return cond
-
-        def compile_node(node: Node):
-            k2 = node.kind
-            if k2 in ("and", "or"):
-                cols = [compile_node(c) for c in node.kids]
-                out = cols[0]
-                for c in cols[1:]:
-                    out = (out & c) if k2 == "and" else (out | c)
-                return out
-            if k2 == "not":
-                return compile_node(node.kids[0]) & ~compile_node(node.kids[1])
-            if k2 == "unot":
-                return ~compile_node(node.kids[0])
-            if k2 == "true":
-                return F.lit(True)
-            if k2 == "false":
-                return F.lit(False)
-            key = _tree_positional_key(node)
-            if key is not None:
-                return F.coalesce(
-                    F.col(flag_col[key + (node.spec,)]), F.lit(False)
-                )
+        def to_spec(node: Node, depth: int = 0):
+            """The annotated tree as the evaluator's picklable tuples;
+            prefix markers become their stem's (leaf-field-restricted)
+            expansion, leaves under ``depth`` >= 1 negations read the
+            NOT side."""
+            kind = node.kind
+            if kind in ("and", "or"):
+                return (kind, tuple(to_spec(c, depth) for c in node.kids))
+            if kind == "not":
+                return ("not", (to_spec(node.kids[0], depth), to_spec(node.kids[1], depth + 1)))
+            if kind == "unot":
+                return ("unot", (to_spec(node.kids[0], depth + 1),))
+            neg = depth > 0
+            if neg and depth % 2 == 0:
+                double_negated.append(node)
             fs = set(node.spec)
-            if k2 == "prefix":
-                fields = {
-                    f for m in stem_live(node.stem, fs).values() for f in m
-                }
-                return _presence(node.stem + "*", fields)
-            # term or single-token phrase (adjacency is vacuous)
-            return _presence(node.toks[0], live_flds(node.toks[0], fs))
+            flds = None if fs == full else tuple(sorted(fs))
 
-        cand = cand.filter(compile_node(tree)).drop(
-            "_terms", "_tkeys", *flag_col.values()
-        )
+            def slot(sl) -> tuple:
+                return (sl,) if isinstance(sl, str) else tuple(sorted(stem_live(sl[1], fs)))
 
-        cand_out = (
-            F.broadcast(cand)
-            if total_df <= self.broadcast_cand_max_postings
-            else cand
+            if kind == "near":
+                ops = dict.fromkeys(tuple(slot(sl) for sl in op) for op in node.toks)
+                return ("near", neg, tuple(ops), node.n + 1, flds)
+            if kind == "prefix":
+                return ("has", neg, slot(("*", node.stem)), flds)
+            slots = tuple(slot(sl) for sl in node.toks)
+            if kind == "prefix_phrase":
+                slots += (slot(("*", node.stem)),)
+            if kind == "anchor" or len(slots) > 1:
+                return ("phrase", neg, slots, flds, kind == "anchor")
+            return ("has", neg, slots[0], flds)  # term or 1-token phrase
+
+        tree_spec = to_spec(tree)
+        spec = {
+            "need_pos": need_pos,
+            "neg_universe": bool(double_negated),
+            "scaled": scaled_map,
+            "avgdl": dict(self.avgdl_by_fld),
+            "stems": stems_spec,
+            "tree": tree_spec,
+        }
+        # one (term, fld) and no NOT side: each doc has one posting, so
+        # the evaluator needs no slice exchange; a small such scan also
+        # coalesces to a few splits (each task is a Python worker
+        # round-trip, and ~30 near-empty tasks cost more scheduling
+        # than the decode)
+        single = (
+            len(scaled_map) == 1
+            and not stems_spec
+            and neg_blocks is None
+            and not need_pos
         )
+        if single and total_df <= self.broadcast_cand_max_postings:
+            pos_blocks = pos_blocks.coalesce(4)
+        cand = self._evaluate(pos_blocks, neg_blocks, spec, exchange=not single)
+
+        # the index->row join (Q9): when the dictionary says the whole
+        # candidate side is small (total df across the query's terms —
+        # known driver-side, no extra job), broadcast it so the join
+        # probes the docs table instead of sort-merging it. Zipf-head
+        # queries exceed the bound and keep the shuffle join.
+        if total_df <= self.broadcast_cand_max_postings:
+            cand = F.broadcast(cand)
         out = (
-            cand_out.join(docs_f.select("doc_id", *key_meta), "doc_id")
+            cand.join(docs_f.select("doc_id", *key_meta), "doc_id")
             .select("doc_id", *key_meta, "score")
             .orderBy(*order_cols)
             .limit(k)
         )
         return SearchResult(out, pq, info)
-
 
     def attach_text(self, result: DataFrame, source: DataFrame) -> DataFrame:
         """Q9/Q13 analog: join scored keys back to the row store for full

@@ -6,10 +6,10 @@ precedence juxtaposition (implicit AND) > NOT > AND > OR, parentheses,
 column filters binding parenthesized expressions, NEAR/prefix/anchor
 operands anywhere in the expression. Queries whose structure fits the
 flat ParsedQuery model lower into it (identical plans to the
-pre-boolean surface); anything else carries a ``Node`` tree that the
-engine evaluates generically (one positionless unpack over every leaf
-term, flag columns for positional leaves, the tree compiled to a
-single Catalyst boolean).
+pre-boolean surface, including block pruning); anything else carries a
+``Node`` tree. Both reach the same evaluator: one mapInArrow pass over
+the leaf terms' packed blocks that evaluates the tree over per-doc
+presence and positional masks.
 
 Semantics are pinned by LIVE FTS5 differentials below: for every
 query, the engine's matched doc-id set must equal the rowid set of
@@ -23,7 +23,7 @@ import pytest
 
 from aspublic_spark.index.build import IndexBuilder
 from aspublic_spark.query import SearchEngine, parse_fts5
-from aspublic_spark.query.parser import parse_query
+from aspublic_spark.query.parser import parse_query, parse_websearch
 
 
 def _fts5_available() -> bool:
@@ -346,6 +346,37 @@ def test_tree_scan_pushes_term_filter(tree_eng):
     pushed_scan = plan[plan.index("PushedFilters"):]
     rs = pushed_scan[pushed_scan.index("ReadSchema"):].split("\n")[0]
     assert "positions" not in rs
+
+
+PLAN_SHAPES = [
+    ("single term", "alpha", parse_fts5),
+    ("single term + NOT", "alpha NOT beta", parse_fts5),
+    ("AND", "alpha gamma", parse_fts5),
+    ("phrase", '"beta gamma"', parse_fts5),
+    ("NEAR", "NEAR(alpha gamma, 2)", parse_fts5),
+    ("anchor", "^alpha", parse_fts5),
+    ("prefix", "al*", parse_fts5),
+    ("prefix phrase", '"beta gam"*', parse_fts5),
+    ("column filter", "text:alpha", parse_fts5),
+    ("tree", "alpha OR (beta NOT delta)", parse_fts5),
+    ("websearch OR", "alpha OR zeta", parse_websearch),
+]
+
+
+@pytest.mark.parametrize(
+    "q,parser", [(q, p) for _s, q, p in PLAN_SHAPES], ids=[s for s, _q, _p in PLAN_SHAPES]
+)
+def test_every_shape_runs_one_evaluator_pass(tree_eng, q, parser):
+    """Every query shape executes as ONE mapInArrow evaluator pass: no
+    mapInPandas matcher, and no semi/anti join on doc_id (the
+    range-prune's interval join on block metadata would be allowed)."""
+    res = tree_eng.search(q, k=10, parser=parser)
+    plan = res.df._jdf.queryExecution().executedPlan().toString()
+    assert res.df.count() > 0
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
+    joins = [ln for ln in plan.splitlines() if "LeftSemi" in ln or "LeftAnti" in ln]
+    assert not [ln for ln in joins if "doc_id" in ln], plan
 
 
 @pytest.mark.skipif(not _fts5_available(), reason="sqlite without FTS5")

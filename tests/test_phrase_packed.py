@@ -1,7 +1,9 @@
 """Differential test for the packed phrase matcher.
 
-The vectorized decode in engine._phrase_match_factory (record split via
-tfs, grouped cumsum, int64 key packing, np.intersect1d chain) is checked
+The query evaluator's vectorized phrase match (engine._decode_blocks_batch
+position decode — record split via tfs, grouped cumsum — then
+engine._phrase_set_from_cat's int64 key packing and np.intersect1d
+chain) is checked
 against a brute-force Python reference over randomized corpora: build a
 real index, run phrase queries through SearchEngine, and compare with
 naive token-window scanning of the source text.

@@ -122,12 +122,10 @@ def test_auto_refresh_survives_prune(spark, workdir):
 
 
 def test_not_side_broadcasts_and_dead_not_skips_anti_join(spark, workdir):
-    """Round-5 NOT-path plan work: (1) a dictionary-bounded small NOT
-    side broadcasts into the anti-join (BroadcastHashJoin LeftAnti —
-    mapInPandas output defeats size estimation, so without the hint the
-    candidate side is shuffled to subtract a handful of doc_ids);
-    (2) a single NOT term absent from the corpus excludes nothing and
-    skips its anti-join stage entirely."""
+    """NOT-side plan shape: the NOT terms' blocks ride the evaluator's
+    one slice-local pass (no anti-join on doc_id at all), and a single
+    NOT term absent from the corpus excludes nothing and adds no NOT
+    scan."""
     idx = os.path.join(workdir, "not_bcast_idx")
     b = _builder(spark, idx)
     rows = []
@@ -142,23 +140,24 @@ def test_not_side_broadcasts_and_dead_not_skips_anti_join(spark, workdir):
 
     res = eng.search("alpha !noisy", k=100)
     plan = res.df._jdf.queryExecution().executedPlan().toString()
-    anti = [l for l in plan.splitlines() if "LeftAnti" in l]
-    assert anti and all("BroadcastHashJoin" in l for l in anti), plan
+    assert "LeftAnti" not in plan and "LeftSemi" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert res.df.count() == 32  # 8 noisy docs excluded
 
-    # dead NOT term: same results as no NOT at all, and no anti-join
+    # dead NOT term: same results as no NOT at all, and no NOT scan
     dead = eng.search("alpha !zzzmissing", k=100)
     base = eng.search("alpha", k=100)
-    assert "LeftAnti" not in dead.df._jdf.queryExecution().executedPlan().toString()
+    dead_plan = dead.df._jdf.queryExecution().executedPlan().toString()
+    assert "zzzmissing" not in dead_plan and "LeftAnti" not in dead_plan
     got = [(r["turn_idx"], round(r["score"], 9)) for r in dead.df.collect()]
     want = [(r["turn_idx"], round(r["score"], 9)) for r in base.df.collect()]
     assert got == want and len(got) == 40
 
 
 def test_selective_phrase_docs_broadcast_into_semi_join(spark, workdir):
-    """The positive-phrase doc set has the same size-estimation hole as
-    the NOT side (mapInPandas output): when the dictionary bounds it
-    small, it must broadcast into the left_semi join."""
+    """Positive-phrase plan shape: the adjacency window is applied
+    inside the evaluator's one slice-local pass, so the plan needs no
+    semi join on doc_id (and no phrase-doc set to size-estimate)."""
     idx = os.path.join(workdir, "phrase_bcast_idx")
     b = _builder(spark, idx)
     rows = []
@@ -171,22 +170,11 @@ def test_selective_phrase_docs_broadcast_into_semi_join(spark, workdir):
     b.build(df)
     eng = SearchEngine(spark, idx)
 
-    # the staged plan (r6: kept for prefix/col-filter shapes and as the
-    # fused path's bit-identity reference) still broadcasts the
-    # dictionary-bounded phrase-doc set into the semi join
-    eng._fused = False
     res = eng.search('"alpha beta"', k=100)
     plan = res.df._jdf.queryExecution().executedPlan().toString()
-    semi = [l for l in plan.splitlines() if "LeftSemi" in l]
-    assert semi and all("BroadcastHashJoin" in l for l in semi), plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert res.df.count() == 10  # only the adjacent variant matches
-    # the r6 fused path needs no semi join at all: the phrase window is
-    # applied inside the one slice-local pass
-    eng._fused = True
-    res2 = eng.search('"alpha beta"', k=100)
-    plan2 = res2.df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" not in plan2, plan2
-    assert res2.df.count() == 10
 
 
 def test_auto_n_slices_resolves_by_volume_at_first_build(spark, workdir):

@@ -8,14 +8,16 @@ they rely on:
    dirty-row edge cases).
 2. ``encode_grouped_records_offsets`` (the shared-buffer positions
    encoder) slices exactly like the per-group ``bytes`` encoder.
-3. The fused slice-local candidate path returns results bit-identical
-   to the staged plan (scores compared exactly, not approximately) for
-   every flat query family it covers, on an index with heavy-hitter
-   salting and NOT/phrase/NEAR/anchor/OR shapes.
+3. The one query evaluator (the slice-local mapInArrow pass) matches
+   references on an index with heavy-hitter salting: live sqlite FTS5
+   match sets for NOT/phrase/NEAR/anchor/OR shapes, the pandas BM25
+   oracle's top-k and scores for the AND/NOT/phrase shapes it covers,
+   and the exhaustive plan's top-k under forced block pruning.
 """
 
 import os
 import shutil
+import sqlite3
 
 import numpy as np
 import pyarrow as pa
@@ -26,6 +28,8 @@ from aspublic_spark.index.build import IndexBuilder, _raw_postings_arrow_factory
 from aspublic_spark.query.engine import SearchEngine
 from aspublic_spark.query.parser import parse_fts5, parse_websearch
 from aspublic_spark.tables import synth_transcripts
+from tests.test_bm25_oracle import _oracle
+from tests.test_fts5_tree import _fts5_available
 
 
 def _collect_postings(factory, batch):
@@ -99,18 +103,24 @@ def test_grouped_records_offsets_match_bytes_encoder():
     assert via_offsets == codec.encode_grouped_records(vals, lens)
 
 
+# (engine query, search kwargs, live FTS5 MATCH expression, pandas BM25
+# oracle case for the shapes tests/test_bm25_oracle.py covers)
 FUSED_QUERIES = [
-    ("query spark", {}),
-    ("query spark !shuffle", {}),
-    ('"the the"', {}),
-    ('table !"data query"', {}),
-    ("dup OR vector", {"parser": parse_websearch}),
-    ('"data query" OR zebra', {"parser": parse_websearch}),
-    ("NEAR(data query, 3)", {"parser": parse_fts5}),
-    ("^the", {"parser": parse_fts5}),
-    ("query spark", {"role": "assistant"}),
-    ("data example !query", {"order": "recency"}),
-    ("query !query", {}),
+    ("query spark", {}, "query spark", dict(and_terms=["query", "spark"])),
+    (
+        "query spark !shuffle", {}, "query spark NOT shuffle",
+        dict(and_terms=["query", "spark"], not_terms=["shuffle"]),
+    ),
+    ('"the the"', {}, '"the the"', dict(phrase=["the", "the"])),
+    # sqlite-style negated phrase: conjunctive NOT (a AND b)
+    ('table !"data query"', {}, "table NOT (data AND query)", None),
+    ("dup OR vector", {"parser": parse_websearch}, "dup OR vector", None),
+    ('"data query" OR zebra', {"parser": parse_websearch}, '"data query" OR zebra', None),
+    ("NEAR(data query, 3)", {"parser": parse_fts5}, "NEAR(data query, 3)", None),
+    ("^the", {"parser": parse_fts5}, "^the", None),
+    ("query spark", {"role": "assistant"}, "query spark", None),
+    ("data example !query", {"order": "recency"}, "data example NOT query", None),
+    ("query !query", {}, "query NOT query", None),
 ]
 
 
@@ -124,17 +134,55 @@ def fused_idx(spark, workdir):
     return idx
 
 
-def test_fused_path_bit_identical_to_staged(spark, fused_idx):
+@pytest.fixture(scope="module")
+def fused_corpus(spark):
+    return synth_transcripts(spark, 4000, seed=42).toPandas()
+
+
+@pytest.mark.skipif(not _fts5_available(), reason="sqlite without FTS5")
+def test_fused_queries_match_live_fts5(spark, fused_idx, fused_corpus):
+    pdf = fused_corpus
+    db = sqlite3.connect(":memory:")
+    db.execute("CREATE VIRTUAL TABLE f USING fts5(text, tokenize='unicode61')")
+    db.executemany(
+        "INSERT INTO f(rowid, text) VALUES (?, ?)",
+        [(i + 1, t) for i, t in enumerate(pdf["text"])],
+    )
     eng = SearchEngine(spark, fused_idx)
-    nonzero = 0
-    for q, kw in FUSED_QUERIES:
-        eng._fused = True
-        a = eng.search(q, k=100, **kw).df.collect()
-        eng._fused = False
-        b = eng.search(q, k=100, **kw).df.collect()
-        assert a == b, q  # Row equality includes exact score bits
-        nonzero += bool(a)
-    assert nonzero >= 8  # the comparisons are non-vacuous
+    nonempty = 0
+    for q, kw, fts_q, _case in FUSED_QUERIES:
+        hits = pdf.iloc[
+            sorted(r[0] - 1 for r in db.execute("SELECT rowid FROM f WHERE f MATCH ?", (fts_q,)))
+        ]
+        if "role" in kw:
+            hits = hits[hits["role"] == kw["role"]]
+        want = set(zip(hits["conv_id"], hits["turn_idx"]))
+        rows = eng.search(q, k=100, **kw).df.collect()
+        got = [(r["conv_id"], r["turn_idx"]) for r in rows]
+        if kw.get("order") == "recency":
+            top = hits.sort_values(["ts", "conv_id", "turn_idx"], ascending=[False, True, True])
+            assert got == list(zip(top["conv_id"], top["turn_idx"]))[:100], q
+        elif len(want) <= 100:
+            assert set(got) == want and len(got) == len(want), q
+        else:  # the engine clamps k at 100: its top-k is a subset
+            assert len(got) == 100 and set(got) <= want, q
+        nonempty += bool(got)
+    assert nonempty >= 8  # the comparisons are non-vacuous
+
+
+def test_fused_queries_score_like_bm25_oracle(spark, fused_idx, fused_corpus):
+    eng = SearchEngine(spark, fused_idx)
+    cases = [(q, case) for q, kw, _f, case in FUSED_QUERIES if case and not kw]
+    assert len(cases) == 3
+    for q, case in cases:
+        got = [
+            (r["conv_id"], r["turn_idx"], r["score"])
+            for r in eng.search(q, k=100).df.collect()
+        ]
+        want = _oracle(fused_corpus, k=100, **case)
+        assert [g[:2] for g in got] == [w[:2] for w in want] and got, q
+        for g, w in zip(got, want):
+            assert abs(g[2] - w[2]) < 1e-9, (q, g, w)
 
 
 def test_partial_block_build_equals_raw_row_build(spark, workdir):
@@ -192,15 +240,14 @@ def test_partial_block_build_equals_raw_row_build(spark, workdir):
         )
 
 
-def test_fused_path_bit_identical_under_forced_pruning(spark, fused_idx):
-    eng = SearchEngine(spark, fused_idx, prune_min_postings=0)
+def test_pruned_equals_exhaustive_under_forced_pruning(spark, fused_idx):
+    pruned = SearchEngine(spark, fused_idx, prune_min_postings=0)
+    exhaustive = SearchEngine(spark, fused_idx)
     for q in ["query spark", "query spark !shuffle", "the and"]:
-        eng._fused = True
-        a = eng.search(q, k=100).df.collect()
-        eng._fused = False
-        b = eng.search(q, k=100).df.collect()
-        assert a == b, q
-        assert a
+        res = pruned.search(q, k=100)
+        a = res.df.collect()
+        assert a == exhaustive.search(q, k=100, block_max=False).df.collect(), q
+        assert a and res.pruning["range_pruned"], q
 
 
 def test_block_ids_dense_and_full_blocks_pass_through(spark, workdir):
