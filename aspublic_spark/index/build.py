@@ -225,7 +225,8 @@ def _raw_postings_arrow_factory(
         when positionless).
 
         Salting is decided LOCALLY (r6): a group salts by map-task id
-        once the task's cumulative posting count for it reaches
+        + 1 (so task 0 salts too and salt 0 always means unsalted) once
+        the task's cumulative posting count for it reaches
         ``partial_salt_threshold`` — no global heavy-term probe job.
         The reducer-bound contract is preserved: with threshold L ~=
         salt_max_postings / n_map_tasks, an unsalted (slice, term, fld)
@@ -254,7 +255,7 @@ def _raw_postings_arrow_factory(
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else 0
         gsalts = np.zeros(len(gs), dtype=np.int32)
-        if pid and partial_salt_threshold:
+        if partial_salt_threshold:
             terms_g = take_terms(co_s2[gs]).to_pylist()
             sl_g = sl_s[gs]
             n_g = ge - gs
@@ -264,7 +265,7 @@ def _raw_postings_arrow_factory(
                 v = _salt_cum.get(key, 0) + int(n_g[i])
                 _salt_cum[key] = v
                 if v >= thr:
-                    gsalts[i] = pid
+                    gsalts[i] = pid + 1  # 0 stays the unsalted group
         in_group = np.arange(np_post, dtype=np.int64) - gs[group_of_row]
         starts = np.flatnonzero(gstart | (in_group % block_size == 0))
         blk = codec.pack_all_blocks(do_s, tf_s, dl_s, starts, as_arrow=True)

@@ -1671,18 +1671,13 @@ class SearchEngine:
             "tree": tree_spec,
         }
         # one (term, fld) and no NOT side: each doc has one posting, so
-        # the evaluator needs no slice exchange; a small such scan also
-        # coalesces to a few splits (each task is a Python worker
-        # round-trip, and ~30 near-empty tasks cost more scheduling
-        # than the decode)
+        # the evaluator needs no slice exchange
         single = (
             len(scaled_map) == 1
             and not stems_spec
             and neg_blocks is None
             and not need_pos
         )
-        if single and total_df <= self.broadcast_cand_max_postings:
-            pos_blocks = pos_blocks.coalesce(4)
         cand = self._evaluate(pos_blocks, neg_blocks, spec, exchange=not single)
 
         # the index->row join (Q9): when the dictionary says the whole

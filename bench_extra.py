@@ -11,6 +11,10 @@
   python bench_extra.py entry [REPEATS]      # noop-sink timing of every
                                              # declared entry query (sf from
                                              # $SPARK_GRAFT_SF_DIR)
+  python bench_extra.py pytask [REPEATS]     # per-task fixed cost of a
+                                             # Python worker: an empty
+                                             # mapInArrow over 1/4/8/16
+                                             # partitions, median of REPEATS
 
 Same conditions as the frozen bench: materialized sf input, local[32]
 (honouring $SPARK_GRAFT_CPUS), engine with cache_tables=True, one
@@ -130,6 +134,65 @@ def time_entry(repeats: int = 2):
     print("ENTRY", rows)
 
 
+def _task_cpu(batches):
+    """Empty mapInArrow body: import the package (as every UDF the
+    program ships does on unpickling), drain the input, report this
+    worker's pid and its cumulative CPU seconds."""
+    import os
+
+    import aspublic_spark  # noqa: F401
+    import pyarrow as pa
+
+    for _ in batches:
+        pass
+    t = os.times()
+    yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "cpu": [t.user + t.system]})
+
+
+def python_task_cost(repeats: int = 5):
+    """Fixed cost of one Python worker task, without a full benchmark
+    run: an empty mapInArrow over a fixed 16k-row input cut into 1, 4,
+    8 and 16 partitions, one warm-up then REPEATS timed collects each.
+    Worker CPU per task is the growth of each worker's cumulative CPU
+    since its previous report (since its fork for a new worker), summed
+    over workers and divided by the task count, so the set-up a worker
+    does before the UDF runs is counted too."""
+    import statistics
+
+    from aspublic_spark.session import get_spark
+
+    spark = get_spark(
+        "bench_extra_pytask", cpus=CPUS, shuffle_partitions=CPUS,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    last_cpu = {}
+
+    def run(n_parts):
+        df = spark.range(0, 16_000, numPartitions=n_parts).mapInArrow(
+            _task_cpu, "pid long, cpu double"
+        )
+        t0 = time.perf_counter()
+        rows = df.collect()
+        wall = time.perf_counter() - t0
+        now = {}
+        for r in rows:
+            now[r.pid] = max(now.get(r.pid, 0.0), r.cpu)
+        cpu = sum(c - last_cpu.get(pid, 0.0) for pid, c in now.items())
+        last_cpu.update(now)
+        return wall, cpu / n_parts
+
+    print(f"local[{CPUS}], median of {repeats}")
+    print(f"{'partitions':>10} {'wall_s':>8} {'worker_cpu_s/task':>18}")
+    for n_parts in (1, 4, 8, 16):
+        run(n_parts)
+        walls, cpus = zip(*(run(n_parts) for _ in range(repeats)))
+        print(
+            f"{n_parts:>10} {statistics.median(walls):>8.3f} "
+            f"{statistics.median(cpus):>18.4f}",
+            flush=True,
+        )
+
+
 def sf1_decade(n_turns: int = 2_000_000):
     """One decade above the frozen bench's sf0.1 corpus: build 2M turns
     and run the same query families with the same single-shot protocol
@@ -179,6 +242,8 @@ if __name__ == "__main__":
         time_families(int(sys.argv[2]) if len(sys.argv) > 2 else 5)
     elif cmd == "entry":
         time_entry(int(sys.argv[2]) if len(sys.argv) > 2 else 2)
+    elif cmd == "pytask":
+        python_task_cost(int(sys.argv[2]) if len(sys.argv) > 2 else 5)
     elif cmd == "sf1":
         sf1_decade(int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000)
     else:

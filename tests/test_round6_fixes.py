@@ -240,6 +240,40 @@ def test_partial_block_build_equals_raw_row_build(spark, workdir):
         )
 
 
+def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
+    """Map task 0 salts a heavy group too (salt = task id + 1, 0 stays
+    unsalted), so a one-partition input still splits its heavy terms;
+    the index content equals an unsalted build's."""
+    import pyspark.sql.functions as F
+
+    from aspublic_spark.index.build import read_stats
+
+    df = synth_transcripts(spark, 2000, seed=11).coalesce(1)
+
+    def build(name, salt_max):
+        idx = os.path.join(workdir, name)
+        shutil.rmtree(idx, ignore_errors=True)
+        b = IndexBuilder(spark, idx, n_slices=2, block_size=16, salt_max_postings=salt_max)
+        b.build(df)
+        return idx, b
+
+    salted, bs = build("r6_task0_salted", 40)
+    plain, bp = build("r6_task0_plain", 10**9)
+    post = lambda idx: spark.read.parquet(idx + "/postings/gen=0")  # noqa: E731
+    heavy = post(salted).filter(F.col("term") == "the").select("salt").distinct()
+    the_salts = {r.salt for r in heavy.collect()}
+    assert the_salts - {0}, the_salts
+    assert post(plain).agg(F.max("salt")).first()[0] == 0
+
+    def postings(idx):
+        blocks = spark.read.option("basePath", idx + "/postings").parquet(idx + "/postings/gen=0")
+        return sorted(SearchEngine(spark, idx).unpack(blocks, with_positions=True).collect())
+
+    assert postings(salted) == postings(plain)
+    assert sorted(bs.dictionary_df().collect()) == sorted(bp.dictionary_df().collect())
+    assert read_stats(salted) == read_stats(plain)
+
+
 def test_pruned_equals_exhaustive_under_forced_pruning(spark, fused_idx):
     pruned = SearchEngine(spark, fused_idx, prune_min_postings=0)
     exhaustive = SearchEngine(spark, fused_idx)
