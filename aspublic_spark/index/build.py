@@ -19,20 +19,20 @@ set of explicit columnar tables, built by DataFrame jobs:
 Scale design (the part that must survive 1000 executors / 100 TB):
 
 - the whole build is ONE pass over the corpus: a mapInArrow
-  tokenize (linear in tokens; positions leave the Python worker
-  already varint-encoded) feeds the pack shuffle DIRECTLY — no
+  tokenize (linear in tokens; postings leave the Python worker
+  already cut into varint-encoded partial blocks) feeds the pack
+  shuffle DIRECTLY — no
   intermediate raw-postings table is ever written or re-read, and the
   packed blocks are the ONLY stored copy of the postings (~half the
   index storage of a raw+packed layout);
-- the pack shuffle keys on (slice, term, fld, salt): heavy-hitter
-  terms are split across ``ceil(df/salt_max)`` salts keyed by doc
-  hash, so no single reducer ever materializes a full Zipf-head
-  posting list (north_rule's explicit skew handling). The salt plan
-  needs term df BEFORE the shuffle: incremental generations read it
-  from the current global dictionary (exact for the existing corpus,
-  a predictor for the batch); a first build estimates it from a 1%
-  token sample. The plan is a pure PERFORMANCE hint — any term can
-  be salted or not without affecting query results;
+- the pack shuffle keys on (slice, term, fld, salt): a map task
+  salts a (slice, term, fld) group with its own task id once its
+  local posting count for the group crosses ~salt_max_postings /
+  n_map_tasks, so no single reducer ever materializes a full
+  Zipf-head posting list (north_rule's explicit skew handling) and no
+  job has to know term df before the shuffle. Salt is a pure
+  PERFORMANCE key — any term can be salted or not without affecting
+  query results;
 - blocks carry (min_doc, max_doc, max_tf, min_dl, sum_tf) so the
   query side can do block-max WAND pruning (score bounds computed at
   QUERY time from max_tf/min_dl under the then-current avgdl — safe
@@ -52,10 +52,12 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   all DECOMPOSABLE, so `refresh_global` merges the small per-gen
   dictionaries — per-batch cost independent of corpus history;
 - `compact()` merges generations and `prune_index(cutoff)` drops/
-  rewrites them by time, both behind crash-safe pending markers; both
-  reconstruct shuffle-ready postings from the packed blocks with a
-  fully vectorized unpacker (position payloads are re-SLICED per
-  posting, never decoded).
+  rewrites them by time, both behind crash-safe pending markers. There
+  is ONE posting encoder: both decode the packed blocks to posting
+  rows (codec.decode_blocks; position payloads are re-SLICED per
+  posting, never decoded), keep the surviving rows with a semi-join,
+  and re-cut them through the build's map-side cutter and pack
+  reducer.
 
 Commit protocol (object-store-safe — see fsio.py for the exact two
 guarantees it relies on; the reference gets this from sqlite
@@ -96,36 +98,38 @@ BLOCK_SCHEMA = (
     "sum_tf long, max_tf int, min_dl int"
 )
 
-# shuffle-time postings schema: one row per (doc, field, term);
-# positions already varint-encoded ([n, first, deltas...] —
-# codec.encode_grouped_records) so the pack shuffle moves compressed
-# bytes, not array<int>. This schema only exists IN FLIGHT (the
-# compaction/prune unpack output); it is never persisted. `fld` is
-# the indexed-column ordinal (FTS5 indexes N columns per row,
-# `fts5(text, subject, ...)`, reference common/db_sqlite.py:27).
+# in-flight posting rows: one row per (doc, field, term), positions
+# varint-encoded ([n, first, deltas...] — codec.encode_grouped_records).
+# compact() and prune_index() decode stored blocks into these rows to
+# filter and re-cut them; never persisted. `fld` is the indexed-column
+# ordinal (FTS5 indexes N columns per row, `fts5(text, subject, ...)`,
+# reference common/db_sqlite.py:27).
 RAW_SCHEMA = (
     "slice int, doc_id long, fld int, dl int, term string, tf int, positions binary"
 )
 RAW_FORMAT = 4
 
-# shuffle-time PARTIAL-BLOCK schema (the BUILD's in-flight format):
-# BLOCK_SCHEMA minus block_id. The tokenize tasks cut their postings at
-# block_size boundaries and compute each block's metadata map-side, so
-# a FULL row (n == block_size) is already a finished block: the pack
-# reducer passes its payload bytes through VERBATIM (guide §8: heavy
-# bytes move once, untouched) and only TAIL rows (n < block_size — the
-# undersized remainder of each (task, slice, term, fld) group) take
-# the decode->merge->re-encode path. The shuffle moves ~#blocks +
-# #groups rows instead of one row per POSTING — measurement showed the
-# per-posting row conversions dominating the pack stage before this
-# format (the pack numpy work itself is ~0.5 s per 10^6 postings).
-# Never persisted.
+# in-flight PARTIAL-BLOCK rows, the shuffle format of every pack job
+# (build, compaction, prune): BLOCK_SCHEMA minus block_id. The map side
+# cuts its postings at block_size boundaries and computes each block's
+# metadata (_cut_blocks), so a FULL row (n == block_size) is already a
+# finished block: the pack reducer passes its payload bytes through
+# VERBATIM (guide §8: heavy bytes move once, untouched) and only TAIL
+# rows (n < block_size — the undersized remainder of each (task, slice,
+# term, fld) group) take the decode->merge->re-cut path. The shuffle
+# moves ~#blocks + #groups rows instead of one row per POSTING —
+# measurement showed the per-posting row conversions dominating the
+# pack stage before this format (the pack numpy work itself is ~0.5 s
+# per 10^6 postings). Never persisted.
 PARTIAL_SCHEMA = (
     "slice int, term string, fld int, salt int, n int, "
     "min_doc long, max_doc long, "
     "doc_gaps binary, tfs binary, dls binary, positions binary, "
     "sum_tf long, max_tf int, min_dl int"
 )
+
+# the per-generation data directories (``<sub>/gen=G``)
+GEN_SUBDIRS = ("docs", "postings", "dictionary_gens")
 
 
 # -- snapshot readers (shared by IndexBuilder and SearchEngine) ----------
@@ -169,27 +173,195 @@ def read_stats(index_dir: str, fs: FileSystem | None = None) -> list[dict]:
     return fs.read_json(os.path.join(index_dir, "stats.json"))["by_fld"]
 
 
+def read_index_meta(index_dir: str, fs: FileSystem | None = None) -> dict | None:
+    """The stored layout (``index_meta.json``), or None when the
+    directory holds no index yet. An index in another raw postings
+    format is refused here, so every reader and writer of an index
+    checks it."""
+    fs = fs or LocalFS()
+    path = os.path.join(index_dir, "index_meta.json")
+    if not fs.exists(path):
+        return None
+    m = fs.read_json(path)
+    if m.get("raw_format", 1) != RAW_FORMAT:
+        raise ValueError(
+            f"index at {index_dir} uses raw postings format "
+            f"{m.get('raw_format', 1)}, this code reads and writes "
+            f"{RAW_FORMAT}; rebuild into a fresh directory"
+        )
+    return m
+
+
+class _LocalSalt:
+    """The local salting rule of the map-side cut; one per mapInArrow
+    function, ``reset()`` at each task's start (one call per task,
+    single-threaded; worker processes are reused).
+
+    A (slice, term, fld) group salts by map-task id + 1 (so task 0
+    salts too and salt 0 always means unsalted) once the task's
+    cumulative posting count for it reaches ``threshold`` — no global
+    heavy-term probe job. With threshold L ~= salt_max_postings /
+    n_map_tasks, an unsalted group receives < L postings from each task,
+    so its reducer group stays ~salt_max bounded; a genuinely heavy term
+    crosses L in every task and spreads one salt per task. Any
+    assignment is result-identical: salt is purely a shuffle-splitting
+    key."""
+
+    def __init__(self, threshold: int):
+        self.threshold = threshold
+        self.cum: dict = {}
+
+    def reset(self):
+        self.cum.clear()
+
+    def __call__(self, sl_g, fld_g, terms_g: list, n_g) -> np.ndarray:
+        from pyspark import TaskContext
+
+        tc = TaskContext.get()
+        salt = (tc.partitionId() if tc is not None else 0) + 1
+        out = np.zeros(len(terms_g), dtype=np.int32)
+        cum = self.cum
+        for i, key in enumerate(zip(fld_g.tolist(), sl_g.tolist(), terms_g)):
+            v = cum.get(key, 0) + int(n_g[i])
+            cum[key] = v
+            if v >= self.threshold:
+                out[i] = salt
+        return out
+
+
+def _cut_blocks(
+    block_size: int, sl_s, tc_s, fld, doc_s, tf_s, dl_s, pos_buf, pos_off, take_terms, salt
+):
+    """THE block cutter of every pack path: postings sorted by (slice,
+    term, fld[, salt], doc) -> one PARTIAL_SCHEMA batch. Each group is
+    cut at block_size boundaries; codec.pack_all_blocks varint-encodes
+    doc gaps/tfs/dls for all blocks in one vectorized pass each, and a
+    block's position payload is a zero-copy byte slice of ``pos_buf``
+    (posting k's record spans ``pos_buf[pos_off[k]:pos_off[k+1]]``;
+    ``pos_buf`` is None when positions are not stored).
+
+    ``tc_s`` are term codes, resolved by ``take_terms(idx) -> pa.Array``;
+    ``fld`` is one int (a tokenizer call covers one field) or
+    per-posting. ``salt`` is either the per-posting salt column, then
+    part of the group key (the reducer's tail merge), or a
+    :class:`_LocalSalt` that salts each group (the map side)."""
+    import pyarrow as pa
+
+    n = doc_s.size
+    gstart = np.empty(n, dtype=bool)
+    gstart[0] = True
+    gstart[1:] = (sl_s[1:] != sl_s[:-1]) | (tc_s[1:] != tc_s[:-1])
+    if np.ndim(fld):
+        gstart[1:] |= fld[1:] != fld[:-1]
+    else:
+        fld = np.broadcast_to(np.int32(fld), (n,))
+    keyed = isinstance(salt, np.ndarray)
+    if keyed:
+        gstart[1:] |= salt[1:] != salt[:-1]
+    group_of_row = np.cumsum(gstart) - 1
+    gs = np.flatnonzero(gstart)
+    in_group = np.arange(n, dtype=np.int64) - gs[group_of_row]
+    starts = np.flatnonzero(gstart | (in_group % block_size == 0))
+    if keyed:
+        salts = salt[starts]
+    else:
+        ge = np.append(gs[1:], n)
+        gsalts = salt(sl_s[gs], fld[gs], take_terms(tc_s[gs]).to_pylist(), ge - gs)
+        salts = gsalts[group_of_row[starts]]
+    blk = codec.pack_all_blocks(doc_s, tf_s, dl_s, starts, as_arrow=True)
+    blk_off = np.zeros(starts.size + 1, dtype=np.int64)
+    if pos_buf is None:
+        pos_buf = np.empty(0, dtype=np.uint8)
+    else:
+        blk_off[:-1] = pos_off[starts]
+        blk_off[-1] = pos_off[-1]
+    # per-block tf sum: lets the dictionary's cf/total-token
+    # aggregates run over block METADATA instead of postings
+    sum_tf = np.add.reduceat(tf_s, starts)
+    return pa.record_batch(
+        [
+            pa.array(sl_s[starts], type=pa.int32()),
+            take_terms(tc_s[starts]),
+            pa.array(fld[starts], type=pa.int32()),
+            pa.array(salts, type=pa.int32()),
+            pa.array(blk["n"], type=pa.int32()),
+            pa.array(blk["min_doc"], type=pa.int64()),
+            pa.array(blk["max_doc"], type=pa.int64()),
+            blk["doc_gaps"],
+            blk["tfs"],
+            blk["dls"],
+            codec.binary_from_stream(pos_buf, blk_off),
+            pa.array(sum_tf.astype(np.int64), type=pa.int64()),
+            pa.array(blk["max_tf"].astype(np.int32), type=pa.int32()),
+            pa.array(blk["min_dl"].astype(np.int32), type=pa.int32()),
+        ],
+        names=[
+            "slice", "term", "fld", "salt", "n", "min_doc", "max_doc",
+            "doc_gaps", "tfs", "dls", "positions",
+            "sum_tf", "max_tf", "min_dl",
+        ],
+    )
+
+
+def _gather_payload(data: np.ndarray, off: np.ndarray, order: np.ndarray):
+    """Gather the byte records ``data[off[k]:off[k+1]]`` in ``order``
+    into one contiguous stream; returns ``(stream, cum)`` where element
+    i spans ``stream[cum[i]:cum[i+1]]``."""
+    starts_b = off[:-1][order]
+    lens_b = (off[1:] - off[:-1])[order]
+    totb = int(lens_b.sum())
+    cum = np.empty(lens_b.size + 1, dtype=np.int64)
+    cum[0] = 0
+    np.cumsum(lens_b, out=cum[1:])
+    if totb == 0:
+        return np.empty(0, dtype=np.uint8), cum
+    gather = (
+        np.repeat(starts_b, lens_b)
+        + np.arange(totb, dtype=np.int64)
+        - np.repeat(cum[:-1], lens_b)
+    )
+    return data[gather], cum
+
+
+def _sort_and_cut(block_size: int, sl, tc, fld, doc, tf, dl, pos_data, pos_off, terms, salt):
+    """Postings in any order -> one PARTIAL_SCHEMA batch: one lexsort
+    by (slice, term, fld[, salt], doc), the position records
+    (``pos_data[pos_off[k]:pos_off[k+1]]``) gathered into that order —
+    never decoded — then :func:`_cut_blocks`. ``tc`` indexes the Arrow
+    string array ``terms``. ``salt`` is the per-posting salt column (the
+    reducer's tail merge) or a :class:`_LocalSalt` (the re-cut's map
+    side)."""
+    import pyarrow as pa
+
+    keyed = isinstance(salt, np.ndarray)
+    order = np.lexsort((doc, salt, fld, tc, sl) if keyed else (doc, fld, tc, sl))
+    buf, cum = _gather_payload(pos_data, pos_off, order)
+    return _cut_blocks(
+        block_size, sl[order], tc[order], fld[order], doc[order], tf[order], dl[order],
+        buf, cum, lambda idx: terms.take(pa.array(idx)), salt[order] if keyed else salt,
+    )
+
+
 def _raw_postings_arrow_factory(
     store_positions: bool,
-    n_fields: int = 1,
-    analyzer: str = "fts5",
-    partial_salt_threshold: int | None = None,
-    block_size: int = 128,
+    n_fields: int,
+    analyzer: str,
+    salt_threshold: int,
+    block_size: int,
 ):
-    """mapInArrow fn: (slice, doc_id, f0[, f1...]) batches -> raw postings.
+    """mapInArrow fn: (slice, doc_id, f0[, f1...]) batches -> PARTIAL_SCHEMA
+    rows, the build's map side: tokenize, then :func:`_cut_blocks`.
 
     Replaces the former JVM higher-order-function position extraction,
     which rescanned the token array once per distinct term
     (O(distinct_terms x doc_len) — quadratic on long documents). This
     is linear in total token count and vectorized at BATCH level: one
     term factorization over every token of the batch, one lexsort by
-    (doc, term_code, position), group boundaries by diff. Positions
-    leave here as per-posting varint payloads IN ONE shared buffer
-    (an Arrow binary array built from offsets — no Python bytes
-    object per posting); the pack stage concatenates the bytes
-    verbatim (identical block layout to the previous encoder). Each
-    indexed field is tokenized independently (per-field dl and
-    positions, exactly like FTS5 columns).
+    (slice, term, doc), group boundaries by diff. Positions are
+    varint-encoded into ONE shared buffer already in that order, so
+    each block's payload is a zero-copy slice of it. Each indexed field
+    is tokenized independently (per-field dl and positions, exactly
+    like FTS5 columns).
 
     Tokenization fast path: on rows whose characters are all
     ``[a-z0-9]`` + ASCII whitespace, the FTS5 unicode61 analyzer IS
@@ -209,106 +381,12 @@ def _raw_postings_arrow_factory(
     tokenize = get_analyzer(analyzer)
     arrow_fast = analyzer == "fts5"
     _dirty_re = "[^a-z0-9 \t\n\r\x0b\x0c]"
-    # per-TASK cumulative (fld, slice, term) posting counts for the
-    # local salting rule; reset at the top of emit() (one emit() call
-    # per task, single-threaded)
-    _salt_cum: dict = {}
-
-    def _emit_partials(slice_p, doc_p, code_p, tf_p, dl_p, buf, off, take_terms, fld):
-        """Emit PARTIAL_SCHEMA rows: THIS batch's postings grouped by
-        (slice, term), docs sorted ascending, CUT AT block_size
-        BOUNDARIES with per-block metadata computed here — a full row
-        (n == block_size) is a finished index block the reducer ships
-        verbatim; only each group's undersized tail row merges with
-        other tasks' tails at the reducer. ``buf``/``off`` hold the
-        per-posting position payloads in pre-sort posting order (None
-        when positionless).
-
-        Salting is decided LOCALLY (r6): a group salts by map-task id
-        + 1 (so task 0 salts too and salt 0 always means unsalted) once
-        the task's cumulative posting count for it reaches
-        ``partial_salt_threshold`` — no global heavy-term probe job.
-        The reducer-bound contract is preserved: with threshold L ~=
-        salt_max_postings / n_map_tasks, an unsalted (slice, term, fld)
-        group receives < L postings from each task, so its reducer
-        group stays ~salt_max bounded; a genuinely heavy term crosses L
-        in every task and spreads one salt per task. Any assignment is
-        result-identical (salt is purely a shuffle-splitting key,
-        pinned by the partial-vs-raw content-equality test)."""
-        from pyspark import TaskContext
-
-        # rows arrive ALREADY sorted by (slice, code, doc) — _emit_groups
-        # sorts postings once in this final order for the partial path,
-        # so no second lexsort and no gathers here; the positions buffer
-        # is likewise already laid out in final order, so per-block
-        # payloads are contiguous zero-copy slices
-        sl_s, do_s, co_s2 = slice_p, doc_p, code_p
-        tf_s, dl_s = tf_p, dl_p
-        np_post = do_s.size
-        gstart = np.empty(np_post, dtype=bool)
-        gstart[0] = True
-        gstart[1:] = (sl_s[1:] != sl_s[:-1]) | (co_s2[1:] != co_s2[:-1])
-        group_of_row = np.cumsum(gstart) - 1
-        gs = np.flatnonzero(gstart)
-        ge = np.append(gs[1:], np_post)
-        # per-group salt first (cumulative local rule), then cut blocks
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        gsalts = np.zeros(len(gs), dtype=np.int32)
-        if partial_salt_threshold:
-            terms_g = take_terms(co_s2[gs]).to_pylist()
-            sl_g = sl_s[gs]
-            n_g = ge - gs
-            thr = partial_salt_threshold
-            for i in range(len(gs)):
-                key = (fld, int(sl_g[i]), terms_g[i])
-                v = _salt_cum.get(key, 0) + int(n_g[i])
-                _salt_cum[key] = v
-                if v >= thr:
-                    gsalts[i] = pid + 1  # 0 stays the unsalted group
-        in_group = np.arange(np_post, dtype=np.int64) - gs[group_of_row]
-        starts = np.flatnonzero(gstart | (in_group % block_size == 0))
-        blk = codec.pack_all_blocks(do_s, tf_s, dl_s, starts, as_arrow=True)
-        sum_tf = np.add.reduceat(tf_s, starts)
-        if store_positions:
-            blk_off = np.empty(starts.size + 1, dtype=np.int64)
-            blk_off[:-1] = off[starts]
-            blk_off[-1] = buf.size
-            positions = codec.binary_from_stream(buf, blk_off)
-        else:
-            positions = codec.binary_from_stream(
-                np.empty(0, dtype=np.uint8),
-                np.zeros(starts.size + 1, dtype=np.int64),
-            )
-        bgroup = group_of_row[starts]
-        return pa.record_batch(
-            [
-                pa.array(sl_s[starts], type=pa.int32()),
-                take_terms(co_s2[starts]),
-                pa.array(np.full(len(starts), fld, dtype=np.int32), type=pa.int32()),
-                pa.array(gsalts[bgroup], type=pa.int32()),
-                pa.array(blk["n"], type=pa.int32()),
-                pa.array(blk["min_doc"], type=pa.int64()),
-                pa.array(blk["max_doc"], type=pa.int64()),
-                blk["doc_gaps"],
-                blk["tfs"],
-                blk["dls"],
-                positions,
-                pa.array(sum_tf.astype(np.int64), type=pa.int64()),
-                pa.array(blk["max_tf"].astype(np.int32), type=pa.int32()),
-                pa.array(blk["min_dl"].astype(np.int32), type=pa.int32()),
-            ],
-            names=[
-                "slice", "term", "fld", "salt", "n", "min_doc", "max_doc",
-                "doc_gaps", "tfs", "dls", "positions",
-                "sum_tf", "max_tf", "min_dl",
-            ],
-        )
+    salter = _LocalSalt(salt_threshold)
 
     def _emit_groups(slice_sub, doc_sub, lens, codes, take_terms, fld):
-        """Shared posting-group assembly: ``lens`` = tokens per doc,
-        ``codes`` = term codes in doc-major position order,
-        ``take_terms(idx) -> pa.Array`` resolves codes to strings."""
+        """Posting-group assembly: ``lens`` = tokens per doc, ``codes``
+        = term codes in doc-major position order, ``take_terms(idx) ->
+        pa.Array`` resolves codes to strings."""
         n = lens.size
         total = int(lens.sum())
         if total == 0:
@@ -318,19 +396,13 @@ def _raw_postings_arrow_factory(
         doc_off[0] = 0
         np.cumsum(lens[:-1], out=doc_off[1:])
         pos_in_doc = np.arange(total, dtype=np.int64) - doc_off[doc_idx]
+        # sort ONCE in the shuffle-final order (slice, term, doc, pos).
         # np.lexsort is STABLE and the token stream arrives doc-major
-        # with positions ascending, so equal sort keys keep (row, pos)
-        # order — no position key needed
-        if partial_salt_threshold is not None:
-            # partial path: sort ONCE in the shuffle-final order
-            # (slice, term, doc, pos) so _emit_partials needs no second
-            # lexsort and per-block payloads are contiguous slices of
-            # the positions buffer. The doc_id key is required: doc_id
-            # is a hash or a user key, not row order, and a block's doc
-            # ids must ascend (doc-gap codec, min_doc/max_doc pruning)
-            order = np.lexsort((doc_sub[doc_idx], codes, slice_sub[doc_idx]))
-        else:
-            order = codes.argsort(kind="stable")
+        # with positions ascending, so equal keys keep position order.
+        # The doc_id key is required: doc_id is a hash or a user key,
+        # not row order, and a block's doc ids must ascend (doc-gap
+        # codec, min_doc/max_doc pruning)
+        order = np.lexsort((doc_sub[doc_idx], codes, slice_sub[doc_idx]))
         di_s, co_s, po_s = doc_idx[order], codes[order], pos_in_doc[order]
         gstart = np.empty(total, dtype=bool)
         gstart[0] = True
@@ -341,49 +413,9 @@ def _raw_postings_arrow_factory(
         buf = off = None
         if store_positions:
             buf, off = codec.encode_grouped_records_offsets(po_s, g_lens)
-        if partial_salt_threshold is not None:
-            return _emit_partials(
-                slice_sub[g_di],
-                doc_sub[g_di],
-                co_s[starts],
-                g_lens.astype(np.int64),
-                lens[g_di],
-                buf,
-                off,
-                take_terms,
-                fld,
-            )
-        if store_positions:
-            pos_arr = pa.Array.from_buffers(
-                pa.binary(),
-                starts.size,
-                [
-                    None,
-                    pa.py_buffer(off.astype(np.int32).tobytes()),
-                    pa.py_buffer(buf.tobytes()),
-                ],
-            )
-        else:
-            pos_arr = pa.Array.from_buffers(
-                pa.binary(),
-                starts.size,
-                [
-                    None,
-                    pa.py_buffer(np.zeros(starts.size + 1, dtype=np.int32).tobytes()),
-                    pa.py_buffer(b""),
-                ],
-            )
-        return pa.record_batch(
-            [
-                pa.array(slice_sub[g_di], type=pa.int32()),
-                pa.array(doc_sub[g_di], type=pa.int64()),
-                pa.array(np.full(starts.size, fld, dtype=np.int32), type=pa.int32()),
-                pa.array(lens[g_di].astype(np.int32), type=pa.int32()),
-                take_terms(co_s[starts]),
-                pa.array(g_lens.astype(np.int32), type=pa.int32()),
-                pos_arr,
-            ],
-            names=["slice", "doc_id", "fld", "dl", "term", "tf", "positions"],
+        return _cut_blocks(
+            block_size, slice_sub[g_di], co_s[starts], fld, doc_sub[g_di],
+            g_lens.astype(np.int64), lens[g_di], buf, off, take_terms, salter,
         )
 
     def one_field_py(slice_np, doc_np, texts, fld):
@@ -414,9 +446,8 @@ def _raw_postings_arrow_factory(
 
     def one_field_arrow(slice_np, doc_np, col, fld):
         """Yields 0-2 record batches: the Arrow-tokenized clean rows and
-        the Python-tokenized rest. Posting rows are doc-local, so row
-        order across the two sub-batches is irrelevant (the pack
-        shuffle re-keys everything)."""
+        the Python-tokenized rest. Both cut their own partial blocks;
+        the pack reducer merges their tails like any other task's."""
         n = len(col)
         col = pc.fill_null(col, "")
         trimmed = pc.ascii_trim_whitespace(col)
@@ -458,7 +489,7 @@ def _raw_postings_arrow_factory(
                 yield out
 
     def emit(batches):
-        _salt_cum.clear()  # fresh per task (worker processes are reused)
+        salter.reset()
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -480,73 +511,74 @@ def _raw_postings_arrow_factory(
     return emit
 
 
-def _term_count_arrow_factory(n_fields: int, analyzer: str):
-    """mapInArrow fn for the salt plan's sample: (f0[, f1...]) batches
-    -> (term, fld, cnt) partial occurrence counts, aggregated per batch
-    in Arrow C++ (``value_counts``). Same clean/dirty tokenization
-    hybrid as :func:`_raw_postings_arrow_factory`: rows of
-    ``[a-z0-9]`` + ASCII whitespace split in Arrow, anything else takes
-    the exact per-row analyzer — identical token streams, so the df
-    estimate matches what the build will actually shuffle."""
+def _decode_postings_arrow_factory():
+    """mapInArrow fn: packed block rows (+ ``gen``) -> posting rows
+    (RAW_SCHEMA + ``gen``) for compact()/prune_index(). One
+    codec.decode_blocks pass per batch; each posting's position record
+    leaves as a zero-copy slice of the stored payload, never decoded."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    from aspublic_spark.functions.stemmer import get_analyzer
-
-    tokenize = get_analyzer(analyzer)
-    arrow_fast = analyzer == "fts5"
-    _dirty_re = "[^a-z0-9 \t\n\r\x0b\x0c]"
-
-    def emit(batches):
+    def run(batches):
         for batch in batches:
-            if batch.num_rows == 0:
+            d = codec.decode_blocks(batch, "bytes")
+            if d is None:
                 continue
-            for fld in range(n_fields):
-                col = pc.fill_null(batch.column(f"f{fld}"), "")
-                trimmed = pc.ascii_trim_whitespace(col)
-                parts = []
-                if arrow_fast:
-                    dirty = pc.match_substring_regex(
-                        trimmed, _dirty_re
-                    ).to_numpy(zero_copy_only=False)
-                    empty = pc.equal(trimmed, "").to_numpy(zero_copy_only=False)
-                    clean_idx = np.flatnonzero(~dirty & ~empty)
-                    if clean_idx.size:
-                        sub = (
-                            trimmed
-                            if clean_idx.size == len(col)
-                            else trimmed.take(pa.array(clean_idx))
-                        )
-                        parts.append(pc.list_flatten(pc.ascii_split_whitespace(sub)))
-                    dirty_idx = np.flatnonzero(dirty)
-                else:
-                    dirty_idx = np.arange(len(col))
-                if dirty_idx.size:
-                    toks = [
-                        t
-                        for s in col.take(pa.array(dirty_idx)).to_pylist()
-                        for t in (tokenize(s) if s else [])
-                    ]
-                    if toks:
-                        parts.append(pa.array(toks, type=pa.string()))
-                if not parts:
-                    continue
-                flat = pa.concat_arrays([p.cast(pa.string()) for p in parts])
-                vc = pc.value_counts(flat)
-                if len(vc) == 0:
-                    continue
-                yield pa.record_batch(
-                    [
-                        vc.field("values"),
-                        pa.array(
-                            np.full(len(vc), fld, dtype=np.int32), type=pa.int32()
-                        ),
-                        vc.field("counts"),
-                    ],
-                    names=["term", "fld", "cnt"],
+            blk = d["blk"]
+
+            def per_posting(name):
+                return pa.array(
+                    batch.column(name).to_numpy(zero_copy_only=False)[blk], type=pa.int32()
                 )
 
-    return emit
+            yield pa.record_batch(
+                [
+                    per_posting("slice"),
+                    pa.array(d["doc_id"], type=pa.int64()),
+                    per_posting("fld"),
+                    pa.array(d["dl"].astype(np.int32), type=pa.int32()),
+                    codec.one_chunk(batch.column("term")).take(pa.array(blk)),
+                    pa.array(d["tf"].astype(np.int32), type=pa.int32()),
+                    codec.binary_from_stream(d["pos_bytes"], d["pos_off"]),
+                    per_posting("gen"),
+                ],
+                names=["slice", "doc_id", "fld", "dl", "term", "tf", "positions", "gen"],
+            )
+
+    return run
+
+
+def _recut_arrow_factory(block_size: int, salt_threshold: int):
+    """mapInArrow fn: posting rows (RAW_SCHEMA, any order) ->
+    PARTIAL_SCHEMA rows — the tokenizer's map-side cut, for the
+    surviving postings of compact()/prune_index(). A task's rows are
+    cut as one table (per-batch cuts would leave one tail per group
+    per batch), salted by the same local rule."""
+    import pyarrow as pa
+
+    salter = _LocalSalt(salt_threshold)
+
+    def run(batches):
+        salter.reset()
+        batch_list = list(batches)
+        if not batch_list:
+            return
+        tbl = pa.Table.from_batches(batch_list).combine_chunks()
+        if tbl.num_rows == 0:
+            return
+
+        def col(name, dtype):
+            return codec.one_chunk(tbl.column(name)).to_numpy(zero_copy_only=False).astype(dtype)
+
+        terms = codec.one_chunk(tbl.column("term").dictionary_encode())
+        data, off = codec.binary_view(tbl.column("positions"))
+        yield _sort_and_cut(
+            block_size, col("slice", np.int32),
+            terms.indices.to_numpy(zero_copy_only=False).astype(np.int64),
+            col("fld", np.int32), col("doc_id", np.int64), col("tf", np.int64),
+            col("dl", np.int64), data, off, terms.dictionary, salter,
+        )
+
+    return run
 
 
 def bm25_weight_col(tf_col, dl_col, avgdl: float):
@@ -556,291 +588,41 @@ def bm25_weight_col(tf_col, dl_col, avgdl: float):
     return tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
 
 
-def _one_chunk(arr):
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if isinstance(arr, pa.ChunkedArray):  # older pyarrow returns ChunkedArray
-        if arr.num_chunks > 1:
-            # a >2GB binary column that cannot combine into one
-            # chunk must fail loudly: silently packing chunk 0
-            # only would corrupt the index at exactly the scale
-            # this module targets. Remedy: more shuffle
-            # partitions / lower salt_max_postings.
-            raise RuntimeError(
-                "pack partition column exceeds single-chunk Arrow "
-                f"limit ({arr.num_chunks} chunks); increase "
-                "spark.sql.shuffle.partitions or lower "
-                "salt_max_postings"
-            )
-        arr = arr.chunk(0) if arr.num_chunks else pa.array([], type=arr.type)
-    return arr
-
-
-def _binary_col_view(arr):
-    """(data_u8, starts, lens) view of an Arrow binary column."""
-    arr = _one_chunk(arr)
-    voff = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-    dbuf = arr.buffers()[2]
-    data = (
-        np.frombuffer(dbuf, dtype=np.uint8)
-        if dbuf is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    return data, voff[:-1], voff[1:] - voff[:-1]
-
-
-def _gather_payload(data: np.ndarray, starts_b: np.ndarray, lens_b: np.ndarray):
-    """Gather variable-length byte slices (in output order) into one
-    contiguous stream; element k spans ``out[cum[k]:cum[k+1]]``."""
-    totb = int(lens_b.sum())
-    cum = np.empty(lens_b.size + 1, dtype=np.int64)
-    cum[0] = 0
-    np.cumsum(lens_b, out=cum[1:])
-    if totb == 0:
-        return np.empty(0, dtype=np.uint8), cum
-    gather = (
-        np.repeat(starts_b, lens_b)
-        + np.arange(totb, dtype=np.int64)
-        - np.repeat(cum[:-1], lens_b)
-    )
-    return data[gather], cum
-
-
-def _assemble_blocks(
-    block_size: int,
-    store_positions: bool,
-    slice_s,
-    salt_s,
-    fld_s,
-    tc_s,
-    tstrings,
-    doc_s,
-    tf_s,
-    dl_s,
-    pos_bytes_sorted,
-    pos_cum,
-):
-    """Shared block assembly over postings SORTED by (slice, term, fld,
-    salt, doc): block boundaries for the whole partition at once,
-    codec.pack_all_blocks varint-encodes doc gaps/tfs/dls in one
-    vectorized pass each, position payloads are byte-sliced per block
-    without ever being decoded. Used by both pack inputs (raw posting
-    rows from compaction/prune, partial-block rows from the build)."""
-    import pyarrow as pa
-
-    n = doc_s.size
-    is_group_start = np.empty(n, dtype=bool)
-    is_group_start[0] = True
-    is_group_start[1:] = (
-        (slice_s[1:] != slice_s[:-1])
-        | (tc_s[1:] != tc_s[:-1])
-        | (fld_s[1:] != fld_s[:-1])
-        | (salt_s[1:] != salt_s[:-1])
-    )
-    group_id = np.cumsum(is_group_start) - 1
-    gs = np.flatnonzero(is_group_start)
-    group_start_row = gs[group_id]
-    in_group_pos = np.arange(n, dtype=np.int64) - group_start_row
-    is_block_start = is_group_start | (in_group_pos % block_size == 0)
-    starts = np.flatnonzero(is_block_start)
-    ends = np.append(starts[1:], n)
-
-    blk = codec.pack_all_blocks(doc_s, tf_s, dl_s, starts, as_arrow=True)
-    if store_positions:
-        blk_off = np.empty(starts.size + 1, dtype=np.int64)
-        blk_off[:-1] = pos_cum[starts]
-        blk_off[-1] = pos_cum[-1]
-        blk_positions = codec.binary_from_stream(pos_bytes_sorted, blk_off)
-    else:
-        blk_positions = codec.binary_from_stream(
-            np.empty(0, dtype=np.uint8), np.zeros(starts.size + 1, dtype=np.int64)
-        )
-    # per-block tf sum: lets the dictionary's cf/total-token
-    # aggregates run over block METADATA instead of postings
-    sum_tf = np.add.reduceat(tf_s, starts)
-    # block_id = index of block within its group
-    blk_group = group_id[starts]
-    new_group = np.empty(len(starts), dtype=bool)
-    new_group[0] = True
-    new_group[1:] = blk_group[1:] != blk_group[:-1]
-    first_idx = np.flatnonzero(new_group)
-    first_blk_of_group = first_idx[np.cumsum(new_group) - 1]
-    block_ids = np.arange(len(starts), dtype=np.int64) - first_blk_of_group
-
-    if isinstance(tstrings, list):
-        terms_out = pa.array([tstrings[c] for c in tc_s[starts]], type=pa.string())
-    else:
-        terms_out = tstrings.take(pa.array(tc_s[starts]))
-    return pa.record_batch(
-        [
-            pa.array(slice_s[starts], type=pa.int32()),
-            terms_out,
-            pa.array(fld_s[starts], type=pa.int32()),
-            pa.array(salt_s[starts], type=pa.int32()),
-            pa.array(block_ids.astype(np.int32), type=pa.int32()),
-            pa.array(blk["n"], type=pa.int32()),
-            pa.array(blk["min_doc"], type=pa.int64()),
-            pa.array(blk["max_doc"], type=pa.int64()),
-            blk["doc_gaps"],
-            blk["tfs"],
-            blk["dls"],
-            blk_positions,
-            pa.array(sum_tf.astype(np.int64), type=pa.int64()),
-            pa.array(blk["max_tf"].astype(np.int32), type=pa.int32()),
-            pa.array(blk["min_dl"].astype(np.int32), type=pa.int32()),
-        ],
-        names=[
-            "slice", "term", "fld", "salt", "block_id", "n", "min_doc", "max_doc",
-            "doc_gaps", "tfs", "dls", "positions", "sum_tf", "max_tf", "min_dl",
-        ],
-    )
-
-
-def _pack_partition_arrow_factory(block_size: int, store_positions: bool):
-    """mapInArrow fn: pack one shuffle partition of RAW posting rows
-    into blocks (compaction/prune path — the build ships partial-block
-    rows instead, see _pack_partials_arrow_factory).
-
-    The partition holds complete (slice, term, salt) groups (guaranteed
-    by the upstream repartition on the same keys). EVERYTHING is
-    columnar: the sort is one np.lexsort, and the shared
-    _assemble_blocks does boundary/packing work for the whole partition
-    at once. Python-side cost is O(blocks) byte-slices, not O(postings).
-    """
-    import pyarrow as pa
-
-    def pack(batches):
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            return
-        slice_np = tbl.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-        salt_np = tbl.column("salt").to_numpy(zero_copy_only=False).astype(np.int32)
-        fld_np = tbl.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
-        doc_np = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        tf_np = tbl.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-        dl_np = tbl.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
-        tdict = _one_chunk(tbl.column("term").dictionary_encode())
-        tcodes = tdict.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        tstrings = tdict.dictionary.to_pylist()
-
-        order = np.lexsort((doc_np, salt_np, fld_np, tcodes, slice_np))
-        slice_s, salt_s, doc_s = slice_np[order], salt_np[order], doc_np[order]
-        tf_s, dl_s, tc_s, fld_s = tf_np[order], dl_np[order], tcodes[order], fld_np[order]
-
-        # positions arrive as per-posting varint payloads (RAW_SCHEMA);
-        # a block's payload is the byte-concatenation of its rows' bytes
-        # in sorted order — gather the bytes, never decode/re-encode
-        pos_bytes_sorted = pos_cum = None
-        if store_positions:
-            vdata, pstarts, plens = _binary_col_view(tbl.column("positions"))
-            pos_bytes_sorted, pos_cum = _gather_payload(
-                vdata, pstarts[order], plens[order]
-            )
-        yield _assemble_blocks(
-            block_size, store_positions, slice_s, salt_s, fld_s, tc_s,
-            tstrings, doc_s, tf_s, dl_s, pos_bytes_sorted, pos_cum,
-        )
-
-    return pack
-
-
-def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
-    """mapInArrow fn: pack one shuffle partition of PARTIAL-BLOCK rows
-    (the build's in-flight format) into final blocks.
+def _pack_partials_arrow_factory(block_size: int):
+    """mapInArrow fn: the ONE pack reducer. Finishes one shuffle
+    partition of PARTIAL-BLOCK rows (build, compaction and prune alike)
+    into stored blocks.
 
     FULL rows (n == block_size) are finished blocks cut map-side: their
     payload bytes pass through VERBATIM — no varint decode, no posting
     sort, no re-encode (guide §8: the heavy bytes cross the shuffle
     once and are never touched again). Only TAIL rows (n < block_size)
-    take the merge path: the same one-varint-pass-per-column decode as
-    the query-side unpack, a posting lexsort, and re-assembly into
-    blocks; positions are never decoded even there — per-posting byte
-    boundaries come from a varint-end scan (posting k spans tf_k + 1
-    varints) and the compressed bytes are re-sliced verbatim, so the
-    merged payload is bit-identical to a raw-row pack of the same
-    postings. block_id is assigned over the combined output per
-    (slice, term, fld, salt) group in (min_doc, max_doc) order —
-    deterministic, since a (doc, term, fld) posting exists exactly
-    once globally, so blocks of one group can't share min_doc."""
+    take the merge path: codec.decode_blocks, a posting lexsort, and a
+    re-cut by :func:`_cut_blocks`; positions are never decoded even
+    there — their records are re-sliced verbatim. block_id is assigned
+    over the combined output per (slice, term, fld, salt) group in
+    (min_doc, max_doc) order — deterministic, since a (doc, term, fld)
+    posting exists exactly once globally, so blocks of one group can't
+    share min_doc."""
     import pyarrow as pa
 
-    OUT_COLS = [
-        "slice", "term", "fld", "salt", "n", "min_doc", "max_doc",
-        "doc_gaps", "tfs", "dls", "positions", "sum_tf", "max_tf", "min_dl",
-    ]
-
     def _merge_tails(tbl):
-        """Today's decode->sort->assemble path, over the tail subset."""
-        nb = tbl.num_rows
-        n_np = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-        total = int(n_np.sum())
-        if total == 0:
+        d = codec.decode_blocks(tbl, "bytes")
+        if d is None:
             return None
-        row_starts = np.zeros(nb, dtype=np.int64)
-        np.cumsum(n_np[:-1], out=row_starts[1:])
-        row_of_post = np.repeat(np.arange(nb, dtype=np.int64), n_np)
+        blk = d["blk"]
 
-        def _concat(name):
-            data, st, ln = _binary_col_view(tbl.column(name))
-            return data[st[0] : st[-1] + ln[-1]] if nb else data
+        def col(name):
+            return codec.one_chunk(tbl.column(name)).to_numpy(zero_copy_only=False).astype(np.int32)[blk]
 
-        # doc ids: zigzag firsts per partial row, grouped cumsum
-        enc = codec.decode_varints(_concat("doc_gaps").tobytes())
-        firsts = codec._unzigzag(enc[row_starts]).view(np.uint64)
-        enc[row_starts] = firsts
-        csum = np.cumsum(enc, dtype=np.uint64)
-        base = csum[row_starts] - enc[row_starts]
-        doc_np = (csum - np.repeat(base, n_np)).view(np.int64)
-        tf_np = codec.decode_varints(_concat("tfs").tobytes()).astype(np.int64)
-        dl_np = codec.decode_varints(_concat("dls").tobytes()).astype(np.int64)
-
-        slice_r = tbl.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-        salt_r = tbl.column("salt").to_numpy(zero_copy_only=False).astype(np.int32)
-        fld_r = tbl.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
-        tdict = _one_chunk(tbl.column("term").dictionary_encode())
-        tcodes_r = tdict.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-
-        slice_np = slice_r[row_of_post]
-        salt_np = salt_r[row_of_post]
-        fld_np = fld_r[row_of_post]
-        tcodes = tcodes_r[row_of_post]
-
-        order = np.lexsort((doc_np, salt_np, fld_np, tcodes, slice_np))
-        slice_s, salt_s, doc_s = slice_np[order], salt_np[order], doc_np[order]
-        tf_s, dl_s, tc_s, fld_s = tf_np[order], dl_np[order], tcodes[order], fld_np[order]
-
-        pos_bytes_sorted = pos_cum = None
-        if store_positions:
-            pbytes = _concat("positions")
-            # per-posting byte boundaries: posting k's record is
-            # [n=tf_k, first, deltas...] = tf_k + 1 varint elements
-            is_end = (pbytes & 0x80) == 0
-            elem_ends = np.flatnonzero(is_end)
-            elem_starts = np.empty_like(elem_ends)
-            if elem_ends.size:
-                elem_starts[0] = 0
-                elem_starts[1:] = elem_ends[:-1] + 1
-            rec_first = np.zeros(total, dtype=np.int64)
-            np.cumsum(tf_np[:-1] + 1, out=rec_first[1:])
-            rec_last = rec_first + tf_np
-            byte_s = elem_starts[rec_first]
-            byte_l = elem_ends[rec_last] + 1 - byte_s
-            pos_bytes_sorted, pos_cum = _gather_payload(
-                pbytes, byte_s[order], byte_l[order]
-            )
-        merged = _assemble_blocks(
-            block_size, store_positions, slice_s, salt_s, fld_s, tc_s,
-            tdict.dictionary, doc_s, tf_s, dl_s, pos_bytes_sorted, pos_cum,
+        terms = codec.one_chunk(tbl.column("term").dictionary_encode())
+        merged = _sort_and_cut(
+            block_size, col("slice"),
+            terms.indices.to_numpy(zero_copy_only=False).astype(np.int64)[blk],
+            col("fld"), d["doc_id"], d["tf"], d["dl"], d["pos_bytes"], d["pos_off"],
+            terms.dictionary, col("salt"),
         )
-        return pa.Table.from_batches([merged]).select(OUT_COLS)
+        return pa.Table.from_batches([merged])
 
     def pack(batches):
         batch_list = list(batches)
@@ -863,12 +645,11 @@ def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
             if merged is not None:
                 parts.append(merged)
         if full_mask.any():
-            full = (
+            parts.append(
                 tbl
                 if full_mask.all()
                 else tbl.filter(pa.array(full_mask)).combine_chunks()
             )
-            parts.append(full.select(OUT_COLS))
         if not parts:
             return
         out = (
@@ -883,7 +664,7 @@ def _pack_partials_arrow_factory(block_size: int, store_positions: bool):
         sa = out.column("salt").to_numpy(zero_copy_only=False).astype(np.int32)
         mind = out.column("min_doc").to_numpy(zero_copy_only=False).astype(np.int64)
         maxd = out.column("max_doc").to_numpy(zero_copy_only=False).astype(np.int64)
-        td = _one_chunk(out.column("term").dictionary_encode())
+        td = codec.one_chunk(out.column("term").dictionary_encode())
         tc = td.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         order = np.lexsort((maxd, mind, sa, fl, tc, sl))
         sl_o, fl_o, sa_o, tc_o = sl[order], fl[order], sa[order], tc[order]
@@ -918,11 +699,9 @@ def _verify_blocks_arrow_factory():
     ``max_doc`` not the decoded extremes)."""
     import pyarrow as pa
 
-    from aspublic_spark.query.engine import _decode_blocks_batch
-
     def run(batches):
         for batch in batches:
-            d = _decode_blocks_batch(batch, with_positions=False)
+            d = codec.decode_blocks(batch)
             if d is None:
                 continue
             blk, ids = d["blk"], d["doc_id"]
@@ -944,7 +723,7 @@ def _verify_blocks_arrow_factory():
             yield pa.record_batch(
                 [
                     pa.array(gen[blk], type=pa.int32()),
-                    _one_chunk(batch.column("term")).take(pa.array(blk)),
+                    codec.one_chunk(batch.column("term")).take(pa.array(blk)),
                     pa.array(fld[blk], type=pa.int32()),
                     pa.array(ids, type=pa.int64()),
                     pa.array(bad_order, type=pa.int32()),
@@ -952,114 +731,6 @@ def _verify_blocks_arrow_factory():
                 ],
                 names=["gen", "term", "fld", "doc_id", "bad_order", "bad_range"],
             )
-
-    return run
-
-
-def _unpack_blocks_to_raw_factory(store_positions: bool, with_gen: bool = True):
-    """mapInArrow fn: packed blocks -> shuffle-ready raw postings rows.
-
-    The inverse of the pack stage, used by compact()/prune_index() to
-    reconstruct postings for re-packing WITHOUT a stored raw table.
-    Fully vectorized per batch: every block's doc_gaps/tfs/dls byte
-    payloads concatenate into one stream per column and decode in ONE
-    varint pass (varints are self-delimiting), per-block absolute doc
-    ids come from a grouped cumsum, and the positions payload is never
-    decoded at all — per-posting boundaries are found by a single
-    varint-end scan (posting k's record spans tf_k + 1 varints) and the
-    compressed bytes are re-sliced verbatim, so a pack->unpack->pack
-    round trip is bit-identical.
-    """
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            n_np = batch.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-            total = int(n_np.sum())
-            if total == 0:
-                continue
-            starts = np.zeros(nb, dtype=np.int64)
-            np.cumsum(n_np[:-1], out=starts[1:])
-            blk_of_post = np.repeat(np.arange(nb, dtype=np.int64), n_np)
-
-            def _concat_bytes(name):
-                col = batch.column(name)
-                if isinstance(col, pa.ChunkedArray):
-                    col = col.combine_chunks()
-                voff = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-                    col.offset : col.offset + len(col) + 1
-                ].astype(np.int64)
-                dbuf = col.buffers()[2]
-                data = (
-                    np.frombuffer(dbuf, dtype=np.uint8)
-                    if dbuf is not None
-                    else np.empty(0, dtype=np.uint8)
-                )
-                # per-row payloads are adjacent in arrow binary storage
-                return data[voff[0] : voff[-1]], voff - voff[0]
-
-            # --- doc ids: one varint pass, zigzag firsts, grouped cumsum
-            gbytes, _ = _concat_bytes("doc_gaps")
-            enc = codec.decode_varints(gbytes.tobytes())
-            firsts = codec._unzigzag(enc[starts]).view(np.uint64)
-            enc[starts] = firsts
-            csum = np.cumsum(enc, dtype=np.uint64)
-            base = csum[starts] - enc[starts]
-            doc_ids = (csum - np.repeat(base, n_np)).view(np.int64)
-
-            tbytes, _ = _concat_bytes("tfs")
-            tfs = codec.decode_varints(tbytes.tobytes()).astype(np.int64)
-            dbytes_, _ = _concat_bytes("dls")
-            dls = codec.decode_varints(dbytes_.tobytes()).astype(np.int64)
-
-            term_col = batch.column("term")
-            if isinstance(term_col, pa.ChunkedArray):
-                term_col = term_col.combine_chunks()
-            terms_out = term_col.take(pa.array(blk_of_post))
-            slice_np = batch.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-            fld_np = batch.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
-            cols = [
-                pa.array(slice_np[blk_of_post], type=pa.int32()),
-                pa.array(doc_ids, type=pa.int64()),
-                pa.array(fld_np[blk_of_post], type=pa.int32()),
-                pa.array(dls.astype(np.int32), type=pa.int32()),
-                terms_out,
-                pa.array(tfs.astype(np.int32), type=pa.int32()),
-            ]
-            names = ["slice", "doc_id", "fld", "dl", "term", "tf"]
-
-            if store_positions:
-                pbytes, _ = _concat_bytes("positions")
-                is_end = (pbytes & 0x80) == 0
-                elem_ends = np.flatnonzero(is_end)
-                elem_starts = np.empty_like(elem_ends)
-                if elem_ends.size:
-                    elem_starts[0] = 0
-                    elem_starts[1:] = elem_ends[:-1] + 1
-                # posting k's record is [n=tf_k, first, deltas...]:
-                # tf_k + 1 varint elements
-                rec_first = np.zeros(total, dtype=np.int64)
-                np.cumsum(tfs[:-1] + 1, out=rec_first[1:])
-                rec_last = rec_first + tfs
-                byte_s = elem_starts[rec_first]
-                byte_e = elem_ends[rec_last] + 1
-                pview = pbytes.tobytes()
-                payloads = [pview[s:e] for s, e in zip(byte_s, byte_e)]
-                cols.append(pa.array(payloads, type=pa.binary()))
-            else:
-                cols.append(
-                    pa.array(np.full(total, b"", dtype=object), type=pa.binary())
-                )
-            names.append("positions")
-
-            if with_gen:
-                gen_np = batch.column("gen").to_numpy(zero_copy_only=False).astype(np.int32)
-                cols.append(pa.array(gen_np[blk_of_post], type=pa.int32()))
-                names.append("gen")
-            yield pa.record_batch(cols, names=names)
 
     return run
 
@@ -1132,18 +803,17 @@ class IndexBuilder:
         # reopening an existing index: the stored layout wins — building
         # a new generation with different slicing/fields/block size
         # would silently corrupt the segment set
-        meta_path = os.path.join(index_dir, "index_meta.json")
-        if self.fs.exists(meta_path):
-            m = self.fs.read_json(meta_path)
+        m = read_index_meta(index_dir, self.fs)
+        if m is not None:
             self.key_cols = m["key_cols"]
             self.meta_cols = m["meta_cols"]
-            self.text_cols = m.get("text_cols", [m.get("text_col", "text")])
+            self.text_cols = m["text_cols"]
             self.text_col = self.text_cols[0]
-            self.block_size = m.get("block_size", block_size)
-            self.n_slices = m.get("n_slices", n_slices)
-            self.store_positions = m.get("store_positions", store_positions)
-            self.salt_max_postings = m.get("salt_max_postings", salt_max_postings)
-            self.analyzer = m.get("analyzer", "fts5")
+            self.block_size = m["block_size"]
+            self.n_slices = m["n_slices"]
+            self.store_positions = m["store_positions"]
+            self.salt_max_postings = m["salt_max_postings"]
+            self.analyzer = m["analyzer"]
         self.fs.makedirs(os.path.join(index_dir, "manifest"))
 
     # -- paths -------------------------------------------------------
@@ -1198,7 +868,7 @@ class IndexBuilder:
         mx = -1
         for g in self._live_gens():
             mx = max(mx, g)
-        for sub in ("docs", "postings_raw", "postings", "dictionary_gens"):
+        for sub in GEN_SUBDIRS:
             for name in self.fs.listdir(self._p(sub)):
                 if name.startswith("gen=") and name[4:].isdigit():
                     mx = max(mx, int(name[4:]))
@@ -1219,7 +889,7 @@ class IndexBuilder:
     def build(self, df: DataFrame, gen: int = 0, resume: bool = True) -> dict:
         """Build one generation in ONE pass over ``df``.
 
-        tokenize -> salt -> shuffle -> pack, writing docs + packed
+        tokenize -> cut partial blocks -> shuffle -> pack, writing docs + packed
         postings + per-gen dictionary, then committing the generation's
         raw manifest LAST (the all-or-nothing liveness flip). If the
         generation is already live and ``resume`` is set, only the
@@ -1251,15 +921,7 @@ class IndexBuilder:
             if self.n_slices is None:
                 self.n_slices = self._resolve_auto_slices(df)
             meta_path = self._p("index_meta.json")
-            if self.fs.exists(meta_path):
-                existing = self.fs.read_json(meta_path)
-                if existing.get("raw_format", 1) != RAW_FORMAT:
-                    raise ValueError(
-                        f"index at {self.index_dir} uses raw postings format "
-                        f"{existing.get('raw_format', 1)}, this build writes "
-                        f"{RAW_FORMAT}; rebuild into a fresh directory"
-                    )
-            else:
+            if not self.fs.exists(meta_path):
                 self.fs.write_json_atomic(
                     meta_path,
                     {
@@ -1305,9 +967,9 @@ class IndexBuilder:
         """Size n_slices from the first build's corpus volume.
 
         A LocalLimit probe answers "more than MIN_SLICES full slices of
-        docs?" with bounded cost regardless of input size (same trick
-        as the salt plan's heavy-term probe); only genuinely large
-        first builds pay the column-pruned count() that sizes them."""
+        docs?" with bounded cost regardless of input size; only
+        genuinely large first builds pay the column-pruned count() that
+        sizes them."""
         cap = self.MIN_SLICES * self.DOCS_PER_SLICE
         probe = df.select(F.lit(1).alias("one")).limit(cap + 1).count()
         if probe <= cap:
@@ -1349,21 +1011,17 @@ class IndexBuilder:
         ).parquet(self._p("docs", f"gen={gen}"))
         return int(obs.get["n"] or 0)
 
-    def _tokenized(
-        self, df: DataFrame, partial_salt_threshold: int | None = None
-    ) -> DataFrame:
-        """Input scan -> shuffle-ready postings (IN FLIGHT only).
+    def _tokenized(self, df: DataFrame, salt_threshold: int) -> DataFrame:
+        """Input scan -> PARTIAL_SCHEMA rows (IN FLIGHT only).
 
         ONE mapInArrow over (slice, doc_id, text): tokenize, group
         term->positions linearly (batch-level factorize + lexsort, no
-        per-doc Python beyond the tokenizer), emit positions already
-        varint-encoded. No action of its own — this plan feeds the
-        pack shuffle directly. With ``partial_salt_threshold`` the
-        output is PARTIAL_SCHEMA rows — one per (task, slice, term,
-        fld) group, salted locally once the task's cumulative count
-        for the group crosses the threshold — instead of one row per
-        posting, collapsing the pack exchange and both mapInArrow
-        boundary crossings to O(groups) rows."""
+        per-doc Python beyond the tokenizer), cut partial blocks — one
+        row per full block plus one tail per (task, slice, term, fld)
+        group, salted locally (:class:`_LocalSalt`) — collapsing the
+        pack exchange and both mapInArrow boundary crossings to
+        O(blocks) rows. No action of its own — this plan feeds the pack
+        shuffle directly."""
         doc_id = self.doc_id_col()
         src = (
             df.select(
@@ -1373,92 +1031,20 @@ class IndexBuilder:
             .withColumn("slice", self._slice_col())
             .select("slice", "doc_id", *[f"f{i}" for i in range(len(self.text_cols))])
         )
-        if partial_salt_threshold is not None:
-            return src.mapInArrow(
-                _raw_postings_arrow_factory(
-                    self.store_positions, len(self.text_cols), self.analyzer,
-                    partial_salt_threshold=partial_salt_threshold,
-                    block_size=self.block_size,
-                ),
-                PARTIAL_SCHEMA,
-            )
         return src.mapInArrow(
             _raw_postings_arrow_factory(
-                self.store_positions, len(self.text_cols), self.analyzer
+                self.store_positions, len(self.text_cols), self.analyzer,
+                salt_threshold, self.block_size,
             ),
-            RAW_SCHEMA,
+            PARTIAL_SCHEMA,
         )
 
-    def _salt_plan(self, df: DataFrame | None, n_rows: int | None = None) -> DataFrame:
-        """Heavy-hitter salting plan: a tiny (term, fld, n_salts) table,
-        broadcast-joined pre-shuffle so no reducer materializes a full
-        Zipf-head posting list. Used by the RAW-ROW pack path only
-        (compaction / retention rewrites, where live generations make
-        the dictionary branch exact and job-cheap); the fused BUILD
-        decides salting inside its map tasks since r6 (local cumulative
-        threshold, _emit_partials) and never calls this. The sample
-        branch (first build, no dictionary) estimates df from a ~1%
-        token sample (occurrence counts upper-bound doc counts, so
-        estimation errs toward MORE salts). The plan is a performance
-        hint only: any term may be salted or not without affecting
-        packed-block or query correctness."""
-        if self._live_gens():
-            return (
-                self.dictionary_df()
-                .filter(F.col("df") > self.salt_max_postings)
-                .select(
-                    "term",
-                    "fld",
-                    F.ceil(F.col("df") / self.salt_max_postings)
-                    .cast("int")
-                    .alias("n_salts"),
-                )
-            )
-        # df(term, fld) is bounded by the input row count: when the
-        # caller already knows the count (``n_rows``, the docs stage's
-        # observed number — free), an input smaller than salt_max
-        # cannot contain a heavy term and the sample is skipped with
-        # NO job at all. Without a known count the sample itself IS
-        # the probe: a small input's 1% sample scan is as cheap as the
-        # former bounded LIMIT probe, and a large input saves one
-        # whole driver round-trip (probe job + sample job -> one
-        # sample job). For a huge FIRST bulk build the sample costs
-        # one extra text-column read — chunk bulk loads into
-        # generations + compact() to avoid it (every generation after
-        # the first plans from the dictionary).
-        if n_rows is not None and n_rows <= self.salt_max_postings:
-            return self.spark.createDataFrame(
-                [], "term string, fld int, n_salts int"
-            )
-        frac = 0.01
-        # token counts come out of the sample PRE-AGGREGATED per Arrow
-        # batch (value_counts in Arrow C++, same clean/dirty hybrid as
-        # the build tokenizer) — the groupBy exchange then carries
-        # O(distinct terms per batch) rows, never one row per token,
-        # and no per-row Python tokenizer runs on the clean rows
-        sampled = df.sample(fraction=frac, seed=42).select(
-            *[
-                F.col(c).alias(f"f{i}")
-                for i, c in enumerate(self.text_cols)
-            ]
-        ).mapInArrow(
-            _term_count_arrow_factory(len(self.text_cols), self.analyzer),
-            "term string, fld int, cnt long",
-        )
-        est = (
-            sampled.groupBy("term", "fld")
-            .agg((F.sum("cnt") / F.lit(frac)).alias("est_df"))
-            .filter(F.col("est_df") > self.salt_max_postings / 2)
-            .select(
-                "term",
-                "fld",
-                F.greatest(
-                    F.lit(1),
-                    F.ceil(F.col("est_df") / self.salt_max_postings).cast("int"),
-                ).alias("n_salts"),
-            )
-        )
-        return est
+    def _salt_threshold(self, n_map: int) -> int:
+        """The local salting threshold for ``n_map`` map tasks: ~
+        salt_max_postings / n_map keeps the reducer-bound contract (an
+        unsalted group's reducer receives at most ~salt_max postings in
+        total); never below one block."""
+        return max(self.block_size, self.salt_max_postings // n_map)
 
     def _stage_gen_dict(self, gen: int, n_docs: int | None = None):
         """Per-generation dictionary: aggregate THIS generation's packed
@@ -1638,35 +1224,15 @@ class IndexBuilder:
              "n_postings": n_postings, "seconds": time.time() - t0},
         )
 
-    def _pack_and_write(self, raw_df: DataFrame, gen: int, heavy_df: DataFrame):
-        """Shared pack tail: salt-assign, shuffle by (slice, term, fld,
-        salt), pack into blocks, write ``postings/gen=G`` and commit the
-        gen-level pack manifest with per-slice metrics. ``raw_df`` is
-        any RAW_SCHEMA plan (the fused tokenizer for a build, the block
-        unpacker for compact/prune) — the salt join stays JVM-side via
-        broadcast of the tiny heavy-term plan."""
-        t0 = time.time()
-        raw = (
-            raw_df.join(F.broadcast(heavy_df), ["term", "fld"], "left")
-            .withColumn(
-                "salt",
-                F.pmod(
-                    F.xxhash64(F.lit(13), F.col("doc_id")),
-                    F.coalesce(F.col("n_salts"), F.lit(1)),
-                ).cast("int"),
-            )
-            .drop("n_salts")
-        )
-        n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        packed = raw.repartition(n_shuffle, "slice", "term", "fld", "salt").mapInArrow(
-            _pack_partition_arrow_factory(self.block_size, self.store_positions),
-            BLOCK_SCHEMA,
-        )
-        self._write_packed(packed, gen, t0)
-
-    def _write_packed(self, packed: DataFrame, gen: int, t0: float):
-        """Shared pack-output tail: write ``postings/gen=G`` and commit
+    def _write_packed(self, partials: DataFrame, gen: int, t0: float):
+        """The ONE pack tail of build, compaction and prune: shuffle
+        PARTIAL_SCHEMA rows by (slice, term, fld, salt), finish the
+        blocks in the pack reducer, write ``postings/gen=G`` and commit
         the gen-level pack manifest with metrics riding the write."""
+        n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        packed = partials.repartition(n_shuffle, "slice", "term", "fld", "salt").mapInArrow(
+            _pack_partials_arrow_factory(self.block_size), BLOCK_SCHEMA
+        )
         # metrics ride the write itself as an Observation — no second
         # job, no metadata re-read of the parquet we just wrote.
         # (observe cannot carry distinct aggregates or a groupBy, so the
@@ -1708,48 +1274,39 @@ class IndexBuilder:
     def _stage_pack_fused(self, df: DataFrame, gen: int):
         """tokenize -> partial blocks -> shuffle -> pack, in ONE job
         (the only pass over the corpus text and the only data shuffle
-        of the build). The shuffle moves PARTIAL_SCHEMA rows — one per
-        (map task, slice, term, fld) group with delta+varint payloads —
-        not one row per posting. Salting is decided INSIDE the map
-        tasks (local cumulative threshold, see _emit_partials): no
+        of the build). Salting is decided INSIDE the map tasks: no
         global heavy-term probe job runs, so the pack job is the
-        build's FIRST job over the corpus text and nothing gates it.
-        The threshold ~ salt_max_postings / n_map_tasks keeps the old
-        reducer-bound contract (an unsalted group's reducer receives
-        at most ~salt_max postings in total)."""
+        build's FIRST job over the corpus text and nothing gates it."""
         t0 = time.time()
         try:
             n_map = max(1, df.rdd.getNumPartitions())
         except Exception:
             n_map = 32
-        threshold = max(
-            self.block_size, self.salt_max_postings // n_map
-        )
-        n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        packed = self._tokenized(
-            df, partial_salt_threshold=threshold
-        ).repartition(
-            n_shuffle, "slice", "term", "fld", "salt"
-        ).mapInArrow(
-            _pack_partials_arrow_factory(self.block_size, self.store_positions),
-            BLOCK_SCHEMA,
-        )
-        self._write_packed(packed, gen, t0)
+        self._write_packed(self._tokenized(df, self._salt_threshold(n_map)), gen, t0)
 
-    def _unpacked_postings(self, gens: list[int]) -> DataFrame:
-        """Shuffle-ready postings reconstructed from the packed blocks
-        of ``gens`` (with a ``gen`` column), for compaction/retention
-        rewrites. Position payloads are re-sliced, never decoded."""
+    def _decoded_postings(self, gens: list[int]) -> DataFrame:
+        """Posting rows (RAW_SCHEMA + ``gen``) decoded from the packed
+        blocks of ``gens``, for compaction/retention rewrites."""
         blocks = self.spark.read.option("basePath", self._p("postings")).parquet(
             *[self._p("postings", f"gen={g}") for g in gens]
         ).select(
             "slice", "term", "fld", "n", "doc_gaps", "tfs", "dls", "positions", "gen"
         )
-        return blocks.mapInArrow(
-            _unpack_blocks_to_raw_factory(self.store_positions, with_gen=True),
-            RAW_SCHEMA + ", gen int",
-        )
+        return blocks.mapInArrow(_decode_postings_arrow_factory(), RAW_SCHEMA + ", gen int")
 
+    def _recut_and_write(self, postings: DataFrame, gen: int):
+        """compact()/prune_index() tail: the surviving posting rows take
+        the build's encoder — the map-side cut (the same cutter and
+        local salting as the tokenizer), then :meth:`_write_packed`.
+        The rows arrive from a join, so the map-task count is taken to
+        be the shuffle partition count."""
+        t0 = time.time()
+        n_map = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        partials = postings.mapInArrow(
+            _recut_arrow_factory(self.block_size, self._salt_threshold(n_map)),
+            PARTIAL_SCHEMA,
+        )
+        self._write_packed(partials, gen, t0)
 
     def repair(self) -> dict:
         """Roll pending compaction/prune markers forward, garbage-collect
@@ -1769,7 +1326,7 @@ class IndexBuilder:
         self._apply_pending_prune()
         live = set(self._live_gens())
         gc: list[str] = []
-        for sub in ("docs", "postings_raw", "postings", "dictionary_gens"):
+        for sub in GEN_SUBDIRS:
             for name in self.fs.listdir(self._p(sub)):
                 if not (name.startswith("gen=") and name[4:].isdigit()):
                     continue
@@ -1820,11 +1377,10 @@ class IndexBuilder:
         violating block can be skipped although it holds a match. An
         index built by the partial-block path between 4126dc7 and the
         fix that sorts its postings by doc violates them. ``compact()``
-        repairs such an index, because its raw-row pack sorts every
-        posting by doc — when it merges: with two or more live
-        generations, or with a new ``n_slices`` (a single generation at
-        the same slicing is left as is). Three Spark jobs; the decode
-        touches doc ids only, never positions."""
+        repairs such an index, with any number of live generations:
+        it decodes every posting and re-cuts them sorted by doc. Three
+        Spark jobs; the decode touches doc ids only, never
+        positions."""
         live = self._live_gens()
         out = {
             "blocks": 0,
@@ -1918,14 +1474,13 @@ class IndexBuilder:
         if not self.fs.exists(marker):
             return
         pend = self.fs.read_json(marker)
-        subs = ("docs", "postings_raw", "postings", "dictionary_gens")
         for g in pend["drop"]:
             self._clear_gen_manifests(g)
-            for d in subs:
+            for d in GEN_SUBDIRS:
                 self.fs.delete(self._p(d, f"gen={g}"), recursive=True)
         for g, tgt in pend["rewrite"]:
             self._clear_gen_manifests(g)
-            for d in subs:
+            for d in GEN_SUBDIRS:
                 self.fs.delete(self._p(d, f"gen={g}"), recursive=True)
             if not self._manifest_done("gendict", tgt):
                 # defensive: derivable from the packed copy
@@ -1945,7 +1500,7 @@ class IndexBuilder:
         Whole generations past the cutoff are dropped O(1) (manifest +
         directory removal — the Iceberg `days(ts)` partition-drop
         analog); boundary generations are rewritten as NEW generations:
-        filtered docs + raw postings land directly in fresh gen
+        filtered docs + re-cut postings land directly in fresh gen
         directories (invisible until their manifest commits), then a
         single atomic marker records the drop/rewrite decision and
         `_apply_pending_prune` rolls it forward — on this call or, after
@@ -1999,12 +1554,10 @@ class IndexBuilder:
             kept_ids = self.spark.read.parquet(
                 self._p("docs", f"gen={tgt}")
             ).select("doc_id")
-            filtered = (
-                self._unpacked_postings([g])
-                .drop("gen")
-                .join(kept_ids, "doc_id", "left_semi")
+            self._recut_and_write(
+                self._decoded_postings([g]).drop("gen").join(kept_ids, "doc_id", "left_semi"),
+                tgt,
             )
-            self._pack_and_write(filtered, tgt, self._salt_plan(None))
             self._stage_gen_dict(tgt)
             pairs.append([g, tgt])
         self.fs.write_json_atomic(
@@ -2052,7 +1605,7 @@ class IndexBuilder:
             return "rolled_back"
         for g in pend["sources"]:
             self._clear_gen_manifests(g)
-            for sub in ("docs", "postings_raw", "postings", "dictionary_gens"):
+            for sub in GEN_SUBDIRS:
                 self.fs.delete(self._p(sub, f"gen={g}"), recursive=True)
         if not self._manifest_done("gendict", target):
             # defensive: derivable from the packed copy
@@ -2082,7 +1635,7 @@ class IndexBuilder:
 
         ``n_slices`` re-slices the index during the merge (the slice
         column is recomputed from doc_id for both the docs and the
-        unpacked postings before the repack — no rebuild from source
+        decoded postings before the re-cut — no rebuild from source
         text needed). This lifts the phrase-matching parallelism
         ceiling of an index built with few slices (engine.py slice
         notes): build small, compact wider as the corpus grows. The new
@@ -2092,9 +1645,12 @@ class IndexBuilder:
 
         The Lucene-merge analog for the incremental path: many small
         per-batch generations make query-side scans open many files;
-        compaction unpacks the sources' packed blocks back into
-        shuffle-ready postings (positions re-sliced, never decoded),
-        merges/repacks them with the docs as one NEW generation.
+        compaction decodes the sources' packed blocks back into posting
+        rows (positions re-sliced, never decoded) and re-cuts the
+        surviving ones through the build's encoder (map-side cut, pack
+        reducer) into one NEW generation. A single generation is
+        re-cut too: that re-sorts every posting by doc, which is how
+        an index with out-of-order blocks is repaired (``verify()``).
         Crash-safe ordering: (1) write the merged docs, packed postings
         and per-gen dictionary directly to the target generation's
         directories (invisible — liveness is manifest-based, never
@@ -2109,16 +1665,13 @@ class IndexBuilder:
         self._finish_pending_compaction()
         new_n = self.n_slices if n_slices is None else int(n_slices)
         gens = self._live_gens()
-        if len(gens) <= 1 and new_n == self.n_slices:
-            # nothing to merge; still heal any stale global view left
-            # by an interrupted earlier lifecycle op
-            self.repair()
-            return {"compacted": False, "gens": len(gens)}
         if not gens:
-            # nothing to merge/re-slice, but an explicit n_slices request
-            # must not be silently ignored (ADVICE r4): with zero live
-            # generations there is no data, so the new slicing can go
-            # live by rewriting the meta directly.
+            # nothing to merge; still heal any stale global view left
+            # by an interrupted earlier lifecycle op. An explicit
+            # n_slices request must not be silently ignored (ADVICE
+            # r4): with no data, the new slicing goes live by rewriting
+            # the meta directly.
+            self.repair()
             if new_n != self.n_slices and self.fs.exists(self._p("index_meta.json")):
                 m = self.fs.read_json(self._p("index_meta.json"))
                 m["n_slices"] = new_n
@@ -2154,13 +1707,13 @@ class IndexBuilder:
         # the (doc_id, gen) semi-join drops superseded duplicates'
         # postings along with their doc rows
         merged = (
-            self._unpacked_postings(gens)
+            self._decoded_postings(gens)
             .join(docs_kept.select("doc_id", "gen"), ["doc_id", "gen"], "left_semi")
             .drop("gen")
         )
         if new_n != self.n_slices:
             merged = merged.withColumn("slice", self._slice_expr(new_n))
-        self._pack_and_write(merged, target, self._salt_plan(None))
+        self._recut_and_write(merged, target)
         self._stage_gen_dict(target)
         self.fs.write_json_atomic(
             self._compact_marker(),

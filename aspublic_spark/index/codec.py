@@ -247,6 +247,115 @@ def binary_from_stream(stream_u8: np.ndarray, elem_starts: np.ndarray) -> "objec
     )
 
 
+def one_chunk(arr):
+    """A (possibly chunked) Arrow array as ONE contiguous array."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if isinstance(arr, pa.ChunkedArray):  # older pyarrow returns ChunkedArray
+        if arr.num_chunks > 1:
+            # a >2GB binary column that cannot combine into one chunk
+            # must fail loudly: silently using chunk 0 only would
+            # corrupt the index at exactly the scale this targets
+            raise RuntimeError(
+                "pack partition column exceeds single-chunk Arrow "
+                f"limit ({arr.num_chunks} chunks); increase "
+                "spark.sql.shuffle.partitions or lower "
+                "salt_max_postings"
+            )
+        arr = arr.chunk(0) if arr.num_chunks else pa.array([], type=arr.type)
+    return arr
+
+
+def binary_view(arr) -> tuple[np.ndarray, np.ndarray]:
+    """``(data_u8, offsets)`` zero-copy view of an Arrow binary column:
+    value k spans ``data[offsets[k]:offsets[k+1]]`` (``offsets`` has
+    n+1 int64 entries). Values are adjacent in Arrow storage, so
+    ``data[offsets[0]:offsets[-1]]`` is every payload back to back."""
+    arr = one_chunk(arr)
+    off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    dbuf = arr.buffers()[2]
+    data = np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None else np.empty(0, dtype=np.uint8)
+    return data, off
+
+
+def decode_blocks(batch, positions: str | None = None) -> dict | None:
+    """Vectorized decode of Arrow rows of packed blocks (columns ``n``,
+    ``doc_gaps``, ``tfs``, ``dls`` and, when asked, ``positions``) —
+    the ONE block decoder of the query evaluator, compaction/prune and
+    ``verify()``.
+
+    Returns ``None`` when the rows hold no postings, else per-POSTING
+    arrays in stored order: ``blk`` (row of each posting), ``doc_id``
+    (int64), ``tf``/``dl`` (int64). Every varint column decodes in ONE
+    pass over the rows' adjacent payloads (varints are self-delimiting).
+    ``positions``:
+
+    - ``"values"``: ``pos``, flat int64 absolute positions; posting k
+      owns ``pos[ps[k]:ps[k]+tf[k]]``, ``ps`` the exclusive cumsum of
+      ``tf``;
+    - ``"bytes"``: ``pos_bytes`` (the position payloads back to back)
+      and ``pos_off`` (n_postings+1 byte offsets: posting k's record
+      ``[tf, first, deltas...]`` spans ``pos_bytes[pos_off[k]:
+      pos_off[k+1]]``). The boundaries come from one varint-end scan;
+      nothing is decoded, so a re-pack re-slices the compressed bytes
+      verbatim. All offsets are 0 when positions are not stored.
+    """
+    nb = batch.num_rows
+    if nb == 0:
+        return None
+    n_np = batch.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
+    total = int(n_np.sum())
+    if total == 0:
+        return None
+    starts = np.zeros(nb, dtype=np.int64)
+    np.cumsum(n_np[:-1], out=starts[1:])
+
+    def payload(name):
+        data, off = binary_view(batch.column(name))
+        return data[off[0] : off[-1]]
+
+    enc = decode_varints(payload("doc_gaps"))
+    enc[starts] = _unzigzag(enc[starts]).view(_U64)
+    csum = np.cumsum(enc, dtype=_U64)
+    base = csum[starts] - enc[starts]
+    out = {
+        "blk": np.repeat(np.arange(nb, dtype=np.int64), n_np),
+        "doc_id": (csum - np.repeat(base, n_np)).view(_I64),
+        "tf": decode_varints(payload("tfs")).astype(np.int64),
+        "dl": decode_varints(payload("dls")).astype(np.int64),
+    }
+    tfs = out["tf"]
+    if positions == "values":
+        flat = decode_varints(payload("positions")).astype(np.int64)
+        # record k is [n=tf_k, first, deltas...]: drop the headers, then
+        # grouped cumsum turns deltas into absolute positions
+        hstart = np.zeros(total, dtype=np.int64)
+        np.cumsum(tfs[:-1] + 1, out=hstart[1:])
+        keep = np.ones(flat.size, dtype=bool)
+        keep[hstart] = False
+        c = np.cumsum(flat[keep])
+        vstart = np.zeros(total, dtype=np.int64)
+        np.cumsum(tfs[:-1], out=vstart[1:])
+        pbase = np.where(vstart > 0, c[vstart - 1], 0)
+        out["pos"] = c - np.repeat(pbase, tfs)
+    elif positions == "bytes":
+        pb = payload("positions")
+        pos_off = np.zeros(total + 1, dtype=np.int64)
+        if pb.size:
+            # posting k's record starts right after the last byte of
+            # varint rf[k] - 1, rf the exclusive cumsum of tf + 1
+            ends = np.flatnonzero((pb & 0x80) == 0)
+            rf = np.cumsum(tfs[:-1] + 1)
+            pos_off[1:-1] = ends[rf - 1] + 1
+            pos_off[-1] = pb.size
+        out["pos_bytes"], out["pos_off"] = pb, pos_off
+    return out
+
+
 def pack_all_blocks(
     sorted_doc_ids: np.ndarray,
     tfs: np.ndarray,

@@ -55,6 +55,7 @@ from aspublic_spark.index import codec
 from aspublic_spark.index.build import (
     dictionary_location,
     live_gen_paths,
+    read_index_meta,
     read_stats,
 )
 from aspublic_spark.index.fsio import fs_for
@@ -73,84 +74,14 @@ def _tf_key_col():
     return F.concat_ws("\x00", F.col("term"), F.col("fld").cast("string"))
 
 
-def _decode_blocks_batch(batch, with_positions: bool):
-    """Vectorized decode of one Arrow batch of packed block rows.
-
-    Returns ``None`` for an empty batch, else a dict with per-POSTING
-    arrays: ``blk`` (block ordinal of each posting), ``doc_id`` (int64),
-    ``tf``/``dl`` (int64) and, when requested, ``pos`` (flat int64
-    absolute positions; posting k owns ``pos[pstart[k]:pstart[k]+tf[k]]``
-    with ``pstart`` the exclusive cumsum of ``tf``). Every varint
-    column decodes in ONE pass over the batch's concatenated payloads
-    (varints are self-delimiting and Arrow binary storage is adjacent),
-    replacing the per-block Python loop that dominated the old unpack."""
-    import pyarrow as pa
-
-    nb = batch.num_rows
-    if nb == 0:
-        return None
-    n_np = batch.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-    total = int(n_np.sum())
-    if total == 0:
-        return None
-    starts = np.zeros(nb, dtype=np.int64)
-    np.cumsum(n_np[:-1], out=starts[1:])
-    blk_of_post = np.repeat(np.arange(nb, dtype=np.int64), n_np)
-
-    def _concat_bytes(name):
-        col = batch.column(name)
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        voff = np.frombuffer(col.buffers()[1], dtype=np.int32)[
-            col.offset : col.offset + len(col) + 1
-        ].astype(np.int64)
-        dbuf = col.buffers()[2]
-        data = (
-            np.frombuffer(dbuf, dtype=np.uint8)
-            if dbuf is not None
-            else np.empty(0, dtype=np.uint8)
-        )
-        return data[voff[0] : voff[-1]]
-
-    enc = codec.decode_varints(_concat_bytes("doc_gaps").tobytes())
-    firsts = codec._unzigzag(enc[starts]).view(np.uint64)
-    enc[starts] = firsts
-    csum = np.cumsum(enc, dtype=np.uint64)
-    base = csum[starts] - enc[starts]
-    doc_ids = (csum - np.repeat(base, n_np)).view(np.int64)
-
-    tfs = codec.decode_varints(_concat_bytes("tfs").tobytes()).astype(np.int64)
-    dls = codec.decode_varints(_concat_bytes("dls").tobytes()).astype(np.int64)
-    out = {"blk": blk_of_post, "doc_id": doc_ids, "tf": tfs, "dl": dls}
-
-    if with_positions:
-        flat = codec.decode_varints(_concat_bytes("positions").tobytes()).astype(
-            np.int64
-        )
-        # record k is [n=tf_k, first, deltas...]: drop the headers, then
-        # grouped cumsum turns deltas into absolute positions
-        lens = tfs + 1
-        hstart = np.zeros(lens.size, dtype=np.int64)
-        np.cumsum(lens[:-1], out=hstart[1:])
-        keep = np.ones(flat.size, dtype=bool)
-        keep[hstart] = False
-        vals = flat[keep]
-        c = np.cumsum(vals)
-        vstart = np.zeros(tfs.size, dtype=np.int64)
-        np.cumsum(tfs[:-1], out=vstart[1:])
-        pbase = np.where(vstart > 0, c[vstart - 1], 0)
-        out["pos"] = c - np.repeat(pbase, tfs)
-    return out
-
-
 def _unpack_arrow_factory(with_positions: bool):
     """mapInArrow fn: packed block rows -> per-posting rows
-    (_UNPACK_SCHEMA). Fully vectorized via :func:`_decode_blocks_batch`."""
+    (_UNPACK_SCHEMA). Fully vectorized via :func:`codec.decode_blocks`."""
     import pyarrow as pa
 
     def unpack(batches):
         for batch in batches:
-            d = _decode_blocks_batch(batch, with_positions)
+            d = codec.decode_blocks(batch, "values" if with_positions else None)
             if d is None:
                 continue
             blk = d["blk"]
@@ -368,7 +299,7 @@ def _fused_score_factory(spec: dict):
         if tbl.num_rows == 0:
             return
         rb = tbl.to_batches()[0]
-        d = _decode_blocks_batch(rb, spec["need_pos"])
+        d = codec.decode_blocks(rb, "values" if spec["need_pos"] else None)
         if d is None:
             return
         blk = d["blk"]
@@ -863,18 +794,20 @@ class SearchEngine:
         # same filesystem seam as the builder: plain paths -> LocalFS,
         # URIs (hdfs://, s3a://, ...) -> the Hadoop client
         self.fs = fs_for(index_dir, spark)
-        meta = self.fs.read_json(os.path.join(index_dir, "index_meta.json"))
+        meta = read_index_meta(index_dir, self.fs)
+        if meta is None:
+            raise FileNotFoundError(f"no index at {index_dir} (index_meta.json missing)")
         self.key_cols: list[str] = meta["key_cols"]
         self.meta_cols: list[str] = meta["meta_cols"]
         self.store_positions: bool = meta["store_positions"]
-        self.block_size: int = meta.get("block_size", 128)
-        self.n_slices: int = int(meta.get("n_slices") or 8)
-        self.text_cols: list[str] = meta.get("text_cols", [meta.get("text_col", "text")])
+        self.block_size: int = meta["block_size"]
+        self.n_slices: int = int(meta["n_slices"])
+        self.text_cols: list[str] = meta["text_cols"]
         self.n_fields = len(self.text_cols)
         # query-side analyzer always mirrors the index-side one
         from aspublic_spark.functions.stemmer import get_analyzer
 
-        self.analyzer: str = meta.get("analyzer", "fts5")
+        self.analyzer: str = meta["analyzer"]
         self._tok = get_analyzer(self.analyzer)
         st_rows = read_stats(index_dir, self.fs)
         self.n_docs = int(st_rows[0]["n_docs"])

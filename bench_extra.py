@@ -15,6 +15,12 @@
                                              # Python worker: an empty
                                              # mapInArrow over 1/4/8/16
                                              # partitions, median of REPEATS
+  python bench_extra.py lifecycle [REPEATS] [N_TURNS]
+                                             # compact() and prune_index()
+                                             # of one fixed 3-generation
+                                             # index (default 20k turns),
+                                             # each on a fresh copy,
+                                             # median of REPEATS
 
 Same conditions as the frozen bench: materialized sf input, local[32]
 (honouring $SPARK_GRAFT_CPUS), engine with cache_tables=True, one
@@ -234,6 +240,54 @@ def sf1_decade(n_turns: int = 2_000_000):
     print("SF1", {"build_s": round(build_secs, 2), "tps": round(n_turns / build_secs), **out})
 
 
+def lifecycle(repeats: int = 5, n_turns: int = 20_000):
+    """Time the index lifecycle ops on a fixed input: build one
+    3-generation index (the corpus split into thirds by ts), then per
+    repeat copy it and time ``compact()`` (merge all three), copy it
+    again and time ``prune_index()`` at the corpus's middle ts (drops
+    generation 0, rewrites generation 1). Prints every repeat and the
+    medians; the build itself is not timed."""
+    import datetime as dt
+    import shutil
+    import statistics
+
+    from pyspark.sql import functions as F
+
+    from aspublic_spark.index import IndexBuilder
+    from aspublic_spark.session import get_spark
+
+    spark = get_spark("bench_extra_lifecycle", cpus=CPUS, shuffle_partitions=CPUS)
+    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    df = _materialize_input(spark, n_turns, 42, f"{scratch}/bench_input_lifecycle_{n_turns}")
+    t = F.col("ts").cast("long")
+    lo, hi = df.agg(F.min(t), F.max(t)).first()
+    cuts = [lo + (hi - lo) * k / 3 for k in (1, 2)]
+    parts = [df.filter(t < cuts[0]), df.filter((t >= cuts[0]) & (t < cuts[1])), df.filter(t >= cuts[1])]
+    base = f"/tmp/bench_idx_lifecycle_{n_turns}"
+    shutil.rmtree(base, ignore_errors=True)
+    b = IndexBuilder(spark, base)
+    for g, part in enumerate(parts):
+        b.build(part, gen=g)
+    cutoff = dt.datetime.fromtimestamp(lo + (hi - lo) / 2, tz=dt.timezone.utc).replace(tzinfo=None)
+    work = base + "_work"
+    times: dict[str, list[float]] = {"compact_s": [], "prune_s": []}
+    for i in range(repeats):
+        for name, op in (
+            ("compact_s", lambda ib: ib.compact()),
+            ("prune_s", lambda ib: ib.prune_index(cutoff)),
+        ):
+            shutil.rmtree(work, ignore_errors=True)
+            shutil.copytree(base, work)
+            ib = IndexBuilder(spark, work)
+            t0 = time.perf_counter()
+            op(ib)
+            times[name].append(time.perf_counter() - t0)
+        print(f"repeat {i}: " + " ".join(f"{k}={v[-1]:.3f}" for k, v in times.items()), flush=True)
+    shutil.rmtree(work, ignore_errors=True)
+    print("LIFECYCLE", {"n_turns": n_turns, "repeats": repeats,
+                        **{k: round(statistics.median(v), 3) for k, v in times.items()}}, flush=True)
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "plans":
@@ -246,5 +300,10 @@ if __name__ == "__main__":
         python_task_cost(int(sys.argv[2]) if len(sys.argv) > 2 else 5)
     elif cmd == "sf1":
         sf1_decade(int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000)
+    elif cmd == "lifecycle":
+        lifecycle(
+            int(sys.argv[2]) if len(sys.argv) > 2 else 5,
+            int(sys.argv[3]) if len(sys.argv) > 3 else 20_000,
+        )
     else:
         raise SystemExit(f"unknown command {cmd}")

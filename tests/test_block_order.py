@@ -22,6 +22,7 @@ from aspublic_spark.index import codec
 from aspublic_spark.index.build import IndexBuilder
 from aspublic_spark.query.engine import SearchEngine
 from aspublic_spark.tables import synth_transcripts
+from tests.test_incremental import assert_same_index, index_postings
 
 N_TURNS = 3000
 
@@ -126,12 +127,22 @@ def test_verify_counts_each_violation(spark, workdir, plain_idx):
 
 
 def test_compact_repairs_block_order(spark, workdir, plain_idx):
-    """The repair path verify() names: a merging compact() re-packs
-    every posting sorted by doc."""
+    """The repair path verify() names: compact() re-cuts every posting
+    sorted by doc, also on a single generation at the same slicing."""
     idx = os.path.join(workdir, "verify_repair_idx")
     _corrupt(plain_idx, idx, duplicate=False)
     b = IndexBuilder(spark, idx)
     before = b.verify()
     assert (before["blocks_out_of_order"], before["blocks_bad_range"]) == (1, 1)
-    assert b.compact(n_slices=3)["compacted"]
+    # the re-cut keeps every decoded posting (as stored, so the
+    # reversed block's ids keep their misassigned tfs) in valid blocks
+    stored = index_postings(idx)
+    assert b.compact()["compacted"]
+    assert index_postings(idx) == stored
     assert IndexBuilder(spark, idx).verify()["ok"]
+    # an intact single generation re-cuts to the index it was
+    intact = os.path.join(workdir, "verify_recut_idx")
+    shutil.rmtree(intact, ignore_errors=True)
+    shutil.copytree(plain_idx, intact)
+    assert IndexBuilder(spark, intact).compact()["compacted"]
+    assert_same_index(spark, intact, plain_idx)

@@ -10,12 +10,22 @@ build of the union; (2) refresh_global still works after the raw
 postings of EVERY generation are deleted — it cannot be reading them.
 """
 
+import json
 import os
 import shutil
 
+import numpy as np
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
-from aspublic_spark.index.build import IndexBuilder
+from aspublic_spark.index import codec
+from aspublic_spark.index.build import (
+    IndexBuilder,
+    dictionary_location,
+    live_gen_paths,
+    read_stats,
+)
 from aspublic_spark.query.engine import SearchEngine
 from aspublic_spark.tables import synth_transcripts
 
@@ -28,8 +38,6 @@ def _builder(spark, idx):
 
 
 def _dict_rows(spark, idx):
-    from aspublic_spark.index.build import dictionary_location
-
     return sorted(
         (r["term"], r["df"], r["cf"], r["max_tf"], r["min_dl"])
         for r in spark.read.parquet(dictionary_location(idx)).collect()
@@ -37,10 +45,55 @@ def _dict_rows(spark, idx):
 
 
 def _stats_row(spark, idx):
-    from aspublic_spark.index.build import read_stats
-
     r = read_stats(idx)[0]
     return (r["n_docs"], round(r["avgdl"], 12), r["total_tokens"])
+
+
+def index_postings(idx) -> list[tuple]:
+    """Every live posting, decoded from the stored blocks: sorted
+    (slice, term, fld, doc_id, tf, dl, positions) tuples."""
+    rows = []
+    for gen_dir in live_gen_paths(idx, "postings"):
+        for name in os.listdir(gen_dir):
+            if not name.startswith("slice="):
+                continue
+            tbl = pq.read_table(os.path.join(gen_dir, name))
+            d = codec.decode_blocks(tbl, "values")
+            if d is None:
+                continue
+            terms, flds = tbl.column("term").to_pylist(), tbl.column("fld").to_pylist()
+            ps = np.concatenate([[0], np.cumsum(d["tf"])])
+            for k, b in enumerate(d["blk"].tolist()):
+                rows.append((
+                    int(name[len("slice="):]), terms[b], flds[b], int(d["doc_id"][k]),
+                    int(d["tf"][k]), int(d["dl"][k]), tuple(d["pos"][ps[k]:ps[k + 1]].tolist()),
+                ))
+    return sorted(rows)
+
+
+def assert_same_index(spark, idx, want_idx):
+    """``idx`` holds the same index as ``want_idx`` (a one-shot build of
+    the same rows): decoded postings with positions, dictionary rows and
+    stats.json are equal, whatever the block and salt layout, and
+    ``verify()`` finds no violation."""
+    assert index_postings(idx) == index_postings(want_idx)
+
+    def dict_rows(i):
+        return sorted(tuple(r.values()) for r in pq.read_table(dictionary_location(i)).to_pylist())
+
+    assert dict_rows(idx) == dict_rows(want_idx)
+    assert read_stats(idx) == read_stats(want_idx)
+    rep = IndexBuilder(spark, idx).verify()
+    assert rep["ok"] and rep["blocks"] > 0, rep
+
+
+def full_blocks(idx) -> int:
+    """Stored blocks holding exactly block_size postings."""
+    n = 0
+    size = json.load(open(os.path.join(idx, "index_meta.json")))["block_size"]
+    for gen_dir in live_gen_paths(idx, "postings"):
+        n += int((pq.read_table(gen_dir, columns=["n"]).column("n").to_numpy() == size).sum())
+    return n
 
 
 def test_incremental_merge_equals_full_rebuild(spark, workdir):
@@ -72,6 +125,12 @@ def test_incremental_merge_equals_full_rebuild(spark, workdir):
         for r in SearchEngine(spark, full_idx).search(q, k=100).df.collect()
     ]
     assert a == c and len(a) > 0
+
+    # the one encoder: compacting the three generations re-cuts their
+    # postings into the same index a one-shot build writes
+    assert b.compact()["compacted"]
+    assert_same_index(spark, inc_idx, full_idx)
+    assert full_blocks(inc_idx) > 0
 
 
 def test_refresh_global_never_reads_postings(spark, workdir):
@@ -142,6 +201,8 @@ def test_index_retention_prune(spark, workdir):
     ]
     assert got == want and len(got) == 18  # 6 surviving MID + 12 NEW
 
+    assert_same_index(spark, idx, fresh_idx)
+
     # idempotent: a second prune at the same cutoff is a no-op
     assert b.prune_index(cutoff)["pruned"] is False
 
@@ -154,6 +215,25 @@ def test_reopen_adopts_stored_layout(spark, workdir):
     b2 = IndexBuilder(spark, idx, n_slices=16, block_size=999, text_col="nope")
     assert b2.n_slices == 2 and b2.block_size == 8 and b2.text_cols == ["text"]
     assert b2.key_cols == ["conv_id", "turn_idx"]
+
+
+def test_other_raw_format_is_refused(spark, workdir):
+    """An index whose meta records another raw postings format is
+    refused by every reader and writer, not only by build()."""
+    idx = os.path.join(workdir, "old_format_idx")
+    shutil.rmtree(idx, ignore_errors=True)
+    _builder(spark, idx).build(synth_transcripts(spark, 20, seed=3))
+    meta_path = os.path.join(idx, "index_meta.json")
+    meta = json.load(open(meta_path))
+    meta["raw_format"] = 3
+    json.dump(meta, open(meta_path, "w"))
+    for use in (
+        lambda: IndexBuilder(spark, idx).compact(),
+        lambda: IndexBuilder(spark, idx).verify(),
+        lambda: SearchEngine(spark, idx),
+    ):
+        with pytest.raises(ValueError, match="format 3.*rebuild into a fresh directory"):
+            use()
 
 
 def test_prune_crash_recovery_rolls_forward(spark, workdir):

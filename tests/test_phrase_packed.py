@@ -1,6 +1,6 @@
 """Differential test for the packed phrase matcher.
 
-The query evaluator's vectorized phrase match (engine._decode_blocks_batch
+The query evaluator's vectorized phrase match (codec.decode_blocks
 position decode — record split via tfs, grouped cumsum — then
 engine._phrase_set_from_cat's int64 key packing and np.intersect1d
 chain) is checked

@@ -3,9 +3,11 @@
 The optimizations are performance-only; these tests pin the invariants
 they rely on:
 
-1. The Arrow-native tokenize fast path emits postings byte-identical to
-   the per-row Python tokenizer (including null / empty / whitespace /
-   dirty-row edge cases).
+1. The Arrow-native tokenize fast path emits the same postings as the
+   per-row Python tokenizer (including null / empty / whitespace /
+   dirty-row edge cases), and a whole build stores exactly the
+   postings a per-document Python reference derives from the
+   analyzer's tokens.
 2. ``encode_grouped_records_offsets`` (the shared-buffer positions
    encoder) slices exactly like the per-group ``bytes`` encoder.
 3. The one query evaluator (the slice-local mapInArrow pass) matches
@@ -32,21 +34,31 @@ from tests.test_bm25_oracle import _oracle
 from tests.test_fts5_tree import _fts5_available
 
 
-def _collect_postings(factory, batch):
+def _collect_postings(factory, batch, store_positions):
+    """Decode the factory's partial-block output back to sorted
+    (slice, term, fld, doc_id, tf, dl, positions) postings."""
     rows = []
     for rb in factory([batch]):
-        d = rb.to_pydict()
-        for i in range(rb.num_rows):
-            rows.append(
-                tuple(
-                    d[c][i]
-                    for c in ["slice", "doc_id", "fld", "dl", "term", "tf", "positions"]
-                )
-            )
+        d = codec.decode_blocks(rb, "values" if store_positions else None)
+        cols = {c: rb.column(c).to_pylist() for c in ("slice", "term", "fld")}
+        ps = np.concatenate([[0], np.cumsum(d["tf"])])
+        for k, b in enumerate(d["blk"].tolist()):
+            pos = tuple(d["pos"][ps[k] : ps[k + 1]].tolist()) if store_positions else ()
+            rows.append((
+                cols["slice"][b], cols["term"][b], cols["fld"][b], int(d["doc_id"][k]),
+                int(d["tf"][k]), int(d["dl"][k]), pos,
+            ))
     return sorted(rows)
 
 
-def _force_python_factory(store_positions, n_fields=1):
+def _factory(store_positions, analyzer="fts5"):
+    # small blocks so groups are cut; no salting outside a task
+    return _raw_postings_arrow_factory(
+        store_positions, 1, analyzer, salt_threshold=10**9, block_size=2
+    )
+
+
+def _force_python_factory(store_positions):
     """Build the factory with the Arrow fast path disabled (analyzer
     name unknown to the fast-path gate, tokenizer forced to fts5)."""
     from aspublic_spark.functions import stemmer
@@ -54,9 +66,7 @@ def _force_python_factory(store_positions, n_fields=1):
     orig = stemmer.get_analyzer
     stemmer.get_analyzer = lambda name: orig("fts5")
     try:
-        return _raw_postings_arrow_factory(
-            store_positions, n_fields, analyzer="__force_python__"
-        )
+        return _factory(store_positions, analyzer="__force_python__")
     finally:
         stemmer.get_analyzer = orig
 
@@ -86,10 +96,8 @@ def test_arrow_tokenize_path_matches_python_path():
         names=["slice", "doc_id", "f0"],
     )
     for store_positions in (True, False):
-        new = _collect_postings(
-            _raw_postings_arrow_factory(store_positions, 1, "fts5"), batch
-        )
-        old = _collect_postings(_force_python_factory(store_positions), batch)
+        new = _collect_postings(_factory(store_positions), batch, store_positions)
+        old = _collect_postings(_force_python_factory(store_positions), batch, store_positions)
         assert new == old
         assert new  # non-vacuous
 
@@ -185,59 +193,48 @@ def test_fused_queries_score_like_bm25_oracle(spark, fused_idx, fused_corpus):
             assert abs(g[2] - w[2]) < 1e-9, (q, g, w)
 
 
-def test_partial_block_build_equals_raw_row_build(spark, workdir):
-    """The build's partial-block shuffle format must produce an index
-    content-identical to the raw-posting-row path (which compaction
-    still uses): same dictionary, same stats, same decoded postings
-    (salt/block layout may differ — salt is a shuffle key only)."""
-    import aspublic_spark.index.build as B
+def test_partial_block_build_equals_python_reference(spark, workdir):
+    """A salted partial-block build stores exactly the postings (with
+    positions and dl), dictionary and stats that a per-document Python
+    reference derives from the analyzer's tokens."""
+    from collections import defaultdict
 
-    df = synth_transcripts(spark, 3000, seed=42)
-
-    def build(idx, use_partial):
-        shutil.rmtree(idx, ignore_errors=True)
-        b = B.IndexBuilder(
-            spark, idx, n_slices=4, block_size=32, salt_max_postings=300
-        )
-        if use_partial:
-            b.build(df)
-            return b
-        orig = B.IndexBuilder._stage_pack_fused
-
-        def legacy(self, d, gen, n_rows=None, heavy=None):
-            self._pack_and_write(
-                self._tokenized(d), gen, self._salt_plan(d, n_rows=n_rows)
-            )
-
-        B.IndexBuilder._stage_pack_fused = legacy
-        try:
-            b.build(df)
-        finally:
-            B.IndexBuilder._stage_pack_fused = orig
-        return b
-
-    new_idx = os.path.join(workdir, "r6_partial_new")
-    old_idx = os.path.join(workdir, "r6_partial_old")
-    bn, bo = build(new_idx, True), build(old_idx, False)
-    assert sorted(bn.dictionary_df().collect()) == sorted(bo.dictionary_df().collect())
-    assert B.read_stats(new_idx) == B.read_stats(old_idx)
     import pyspark.sql.functions as F
 
-    def postings(idx):
-        blocks = spark.read.option("basePath", idx + "/postings").parquet(
-            idx + "/postings/gen=0"
-        )
-        return sorted(SearchEngine(spark, idx).unpack(blocks, with_positions=True).collect())
+    from aspublic_spark.functions.stemmer import get_analyzer
+    from aspublic_spark.index.build import read_stats
+    from tests.test_incremental import index_postings
 
-    assert postings(new_idx) == postings(old_idx)
+    df = synth_transcripts(spark, 3000, seed=42)
+    idx = os.path.join(workdir, "r6_partial_ref")
+    shutil.rmtree(idx, ignore_errors=True)
+    b = IndexBuilder(spark, idx, n_slices=4, block_size=32, salt_max_postings=300)
+    b.build(df)
+
+    tokenize = get_analyzer("fts5")
+    postings, n_docs, n_tok = [], 0, 0
+    dic = defaultdict(lambda: [0, 0, 0, 1 << 30])  # df, cf, max_tf, min_dl
+    for r in df.select(b.doc_id_col().alias("doc_id"), "text").collect():
+        toks = tokenize(r["text"] or "")
+        n_docs, n_tok = n_docs + 1, n_tok + len(toks)
+        at = defaultdict(list)
+        for p, t in enumerate(toks):
+            at[t].append(p)
+        for t, pos in at.items():
+            postings.append((t, 0, r["doc_id"], len(pos), len(toks), tuple(pos)))
+            e = dic[t]
+            e[0], e[1] = e[0] + 1, e[1] + len(pos)
+            e[2], e[3] = max(e[2], len(pos)), min(e[3], len(toks))
+    assert sorted(p[1:] for p in index_postings(idx)) == sorted(postings)
+    assert sorted(tuple(r) for r in b.dictionary_df().collect()) == sorted(
+        (t, 0, *e) for t, e in dic.items()
+    )
+    assert read_stats(idx) == [
+        {"fld": 0, "n_docs": n_docs, "avgdl": n_tok / n_docs, "total_tokens": n_tok}
+    ]
     # heavy-term salting engaged through the task-id scheme
-    mx = spark.read.parquet(new_idx + "/postings/gen=0").agg(F.max("salt")).first()[0]
+    mx = spark.read.parquet(idx + "/postings/gen=0").agg(F.max("salt")).first()[0]
     assert mx is not None and mx > 0
-    for q in ["zebra", "the data", '"the the"']:
-        assert (
-            SearchEngine(spark, new_idx).search(q, k=50).df.collect()
-            == SearchEngine(spark, old_idx).search(q, k=50).df.collect()
-        )
 
 
 def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):

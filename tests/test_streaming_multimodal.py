@@ -581,6 +581,7 @@ def test_compact_heals_late_duplicates(spark, workdir):
     exact-once repair pass — afterwards the index equals a fresh build
     over the unique latest rows."""
     from aspublic_spark.index.build import IndexBuilder
+    from tests.test_incremental import assert_same_index
 
     idx = os.path.join(workdir, "heal_idx")
     docs = os.path.join(workdir, "heal_docs")
@@ -605,6 +606,7 @@ def test_compact_heals_late_duplicates(spark, workdir):
         spark, fresh, key_cols=["conv_id", "turn_idx"], text_col="text",
         meta_cols=["role", "tool", "ts"], n_slices=2, block_size=8,
     ).build(late_dup)  # the kept copies are the LATER ones
+    assert_same_index(spark, idx, fresh)
     got = [
         (r["conv_id"], r["turn_idx"], round(r["score"], 9))
         for r in eng.search("sample status", k=100).df.collect()
