@@ -1,4 +1,5 @@
-"""Inverted-index build: ONE pass tokenize -> shuffle -> packed blocks.
+"""Inverted-index build: ONE pass text exchange -> tokenize -> shuffle ->
+packed blocks.
 
 Spark-native analog of the reference's index-maintenance path, where
 every ingested row is tokenized and merged into an FTS5 inverted index
@@ -18,13 +19,16 @@ set of explicit columnar tables, built by DataFrame jobs:
 
 Scale design (the part that must survive 1000 executors / 100 TB):
 
-- the whole build is ONE pass over the corpus: a mapInArrow
-  tokenize (linear in tokens; postings leave the Python worker
-  already cut into varint-encoded partial blocks) feeds the pack
-  shuffle DIRECTLY — no
+- the whole build is ONE pass over the corpus: the text rows are
+  hash-exchanged on doc_id into one partition per input split, and at
+  least one per core, so the tokenize runs on every core whatever the
+  input's row-group layout; a mapInArrow tokenize (linear in tokens;
+  postings leave the Python worker already cut into varint-encoded
+  partial blocks) then feeds the pack shuffle DIRECTLY — no
   intermediate raw-postings table is ever written or re-read, and the
   packed blocks are the ONLY stored copy of the postings (~half the
-  index storage of a raw+packed layout);
+  index storage of a raw+packed layout). The build's two data
+  shuffles are this text exchange and the pack shuffle;
 - the pack shuffle keys on (slice, term, fld, salt): a map task
   salts a (slice, term, fld) group with its own task id once its
   local posting count for the group crosses ~salt_max_postings /
@@ -87,7 +91,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aspublic_spark import BM25_B, BM25_K1
 from aspublic_spark.index import codec
 from aspublic_spark.index.fsio import FileSystem, LocalFS, fs_for
 
@@ -203,9 +206,11 @@ class _LocalSalt:
     heavy-term probe job. With threshold L ~= salt_max_postings /
     n_map_tasks, an unsalted group receives < L postings from each task,
     so its reducer group stays ~salt_max bounded; a genuinely heavy term
-    crosses L in every task and spreads one salt per task. Any
-    assignment is result-identical: salt is purely a shuffle-splitting
-    key."""
+    crosses L in every task and spreads one salt per task. In a build
+    n_map_tasks is exact: the tokenize runs behind an exchange of
+    exactly that many partitions (compaction and prune take
+    ``spark.sql.shuffle.partitions`` as theirs). Any assignment is
+    result-identical: salt is purely a shuffle-splitting key."""
 
     def __init__(self, threshold: int):
         self.threshold = threshold
@@ -579,13 +584,6 @@ def _recut_arrow_factory(block_size: int, salt_threshold: int):
         )
 
     return run
-
-
-def bm25_weight_col(tf_col, dl_col, avgdl: float):
-    """Same weight as a Catalyst column expression (JVM-side, codegen)."""
-    tf = tf_col.cast("double")
-    dl = dl_col.cast("double")
-    return tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
 
 
 def _pack_partials_arrow_factory(block_size: int):
@@ -1011,17 +1009,28 @@ class IndexBuilder:
         ).parquet(self._p("docs", f"gen={gen}"))
         return int(obs.get["n"] or 0)
 
-    def _tokenized(self, df: DataFrame, salt_threshold: int) -> DataFrame:
-        """Input scan -> PARTIAL_SCHEMA rows (IN FLIGHT only).
+    def _tokenized(self, df: DataFrame, n_map: int) -> DataFrame:
+        """Input scan -> text exchange -> PARTIAL_SCHEMA rows (IN FLIGHT
+        only).
 
-        ONE mapInArrow over (slice, doc_id, text): tokenize, group
-        term->positions linearly (batch-level factorize + lexsort, no
-        per-doc Python beyond the tokenizer), cut partial blocks — one
-        row per full block plus one tail per (task, slice, term, fld)
-        group, salted locally (:class:`_LocalSalt`) — collapsing the
-        pack exchange and both mapInArrow boundary crossings to
-        O(blocks) rows. No action of its own — this plan feeds the pack
-        shuffle directly."""
+        The (slice, doc_id, text) rows are hash-exchanged on doc_id into
+        ``n_map`` partitions first, so the tokenize runs ``n_map`` tasks
+        whatever the input's split layout (a parquet row group cannot be
+        split: a small one-row-group input would otherwise tokenize in
+        one task). The hash key keeps a retried task's rows identical
+        (a column-less round-robin repartition would sort the text rows
+        to stay deterministic) and spreads evenly, doc_id being a key or
+        an xxhash64. AQE never coalesces an explicit partition count, so
+        ``n_map`` is exactly the task count the salting threshold is
+        sized for.
+
+        Then ONE mapInArrow: tokenize, group term->positions linearly
+        (batch-level factorize + lexsort, no per-doc Python beyond the
+        tokenizer), cut partial blocks — one row per full block plus one
+        tail per (task, slice, term, fld) group, salted locally
+        (:class:`_LocalSalt`) — collapsing the pack exchange and both
+        mapInArrow boundary crossings to O(blocks) rows. No action of
+        its own — this plan feeds the pack shuffle directly."""
         doc_id = self.doc_id_col()
         src = (
             df.select(
@@ -1031,10 +1040,10 @@ class IndexBuilder:
             .withColumn("slice", self._slice_col())
             .select("slice", "doc_id", *[f"f{i}" for i in range(len(self.text_cols))])
         )
-        return src.mapInArrow(
+        return src.repartition(n_map, "doc_id").mapInArrow(
             _raw_postings_arrow_factory(
                 self.store_positions, len(self.text_cols), self.analyzer,
-                salt_threshold, self.block_size,
+                self._salt_threshold(n_map), self.block_size,
             ),
             PARTIAL_SCHEMA,
         )
@@ -1272,17 +1281,15 @@ class IndexBuilder:
         )
 
     def _stage_pack_fused(self, df: DataFrame, gen: int):
-        """tokenize -> partial blocks -> shuffle -> pack, in ONE job
-        (the only pass over the corpus text and the only data shuffle
-        of the build). Salting is decided INSIDE the map tasks: no
-        global heavy-term probe job runs, so the pack job is the
-        build's FIRST job over the corpus text and nothing gates it."""
+        """text exchange -> tokenize -> partial blocks -> pack shuffle
+        -> pack, in ONE job (the build's only pass over the corpus
+        text). Salting is decided INSIDE the tokenize tasks: no global
+        heavy-term probe job runs, so nothing gates this job. The
+        tokenize runs one task per input split and at least one per
+        core (:meth:`_tokenized`)."""
         t0 = time.time()
-        try:
-            n_map = max(1, df.rdd.getNumPartitions())
-        except Exception:
-            n_map = 32
-        self._write_packed(self._tokenized(df, self._salt_threshold(n_map)), gen, t0)
+        n_map = max(df.rdd.getNumPartitions(), self.spark.sparkContext.defaultParallelism)
+        self._write_packed(self._tokenized(df, n_map), gen, t0)
 
     def _decoded_postings(self, gens: list[int]) -> DataFrame:
         """Posting rows (RAW_SCHEMA + ``gen``) decoded from the packed

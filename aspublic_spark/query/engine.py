@@ -267,10 +267,10 @@ def _fused_score_factory(spec: dict):
     fold too, with weight 0.0 (x + 0.0 == x, so no score changes).
 
     Scores are bit-identical across any partitioning (north-rule rank
-    identity): the BM25 weight uses the same elementwise double ops in
-    the same association order as ``bm25_weight_col``, and per-doc
-    contributions are summed SEQUENTIALLY in canonical (label, fld, w)
-    ascending order (the j-th item of every doc's sorted run is added
+    identity): each posting's BM25 weight is one elementwise double
+    expression, tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl)),
+    and per-doc contributions are summed SEQUENTIALLY in canonical
+    (label, fld, w) ascending order (the j-th item of every doc's sorted run is added
     in iteration j — never a pairwise numpy reduction, whose different
     association would drift last ulps). A prefix stem scores as ONE
     virtual label ``stem*`` per (doc, fld) with tf summed over its

@@ -21,6 +21,14 @@
                                              # index (default 20k turns),
                                              # each on a fresh copy,
                                              # median of REPEATS
+  python bench_extra.py build [REPEATS]      # in-process builds of three
+                                             # fixed inputs (a 400-turn
+                                             # batch, the 20k-turn perfbench
+                                             # backfill corpus in one row
+                                             # group, 200k turns in 8 row
+                                             # groups), interleaved, median
+                                             # of REPEATS, with each build's
+                                             # tokenize-stage task count
 
 Same conditions as the frozen bench: materialized sf input, local[32]
 (honouring $SPARK_GRAFT_CPUS), engine with cache_tables=True, one
@@ -288,6 +296,93 @@ def lifecycle(repeats: int = 5, n_turns: int = 20_000):
                         **{k: round(statistics.median(v), 3) for k, v in times.items()}}, flush=True)
 
 
+def _tokenize_tasks(spark, group: str) -> tuple[int, int]:
+    """(tasks, non-empty tasks) of the tokenize stage among the jobs of
+    ``group``, from the live status store: the first stage whose tasks
+    write a shuffle of another row count than they read, since it turns
+    documents into partial-block rows (the text exchange and the
+    n_slices probe write the rows they read). It reads the input splits
+    directly or, behind a text exchange, that exchange's partitions."""
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            tasks = store.taskList(sid, info.currentAttemptId, 1 << 20) if info else None
+            if tasks is None or tasks.size() == 0:
+                continue
+            ms = [tasks.apply(i).taskMetrics().get() for i in range(tasks.size())]
+            rows = [m.inputMetrics().recordsRead() + m.shuffleReadMetrics().recordsRead() for m in ms]
+            written = sum(m.shuffleWriteMetrics().recordsWritten() for m in ms)
+            if written and written != sum(rows):
+                stages.append((sid, info.numTasks, sum(1 for r in rows if r)))
+    return min(stages)[1:] if stages else (0, 0)
+
+
+def build_layouts(repeats: int = 5):
+    """Wall time of full in-process builds on three fixed inputs, each
+    written once as ONE parquet file: a 400-turn batch (the streaming
+    ingest batch size), the 20k-turn perfbench backfill corpus (seed 1,
+    one row group, as perfbench writes it) and a 200k-turn corpus in 8
+    row groups. One untimed warm-up round, then REPEATS rounds that
+    build the three in turn into fresh directories, so host drift hits
+    every input alike. Prints each input's split count, the median wall
+    and the tokenize stage's task count (total / non-empty)."""
+    import shutil
+    import statistics
+
+    import pyarrow.parquet as pq
+
+    from aspublic_spark.index import IndexBuilder
+    from aspublic_spark.session import get_spark
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import corpus as C
+
+    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    root = f"{scratch}/bench_extra_build"
+    inputs = (("batch_400", 400, 3, 1), ("backfill_20k", 20_000, 1, 1), ("turns_200k_rg8", 200_000, 2, 8))
+    os.makedirs(root, exist_ok=True)
+    for name, n, seed, n_rg in inputs:
+        path = f"{root}/{name}.parquet"
+        if not os.path.exists(path):
+            tbl = C.to_arrow(C.generate(n, seed))
+            pq.write_table(tbl, path + ".tmp", row_group_size=-(-n // n_rg) if n_rg > 1 else None)
+            os.replace(path + ".tmp", path)
+    spark = get_spark(
+        "bench_extra_build", cpus=CPUS, shuffle_partitions=CPUS,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    sc = spark.sparkContext
+    walls: dict[str, list[float]] = {name: [] for name, *_ in inputs}
+    tasks: dict[str, tuple[int, int]] = {}
+    for r in range(repeats + 1):
+        for name, *_ in inputs:
+            df = spark.read.parquet(f"{root}/{name}.parquet")
+            idx = f"{root}/idx_{name}"
+            shutil.rmtree(idx, ignore_errors=True)
+            group = f"build_{name}_{r}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            IndexBuilder(spark, idx).build(df)
+            wall = time.perf_counter() - t0
+            sc.setJobGroup("", "")
+            if r:
+                walls[name].append(wall)
+            tasks[name] = _tokenize_tasks(spark, group)
+        if r:
+            print(f"repeat {r}: " + " ".join(f"{k}={v[-1]:.3f}" for k, v in walls.items()), flush=True)
+    print(f"local[{CPUS}], defaultParallelism {sc.defaultParallelism}, median of {repeats}")
+    print(f"{'input':>16} {'turns':>7} {'row_groups':>10} {'splits':>6} {'build_s':>8} {'tokenize_tasks':>15}")
+    for name, n, _, n_rg in inputs:
+        n_in = spark.read.parquet(f"{root}/{name}.parquet").rdd.getNumPartitions()
+        total, busy = tasks[name]
+        print(f"{name:>16} {n:>7} {n_rg:>10} {n_in:>6} {statistics.median(walls[name]):>8.3f} "
+              f"{f'{total} ({busy} busy)':>15}", flush=True)
+        shutil.rmtree(f"{root}/idx_{name}", ignore_errors=True)
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "plans":
@@ -300,6 +395,8 @@ if __name__ == "__main__":
         python_task_cost(int(sys.argv[2]) if len(sys.argv) > 2 else 5)
     elif cmd == "sf1":
         sf1_decade(int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000)
+    elif cmd == "build":
+        build_layouts(int(sys.argv[2]) if len(sys.argv) > 2 else 5)
     elif cmd == "lifecycle":
         lifecycle(
             int(sys.argv[2]) if len(sys.argv) > 2 else 5,

@@ -15,6 +15,9 @@ they rely on:
    match sets for NOT/phrase/NEAR/anchor/OR shapes, the pandas BM25
    oracle's top-k and scores for the AND/NOT/phrase shapes it covers,
    and the exhaustive plan's top-k under forced block pruning.
+4. The build tokenizes behind a hash exchange on doc_id: a one-row-group
+   input still tokenizes in max(input splits, defaultParallelism) tasks,
+   and the index does not depend on the input's row-group layout.
 """
 
 import os
@@ -239,13 +242,44 @@ def test_partial_block_build_equals_python_reference(spark, workdir):
 
 def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
     """Map task 0 salts a heavy group too (salt = task id + 1, 0 stays
-    unsalted), so a one-partition input still splits its heavy terms;
-    the index content equals an unsalted build's."""
+    unsalted), so a one-task tokenize still splits its heavy terms: the
+    tokenize function run as partition 0 over a whole corpus salts the
+    heavy term with 1, a build salts it with 1 as well (its tokenize
+    task 0 is never empty), and either's content equals an unsalted
+    run's."""
     import pyspark.sql.functions as F
+    from pyspark import TaskContext
 
     from aspublic_spark.index.build import read_stats
 
-    df = synth_transcripts(spark, 2000, seed=11).coalesce(1)
+    df = synth_transcripts(spark, 2000, seed=11)
+
+    texts = [r.text for r in df.select("text").collect()]
+    batch = pa.RecordBatch.from_pydict({
+        "slice": pa.array([i % 2 for i in range(len(texts))], pa.int32()),
+        "doc_id": pa.array(range(len(texts)), pa.int64()),
+        "f0": pa.array(texts, pa.string()),
+    })
+
+    def one_task(salt_threshold):
+        fn = _raw_postings_arrow_factory(True, 1, "fts5", salt_threshold, block_size=16)
+        prev = TaskContext.get()
+        tc = TaskContext()
+        tc._partitionId = 0
+        TaskContext._setTaskContext(tc)
+        try:
+            rows = list(fn([batch]))
+        finally:
+            TaskContext._setTaskContext(prev)
+        the = {s for rb in rows for t, s in zip(rb.column("term").to_pylist(),
+                                                rb.column("salt").to_pylist()) if t == "the"}
+        return the, _collect_postings(lambda _: rows, None, True)
+
+    salts, salted_rows = one_task(16)
+    assert salts == {1}, salts
+    salts, plain_rows = one_task(10**9)
+    assert salts == {0}, salts
+    assert salted_rows == plain_rows and salted_rows
 
     def build(name, salt_max):
         idx = os.path.join(workdir, name)
@@ -259,7 +293,7 @@ def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
     post = lambda idx: spark.read.parquet(idx + "/postings/gen=0")  # noqa: E731
     heavy = post(salted).filter(F.col("term") == "the").select("salt").distinct()
     the_salts = {r.salt for r in heavy.collect()}
-    assert the_salts - {0}, the_salts
+    assert 1 in the_salts, the_salts
     assert post(plain).agg(F.max("salt")).first()[0] == 0
 
     def postings(idx):
@@ -269,6 +303,87 @@ def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
     assert postings(salted) == postings(plain)
     assert sorted(bs.dictionary_df().collect()) == sorted(bp.dictionary_df().collect())
     assert read_stats(salted) == read_stats(plain)
+
+
+def _tokenize_stage(spark, group):
+    """(task count, shuffle records read per task) of the build's
+    tokenize stage among the jobs of ``group``: the one stage whose
+    tasks read a shuffle (the text exchange) and write one (the pack
+    shuffle). Read from the live status store."""
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    found = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is None:
+                continue
+            tasks = store.taskList(sid, info.currentAttemptId, 1 << 20)
+            metrics = [tasks.apply(i).taskMetrics().get() for i in range(tasks.size())]
+            read = [m.shuffleReadMetrics().recordsRead() for m in metrics]
+            written = sum(m.shuffleWriteMetrics().recordsWritten() for m in metrics)
+            if sum(read) and written:
+                found.append((info.numTasks, read))
+    assert len(found) == 1, found
+    return found[0]
+
+
+def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
+    """The build hash-exchanges its text rows before the tokenize: a
+    corpus in ONE parquet row group (which Spark cannot split) still
+    tokenizes in max(input splits, defaultParallelism) tasks, several
+    of them non-empty, and the index equals a build of the same rows
+    from an 8-row-group file read as ~8 splits."""
+    import pyarrow.parquet as pq
+
+    from tests.test_incremental import assert_same_index
+
+    sc = spark.sparkContext
+    tbl = synth_transcripts(spark, 2000, seed=13).toArrow()
+    src = os.path.join(workdir, "r6_spread_src")
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    one, eight = os.path.join(src, "one.parquet"), os.path.join(src, "eight.parquet")
+    pq.write_table(tbl, one)
+    pq.write_table(tbl, eight, row_group_size=-(-tbl.num_rows // 8))
+    assert pq.ParquetFile(one).metadata.num_row_groups == 1
+    assert pq.ParquetFile(eight).metadata.num_row_groups == 8
+
+    def build(path, name):
+        df = spark.read.parquet(path)
+        n_in = df.rdd.getNumPartitions()
+        idx = os.path.join(workdir, name)
+        shutil.rmtree(idx, ignore_errors=True)
+        group = f"{name}_{os.getpid()}"
+        sc.setJobGroup(group, name)
+        try:
+            IndexBuilder(spark, idx, n_slices=2, block_size=16, salt_max_postings=40).build(df)
+        finally:
+            sc.setJobGroup("", "")
+        n_tasks, read = _tokenize_stage(spark, group)
+        assert n_tasks == max(n_in, sc.defaultParallelism), (n_tasks, n_in)
+        assert sum(read) == tbl.num_rows
+        assert sum(1 for r in read if r) > 1, read
+        return idx, n_in
+
+    idx_one, n_one = build(one, "r6_spread_one")
+    # split the 8-row-group file by size so it reaches the build as
+    # several input partitions, as a larger table would
+    conf = {
+        "spark.sql.files.maxPartitionBytes": str(os.path.getsize(eight) // 8),
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        idx_eight, n_eight = build(eight, "r6_spread_eight")
+    finally:
+        for k in conf:
+            spark.conf.unset(k)
+    assert n_one == 1 < n_eight, (n_one, n_eight)
+    assert_same_index(spark, idx_one, idx_eight)
+    rep = IndexBuilder(spark, idx_eight).verify()
+    assert rep["ok"] and rep["blocks"] > 0, rep
 
 
 def test_pruned_equals_exhaustive_under_forced_pruning(spark, fused_idx):
