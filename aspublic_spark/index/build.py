@@ -22,13 +22,15 @@ Scale design (the part that must survive 1000 executors / 100 TB):
 - the whole build is ONE pass over the corpus: the text rows are
   hash-exchanged on doc_id into one partition per input split, and at
   least one per core, so the tokenize runs on every core whatever the
-  input's row-group layout; a mapInArrow tokenize (linear in tokens;
-  postings leave the Python worker already cut into varint-encoded
-  partial blocks) then feeds the pack shuffle DIRECTLY — no
-  intermediate raw-postings table is ever written or re-read, and the
-  packed blocks are the ONLY stored copy of the postings (~half the
-  index storage of a raw+packed layout). The build's two data
-  shuffles are this text exchange and the pack shuffle;
+  input's row-group layout, and each partition is sorted so a retried
+  tokenize task sees its rows in the same order; a mapInArrow
+  tokenize (linear in tokens; postings leave the Python worker
+  already cut into varint-encoded partial blocks) then feeds the pack
+  shuffle DIRECTLY — no intermediate raw-postings table is ever
+  written or re-read, and the packed blocks are the ONLY stored copy
+  of the postings (~half the index storage of a raw+packed layout).
+  The build's two data shuffles are this text exchange and the pack
+  shuffle;
 - the pack shuffle keys on (slice, term, fld, salt): a map task
   salts a (slice, term, fld) group with its own task id once its
   local posting count for the group crosses ~salt_max_postings /
@@ -1017,12 +1019,20 @@ class IndexBuilder:
         ``n_map`` partitions first, so the tokenize runs ``n_map`` tasks
         whatever the input's split layout (a parquet row group cannot be
         split: a small one-row-group input would otherwise tokenize in
-        one task). The hash key keeps a retried task's rows identical
-        (a column-less round-robin repartition would sort the text rows
-        to stay deterministic) and spreads evenly, doc_id being a key or
-        an xxhash64. AQE never coalesces an explicit partition count, so
-        ``n_map`` is exactly the task count the salting threshold is
-        sized for.
+        one task). The hash key fixes WHICH rows a task reads and
+        spreads them evenly, doc_id being a key or an xxhash64; AQE
+        never coalesces an explicit partition count, so ``n_map`` is
+        exactly the task count the salting threshold is sized for.
+
+        The exchange does not fix their ORDER (remote shuffle blocks
+        arrive in any order), and the tokenize's output depends on it:
+        rows batch in arrival order and :class:`_LocalSalt` salts a
+        group once the task's running count crosses the threshold. So
+        each partition is sorted on all of its columns (doc_id first;
+        the text columns only break ties of duplicate doc_ids): a
+        retried tokenize task then emits the very partial rows, salts
+        included, that the pack reducers of its first attempt may
+        already have read.
 
         Then ONE mapInArrow: tokenize, group term->positions linearly
         (batch-level factorize + lexsort, no per-doc Python beyond the
@@ -1032,15 +1042,17 @@ class IndexBuilder:
         mapInArrow boundary crossings to O(blocks) rows. No action of
         its own — this plan feeds the pack shuffle directly."""
         doc_id = self.doc_id_col()
+        texts = [f"f{i}" for i in range(len(self.text_cols))]
         src = (
             df.select(
                 doc_id.alias("doc_id"),
                 *[F.col(c).alias(f"f{i}") for i, c in enumerate(self.text_cols)],
             )
             .withColumn("slice", self._slice_col())
-            .select("slice", "doc_id", *[f"f{i}" for i in range(len(self.text_cols))])
+            .select("slice", "doc_id", *texts)
         )
-        return src.repartition(n_map, "doc_id").mapInArrow(
+        exchanged = src.repartition(n_map, "doc_id").sortWithinPartitions("doc_id", *texts)
+        return exchanged.mapInArrow(
             _raw_postings_arrow_factory(
                 self.store_positions, len(self.text_cols), self.analyzer,
                 self._salt_threshold(n_map), self.block_size,
@@ -1281,7 +1293,7 @@ class IndexBuilder:
         )
 
     def _stage_pack_fused(self, df: DataFrame, gen: int):
-        """text exchange -> tokenize -> partial blocks -> pack shuffle
+        """text exchange -> sort -> tokenize -> partial blocks -> pack shuffle
         -> pack, in ONE job (the build's only pass over the corpus
         text). Salting is decided INSIDE the tokenize tasks: no global
         heavy-term probe job runs, so nothing gates this job. The

@@ -296,13 +296,14 @@ def lifecycle(repeats: int = 5, n_turns: int = 20_000):
                         **{k: round(statistics.median(v), 3) for k, v in times.items()}}, flush=True)
 
 
-def _tokenize_tasks(spark, group: str) -> tuple[int, int]:
-    """(tasks, non-empty tasks) of the tokenize stage among the jobs of
-    ``group``, from the live status store: the first stage whose tasks
-    write a shuffle of another row count than they read, since it turns
-    documents into partial-block rows (the text exchange and the
-    n_slices probe write the rows they read). It reads the input splits
-    directly or, behind a text exchange, that exchange's partitions."""
+def _tokenize_tasks(spark, group: str) -> tuple[int, int, int]:
+    """(tasks, non-empty tasks, rows read) of the tokenize stage among
+    the jobs of ``group``, from the live status store (the tests use it
+    too): the first stage whose tasks write a shuffle of another row
+    count than they read, since it turns documents into partial-block
+    rows (the text exchange and the n_slices probe write the rows they
+    read). It reads the input splits directly or, behind a text
+    exchange, that exchange's partitions."""
     sc = spark.sparkContext
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
     stages = []
@@ -316,8 +317,8 @@ def _tokenize_tasks(spark, group: str) -> tuple[int, int]:
             rows = [m.inputMetrics().recordsRead() + m.shuffleReadMetrics().recordsRead() for m in ms]
             written = sum(m.shuffleWriteMetrics().recordsWritten() for m in ms)
             if written and written != sum(rows):
-                stages.append((sid, info.numTasks, sum(1 for r in rows if r)))
-    return min(stages)[1:] if stages else (0, 0)
+                stages.append((sid, info.numTasks, sum(1 for r in rows if r), sum(rows)))
+    return min(stages)[1:] if stages else (0, 0, 0)
 
 
 def build_layouts(repeats: int = 5):
@@ -356,7 +357,7 @@ def build_layouts(repeats: int = 5):
     )
     sc = spark.sparkContext
     walls: dict[str, list[float]] = {name: [] for name, *_ in inputs}
-    tasks: dict[str, tuple[int, int]] = {}
+    tasks: dict[str, tuple[int, int, int]] = {}
     for r in range(repeats + 1):
         for name, *_ in inputs:
             df = spark.read.parquet(f"{root}/{name}.parquet")
@@ -377,7 +378,7 @@ def build_layouts(repeats: int = 5):
     print(f"{'input':>16} {'turns':>7} {'row_groups':>10} {'splits':>6} {'build_s':>8} {'tokenize_tasks':>15}")
     for name, n, _, n_rg in inputs:
         n_in = spark.read.parquet(f"{root}/{name}.parquet").rdd.getNumPartitions()
-        total, busy = tasks[name]
+        total, busy, _ = tasks[name]
         print(f"{name:>16} {n:>7} {n_rg:>10} {n_in:>6} {statistics.median(walls[name]):>8.3f} "
               f"{f'{total} ({busy} busy)':>15}", flush=True)
         shutil.rmtree(f"{root}/idx_{name}", ignore_errors=True)

@@ -17,7 +17,9 @@ they rely on:
    and the exhaustive plan's top-k under forced block pruning.
 4. The build tokenizes behind a hash exchange on doc_id: a one-row-group
    input still tokenizes in max(input splits, defaultParallelism) tasks,
-   and the index does not depend on the input's row-group layout.
+   and the index does not depend on the input's row-group layout. The
+   tokenize's and the re-cut's partial rows do not depend on the order
+   their rows arrive in, so a retried task repeats its first attempt.
 """
 
 import os
@@ -305,29 +307,6 @@ def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
     assert read_stats(salted) == read_stats(plain)
 
 
-def _tokenize_stage(spark, group):
-    """(task count, shuffle records read per task) of the build's
-    tokenize stage among the jobs of ``group``: the one stage whose
-    tasks read a shuffle (the text exchange) and write one (the pack
-    shuffle). Read from the live status store."""
-    sc = spark.sparkContext
-    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    found = []
-    for job in tracker.getJobIdsForGroup(group):
-        for sid in tracker.getJobInfo(job).stageIds:
-            info = tracker.getStageInfo(sid)
-            if info is None:
-                continue
-            tasks = store.taskList(sid, info.currentAttemptId, 1 << 20)
-            metrics = [tasks.apply(i).taskMetrics().get() for i in range(tasks.size())]
-            read = [m.shuffleReadMetrics().recordsRead() for m in metrics]
-            written = sum(m.shuffleWriteMetrics().recordsWritten() for m in metrics)
-            if sum(read) and written:
-                found.append((info.numTasks, read))
-    assert len(found) == 1, found
-    return found[0]
-
-
 def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
     """The build hash-exchanges its text rows before the tokenize: a
     corpus in ONE parquet row group (which Spark cannot split) still
@@ -336,6 +315,7 @@ def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
     from an 8-row-group file read as ~8 splits."""
     import pyarrow.parquet as pq
 
+    from bench_extra import _tokenize_tasks
     from tests.test_incremental import assert_same_index
 
     sc = spark.sparkContext
@@ -360,10 +340,10 @@ def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
             IndexBuilder(spark, idx, n_slices=2, block_size=16, salt_max_postings=40).build(df)
         finally:
             sc.setJobGroup("", "")
-        n_tasks, read = _tokenize_stage(spark, group)
+        n_tasks, busy, rows = _tokenize_tasks(spark, group)
         assert n_tasks == max(n_in, sc.defaultParallelism), (n_tasks, n_in)
-        assert sum(read) == tbl.num_rows
-        assert sum(1 for r in read if r) > 1, read
+        assert rows == tbl.num_rows
+        assert busy > 1, (n_tasks, busy)
         return idx, n_in
 
     idx_one, n_one = build(one, "r6_spread_one")
@@ -384,6 +364,84 @@ def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
     assert_same_index(spark, idx_one, idx_eight)
     rep = IndexBuilder(spark, idx_eight).verify()
     assert rep["ok"] and rep["blocks"] > 0, rep
+
+
+def test_tokenize_output_does_not_depend_on_row_arrival_order(spark, workdir):
+    """A retried tokenize task may fetch its exchange blocks in another
+    order than its first attempt, while pack reducers that already read
+    the first attempt keep its rows. The tokenize's partial rows (block
+    cut and salt, the pack shuffle's key) must therefore not depend on
+    the order its rows arrive in. Small Arrow batches make the order
+    matter: the local salt counts a group across a task's batches, and
+    each batch cuts its own blocks. The same rows written in reverse
+    arrive reversed in every exchange partition."""
+    import collections
+
+    import pyarrow.parquet as pq
+
+    tbl = synth_transcripts(spark, 2000, seed=17).toArrow()
+    src = os.path.join(workdir, "r6_order_src")
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    fwd, rev = os.path.join(src, "fwd.parquet"), os.path.join(src, "rev.parquet")
+    pq.write_table(tbl, fwd)
+    pq.write_table(tbl.take(pa.array(np.arange(tbl.num_rows)[::-1])), rev)
+    b = IndexBuilder(
+        spark, os.path.join(workdir, "r6_order_idx"), n_slices=2, block_size=8,
+        salt_max_postings=200,
+    )
+
+    def partials(path):
+        rows = b._tokenized(spark.read.parquet(path), 4).collect()
+        return collections.Counter(
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r) for r in rows
+        )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "50")
+    try:
+        a, z = partials(fwd), partials(rev)
+    finally:
+        spark.conf.unset(key)
+    salts = {r[3] for r in a}
+    assert salts - {0} and 0 in salts, salts
+    assert a == z
+
+
+def test_recut_output_does_not_depend_on_row_order():
+    """compact()/prune_index() re-cut the posting rows a join hands
+    them, in no fixed order. The re-cut combines a task's rows into one
+    table before its sort and its salting, so its partial rows depend
+    on the task's row set only, not on their order or batching."""
+    import collections
+
+    from aspublic_spark.index.build import _decode_postings_arrow_factory, _recut_arrow_factory
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(60)]
+    texts = [" ".join(vocab[min(int(z), 59)] for z in rng.zipf(1.6, 12)) for _ in range(600)]
+    batch = pa.RecordBatch.from_pydict({
+        "slice": pa.array([i % 2 for i in range(len(texts))], pa.int32()),
+        "doc_id": pa.array(rng.permutation(10**6)[: len(texts)], pa.int64()),
+        "f0": pa.array(texts, pa.string()),
+    })
+    parts = [
+        rb.append_column("gen", pa.array(np.zeros(rb.num_rows, np.int32)))
+        for rb in _raw_postings_arrow_factory(True, 1, "fts5", 10**9, block_size=4)([batch])
+    ]
+    raw = pa.Table.from_batches(list(_decode_postings_arrow_factory()(parts))).drop_columns(["gen"])
+    recut = _recut_arrow_factory(block_size=4, salt_threshold=40)
+
+    def rows(batches):
+        return collections.Counter(
+            tuple(r.values()) for rb in recut(batches) for r in rb.to_pylist()
+        )
+
+    a = rows(raw.to_batches())
+    z = rows(raw.take(pa.array(rng.permutation(raw.num_rows))).to_batches(max_chunksize=37))
+    salts = {r[3] for r in a}
+    assert salts - {0} and 0 in salts, salts
+    assert a == z
 
 
 def test_pruned_equals_exhaustive_under_forced_pruning(spark, fused_idx):
