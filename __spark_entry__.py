@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aspublic_spark import BM25_B, BM25_K1
-from aspublic_spark.index.build import IndexBuilder
+from aspublic_spark.index.build import RAW_FORMAT, IndexBuilder
 from aspublic_spark.query.engine import SearchEngine
 from aspublic_spark.query.parser import parse_fts5, parse_websearch
 from aspublic_spark.session import ensure_package
@@ -68,8 +68,10 @@ def _build_cached_engine(
 ) -> SearchEngine:
     """Build (once per sf_dir+variant) and cache an index over documents.
 
-    The on-disk cache dir is keyed by layout tag + input fingerprint
-    (stale-reuse safe); the build lands in a unique temp dir and is
+    The on-disk cache dir is keyed by layout tag + the index's raw
+    postings format + input fingerprint (stale-reuse safe: an index of
+    another format is never reopened); the build lands in a unique
+    temp dir and is
     atomically renamed so concurrent driver processes never see a
     half-built index."""
     key = os.path.normpath(sf_dir) + "#" + cache_tag
@@ -77,7 +79,8 @@ def _build_cached_engine(
         return _ENGINES[key]
     ensure_package(spark)
     idx = os.path.join(
-        "/tmp", f"aspublic_idx_{cache_tag}_" + _fingerprint(os.path.normpath(sf_dir))
+        "/tmp",
+        f"aspublic_idx_{cache_tag}_f{RAW_FORMAT}_" + _fingerprint(os.path.normpath(sf_dir)),
     )
     if not os.path.exists(os.path.join(idx, "index_meta.json")):
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))

@@ -7,8 +7,8 @@ by SQL triggers (common/db_sqlite.py:27-41) / a `tsvector` generated
 column + GIN index (common/db_postgres.py:29-31). Here the index is a
 set of explicit columnar tables, built by DataFrame jobs:
 
-    docs/gen=G/          doc_id, <key cols>, <meta cols>
-    postings/gen=G/slice=S/      packed blocks (codec.py)
+    docs/gen=G/          doc_id, <key cols>, <meta cols>, slice, ord
+    postings/gen=G/slice=S/      packed blocks (codec.py) of doc ORDINALS
     dictionary_gens/gen=G/       per-gen (term, fld) -> df/cf/max_tf/min_dl
     dictionary_v/v=N/    merged (term, fld) aggregates (reached through
                          the dictionary_CURRENT.json pointer; a single
@@ -19,11 +19,22 @@ set of explicit columnar tables, built by DataFrame jobs:
 
 Scale design (the part that must survive 1000 executors / 100 TB):
 
+- postings name a doc by its ORDINAL: its 0-based rank by doc_id
+  among the docs of its (generation, slice), the docs table's ``ord``
+  column. Ordinals are dense, so a block's doc gaps are small varints
+  (a 64-bit doc_id, an xxhash64 for composite keys, gave random 64-bit
+  gaps that barely compress — the index was larger than its text).
+  The docs table keeps doc_id and the keys; the engine joins its
+  candidates back through (gen, slice, ord);
 - the whole build is ONE pass over the corpus: the text rows are
-  hash-exchanged on doc_id into one partition per input split, and at
-  least one per core, so the tokenize runs on every core whatever the
-  input's row-group layout, and each partition is sorted so a retried
-  tokenize task sees its rows in the same order; a mapInArrow
+  hash-exchanged on doc_id into exactly one partition per slice —
+  slice = pmod(hash(doc_id), n_slices) is Spark's own hash
+  partitioning, so partition p holds slice p — and each partition is
+  sorted by doc_id, so a doc's ordinal is its row index in the
+  partition (one rule, ``_ranked``, numbers the docs for the tokenize
+  and the docs write), the tokenize runs n_slices tasks whatever the input's
+  row-group layout, and a retried task sees its rows in the same
+  order; a mapInArrow
   tokenize (linear in tokens; postings leave the Python worker
   already cut into varint-encoded partial blocks) then feeds the pack
   shuffle DIRECTLY — no intermediate raw-postings table is ever
@@ -61,9 +72,10 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   rewrites them by time, both behind crash-safe pending markers. There
   is ONE posting encoder: both decode the packed blocks to posting
   rows (codec.decode_blocks; position payloads are re-SLICED per
-  posting, never decoded), keep the surviving rows with a semi-join,
-  and re-cut them through the build's map-side cutter and pack
-  reducer.
+  posting, never decoded), renumber the surviving rows with a join
+  from their source (gen, slice, ord) to their new (slice, ord) —
+  ranked the way the build ranks them — and re-cut them through the
+  build's map-side cutter and pack reducer.
 
 Commit protocol (object-store-safe — see fsio.py for the exact two
 guarantees it relies on; the reference gets this from sqlite
@@ -96,6 +108,8 @@ from pyspark.sql import functions as F
 from aspublic_spark.index import codec
 from aspublic_spark.index.fsio import FileSystem, LocalFS, fs_for
 
+# one stored block: ``doc_gaps`` holds the postings' doc ORDINALS
+# (delta + varint, codec.py) and ``min_doc``/``max_doc`` their extremes
 BLOCK_SCHEMA = (
     "slice int, term string, fld int, salt int, block_id int, n int, "
     "min_doc long, max_doc long, "
@@ -103,19 +117,27 @@ BLOCK_SCHEMA = (
     "sum_tf long, max_tf int, min_dl int"
 )
 
-# in-flight posting rows: one row per (doc, field, term), positions
-# varint-encoded ([n, first, deltas...] — codec.encode_grouped_records).
-# compact() and prune_index() decode stored blocks into these rows to
-# filter and re-cut them; never persisted. `fld` is the indexed-column
-# ordinal (FTS5 indexes N columns per row, `fts5(text, subject, ...)`,
-# reference common/db_sqlite.py:27).
+# in-flight posting rows: one row per (doc, field, term), the doc named
+# by its (slice, ord), positions varint-encoded ([n, first, deltas...]
+# — codec.encode_grouped_records). compact() and prune_index() decode
+# stored blocks into these rows to renumber and re-cut them; never
+# persisted. `fld` is the indexed-column ordinal (FTS5 indexes N
+# columns per row, `fts5(text, subject, ...)`, reference
+# common/db_sqlite.py:27).
 RAW_SCHEMA = (
-    "slice int, doc_id long, fld int, dl int, term string, tf int, positions binary"
+    "slice int, ord long, fld int, dl int, term string, tf int, positions binary"
 )
-RAW_FORMAT = 4
+RAW_FORMAT = 5
+
+# bit budget of the engine's 64-bit doc key (gen, slice, ord): a doc's
+# ordinal fits ORD_BITS, a slice id SLICE_BITS (IndexBuilder.MAX_SLICES)
+# and its generation's rank among the live generations GEN_BITS (ids
+# only grow; the live count is what is bounded), 63 bits in all
+ORD_BITS, SLICE_BITS, GEN_BITS = 31, 12, 20
 
 # in-flight PARTIAL-BLOCK rows, the shuffle format of every pack job
-# (build, compaction, prune): BLOCK_SCHEMA minus block_id. The map side
+# (build, compaction, prune): BLOCK_SCHEMA minus block_id, doc
+# ordinals in ``doc_gaps``/``min_doc``/``max_doc``. The map side
 # cuts its postings at block_size boundaries and computes each block's
 # metadata (_cut_blocks), so a FULL row (n == block_size) is already a
 # finished block: the pack reducer passes its payload bytes through
@@ -209,10 +231,11 @@ class _LocalSalt:
     n_map_tasks, an unsalted group receives < L postings from each task,
     so its reducer group stays ~salt_max bounded; a genuinely heavy term
     crosses L in every task and spreads one salt per task. In a build
-    n_map_tasks is exact: the tokenize runs behind an exchange of
-    exactly that many partitions (compaction and prune take
-    ``spark.sql.shuffle.partitions`` as theirs). Any assignment is
-    result-identical: salt is purely a shuffle-splitting key."""
+    n_map_tasks is exact: the tokenize runs one task per slice, so a
+    task's counts are bounded by its own vocabulary (compaction and
+    prune take ``spark.sql.shuffle.partitions`` as theirs, and a re-cut
+    task may hold several slices). Any assignment is result-identical:
+    salt is purely a shuffle-splitting key."""
 
     def __init__(self, threshold: int):
         self.threshold = threshold
@@ -240,7 +263,8 @@ def _cut_blocks(
     block_size: int, sl_s, tc_s, fld, doc_s, tf_s, dl_s, pos_buf, pos_off, take_terms, salt
 ):
     """THE block cutter of every pack path: postings sorted by (slice,
-    term, fld[, salt], doc) -> one PARTIAL_SCHEMA batch. Each group is
+    term, fld[, salt], doc ordinal) -> one PARTIAL_SCHEMA batch (``doc_s``
+    are the ordinals). Each group is
     cut at block_size boundaries; codec.pack_all_blocks varint-encodes
     doc gaps/tfs/dls for all blocks in one vectorized pass each, and a
     block's position payload is a zero-copy byte slice of ``pos_buf``
@@ -332,7 +356,7 @@ def _gather_payload(data: np.ndarray, off: np.ndarray, order: np.ndarray):
 
 def _sort_and_cut(block_size: int, sl, tc, fld, doc, tf, dl, pos_data, pos_off, terms, salt):
     """Postings in any order -> one PARTIAL_SCHEMA batch: one lexsort
-    by (slice, term, fld[, salt], doc), the position records
+    by (slice, term, fld[, salt], doc ordinal), the position records
     (``pos_data[pos_off[k]:pos_off[k+1]]``) gathered into that order —
     never decoded — then :func:`_cut_blocks`. ``tc`` indexes the Arrow
     string array ``terms``. ``salt`` is the per-posting salt column (the
@@ -356,8 +380,14 @@ def _raw_postings_arrow_factory(
     salt_threshold: int,
     block_size: int,
 ):
-    """mapInArrow fn: (slice, doc_id, f0[, f1...]) batches -> PARTIAL_SCHEMA
-    rows, the build's map side: tokenize, then :func:`_cut_blocks`.
+    """mapInArrow fn: (slice, ord, doc_id, f0[, f1...]) batches ->
+    PARTIAL_SCHEMA rows, the build's map side: tokenize, then
+    :func:`_cut_blocks`.
+
+    A task holds one slice sorted by doc_id, each row with its ordinal
+    (:meth:`IndexBuilder._ranked`, the numbering the docs write uses
+    too). A doc_id repeated in one build (two docs cannot share one
+    ordinal) fails the task loudly.
 
     Replaces the former JVM higher-order-function position extraction,
     which rescanned the token array once per distinct term
@@ -403,12 +433,11 @@ def _raw_postings_arrow_factory(
         doc_off[0] = 0
         np.cumsum(lens[:-1], out=doc_off[1:])
         pos_in_doc = np.arange(total, dtype=np.int64) - doc_off[doc_idx]
-        # sort ONCE in the shuffle-final order (slice, term, doc, pos).
+        # sort ONCE in the shuffle-final order (slice, term, ord, pos).
         # np.lexsort is STABLE and the token stream arrives doc-major
         # with positions ascending, so equal keys keep position order.
-        # The doc_id key is required: doc_id is a hash or a user key,
-        # not row order, and a block's doc ids must ascend (doc-gap
-        # codec, min_doc/max_doc pruning)
+        # A block's ordinals must ascend (doc-gap codec, min_doc/max_doc
+        # pruning); ``doc_sub`` holds the rows' ordinals
         order = np.lexsort((doc_sub[doc_idx], codes, slice_sub[doc_idx]))
         di_s, co_s, po_s = doc_idx[order], codes[order], pos_in_doc[order]
         gstart = np.empty(total, dtype=bool)
@@ -497,12 +526,21 @@ def _raw_postings_arrow_factory(
 
     def emit(batches):
         salter.reset()
+        last_id = None
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             slice_np = batch.column("slice").to_numpy(zero_copy_only=False).astype(np.int32)
-            doc_np = batch.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            doc_np = batch.column("ord").to_numpy(zero_copy_only=False).astype(np.int64)
+            ids = batch.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            chain = ids if last_id is None else np.r_[last_id, ids]
+            dup = np.flatnonzero(chain[1:] == chain[:-1])
+            if dup.size:
+                raise RuntimeError(
+                    f"doc_id {int(chain[dup[0]])} occurs twice in one build: two "
+                    "docs cannot share one ordinal"
+                )
+            last_id = ids[-1]
             for fld in range(n_fields):
                 if arrow_fast:
                     yield from one_field_arrow(
@@ -520,7 +558,8 @@ def _raw_postings_arrow_factory(
 
 def _decode_postings_arrow_factory():
     """mapInArrow fn: packed block rows (+ ``gen``) -> posting rows
-    (RAW_SCHEMA + ``gen``) for compact()/prune_index(). One
+    (RAW_SCHEMA + ``gen``, each doc named by its source (gen, slice,
+    ord)) for compact()/prune_index(). One
     codec.decode_blocks pass per batch; each posting's position record
     leaves as a zero-copy slice of the stored payload, never decoded."""
     import pyarrow as pa
@@ -540,7 +579,7 @@ def _decode_postings_arrow_factory():
             yield pa.record_batch(
                 [
                     per_posting("slice"),
-                    pa.array(d["doc_id"], type=pa.int64()),
+                    pa.array(d["ord"], type=pa.int64()),
                     per_posting("fld"),
                     pa.array(d["dl"].astype(np.int32), type=pa.int32()),
                     codec.one_chunk(batch.column("term")).take(pa.array(blk)),
@@ -548,7 +587,7 @@ def _decode_postings_arrow_factory():
                     codec.binary_from_stream(d["pos_bytes"], d["pos_off"]),
                     per_posting("gen"),
                 ],
-                names=["slice", "doc_id", "fld", "dl", "term", "tf", "positions", "gen"],
+                names=["slice", "ord", "fld", "dl", "term", "tf", "positions", "gen"],
             )
 
     return run
@@ -581,7 +620,7 @@ def _recut_arrow_factory(block_size: int, salt_threshold: int):
         yield _sort_and_cut(
             block_size, col("slice", np.int32),
             terms.indices.to_numpy(zero_copy_only=False).astype(np.int64),
-            col("fld", np.int32), col("doc_id", np.int64), col("tf", np.int64),
+            col("fld", np.int32), col("ord", np.int64), col("tf", np.int64),
             col("dl", np.int64), data, off, terms.dictionary, salter,
         )
 
@@ -601,9 +640,9 @@ def _pack_partials_arrow_factory(block_size: int):
     re-cut by :func:`_cut_blocks`; positions are never decoded even
     there — their records are re-sliced verbatim. block_id is assigned
     over the combined output per (slice, term, fld, salt) group in
-    (min_doc, max_doc) order — deterministic, since a (doc, term, fld)
-    posting exists exactly once globally, so blocks of one group can't
-    share min_doc."""
+    (min_doc, max_doc) order — deterministic, since a (slice, ord,
+    term, fld) posting exists exactly once in a generation, so blocks
+    of one group can't share min_doc."""
     import pyarrow as pa
 
     def _merge_tails(tbl):
@@ -619,7 +658,7 @@ def _pack_partials_arrow_factory(block_size: int):
         merged = _sort_and_cut(
             block_size, col("slice"),
             terms.indices.to_numpy(zero_copy_only=False).astype(np.int64)[blk],
-            col("fld"), d["doc_id"], d["tf"], d["dl"], d["pos_bytes"], d["pos_off"],
+            col("fld"), d["ord"], d["tf"], d["dl"], d["pos_bytes"], d["pos_off"],
             terms.dictionary, col("salt"),
         )
         return pa.Table.from_batches([merged])
@@ -693,9 +732,9 @@ def _pack_partials_arrow_factory(block_size: int):
 
 def _verify_blocks_arrow_factory():
     """mapInArrow fn for :meth:`IndexBuilder.verify`: packed blocks ->
-    one row per posting (gen, term, fld, doc_id) plus two per-block
+    one row per posting (gen, slice, term, fld, ord) plus two per-block
     flags carried on the block's first posting: ``bad_order`` (decoded
-    doc ids not strictly ascending) and ``bad_range`` (``min_doc`` /
+    ordinals not strictly ascending) and ``bad_range`` (``min_doc`` /
     ``max_doc`` not the decoded extremes)."""
     import pyarrow as pa
 
@@ -704,7 +743,7 @@ def _verify_blocks_arrow_factory():
             d = codec.decode_blocks(batch)
             if d is None:
                 continue
-            blk, ids = d["blk"], d["doc_id"]
+            blk, ids = d["blk"], d["ord"]
             starts = np.flatnonzero(np.r_[True, blk[1:] != blk[:-1]])
             step_ok = np.ones(ids.size, dtype=bool)
             step_ok[1:] = ids[1:] > ids[:-1]
@@ -718,18 +757,22 @@ def _verify_blocks_arrow_factory():
             bad_range[starts] = (np.minimum.reduceat(ids, starts) != mn) | (
                 np.maximum.reduceat(ids, starts) != mx
             )
-            gen = batch.column("gen").to_numpy(zero_copy_only=False).astype(np.int32)
-            fld = batch.column("fld").to_numpy(zero_copy_only=False).astype(np.int32)
+            def per_posting(name):
+                return pa.array(
+                    batch.column(name).to_numpy(zero_copy_only=False)[blk], type=pa.int32()
+                )
+
             yield pa.record_batch(
                 [
-                    pa.array(gen[blk], type=pa.int32()),
+                    per_posting("gen"),
+                    per_posting("slice"),
                     codec.one_chunk(batch.column("term")).take(pa.array(blk)),
-                    pa.array(fld[blk], type=pa.int32()),
+                    per_posting("fld"),
                     pa.array(ids, type=pa.int64()),
                     pa.array(bad_order, type=pa.int32()),
                     pa.array(bad_range, type=pa.int32()),
                 ],
-                names=["gen", "term", "fld", "doc_id", "bad_order", "bad_range"],
+                names=["gen", "slice", "term", "fld", "ord", "bad_order", "bad_range"],
             )
 
     return run
@@ -762,11 +805,13 @@ class IndexBuilder:
         Porter-stemmed — db_postgres.py:29-31).
 
         ``n_slices=None`` (default) auto-sizes from the FIRST build's
-        corpus volume (~1M docs per slice, floor 8, cap 4096; bounded
+        corpus volume (~1M docs per slice, floor 8, cap 4096 =
+        ``MAX_SLICES``; bounded
         LIMIT probe so small inputs never pay a count pass). Slices are
         the doc-hash partitions of the index and the ONLY co-location
         key the query evaluator can shuffle packed blocks by (see engine.py
-        _fused_score_factory), so they cap query parallelism AND set
+        _fused_score_factory), so they cap query parallelism, set the
+        build's tokenize task count (one task per slice) AND set
         the per-task decoded-positions memory unit (~24B per
         phrase-term occurrence in a slice; 1M docs x ~20 tokens with a
         20% Zipf head ~= 100MB decoded per task). Sizing is by VOLUME,
@@ -814,6 +859,8 @@ class IndexBuilder:
             self.store_positions = m["store_positions"]
             self.salt_max_postings = m["salt_max_postings"]
             self.analyzer = m["analyzer"]
+        if self.n_slices is not None and not 1 <= self.n_slices <= self.MAX_SLICES:
+            raise ValueError(f"n_slices must be in 1..{self.MAX_SLICES}")
         self.fs.makedirs(os.path.join(index_dir, "manifest"))
 
     # -- paths -------------------------------------------------------
@@ -874,6 +921,18 @@ class IndexBuilder:
                     mx = max(mx, int(name[4:]))
         return mx + 1
 
+    def _check_gen(self, gen: int):
+        """Generation ids only grow and are unbounded; the engine keys a
+        doc by its generation's RANK among the live ones (GEN_BITS), so
+        what a new generation must fit is the live count."""
+        if gen < 0:
+            raise ValueError(f"generation ids are non-negative, got {gen}")
+        live = self._live_gens()
+        if gen not in live and len(live) >= 1 << GEN_BITS:
+            raise ValueError(
+                f"the index already holds 2^{GEN_BITS} live generations: compact() it first"
+            )
+
     # -- doc identity ------------------------------------------------
     def doc_id_col(self):
         """Deterministic 64-bit doc id from the key columns.
@@ -896,6 +955,7 @@ class IndexBuilder:
         global refresh runs (idempotent replay after a crash between
         liveness commit and refresh)."""
         t0 = time.time()
+        self._check_gen(gen)
         if resume and self._manifest_done("raw", gen):
             # generation fully committed — only the global view may be
             # stale (crash between liveness flip and refresh)
@@ -961,7 +1021,7 @@ class IndexBuilder:
 
     DOCS_PER_SLICE = 1_000_000
     MIN_SLICES = 8
-    MAX_SLICES = 4096
+    MAX_SLICES = 1 << SLICE_BITS
 
     def _resolve_auto_slices(self, df: DataFrame) -> int:
         """Size n_slices from the first build's corpus volume.
@@ -979,29 +1039,61 @@ class IndexBuilder:
             min(self.MAX_SLICES, -(-n_docs // self.DOCS_PER_SLICE))
         )
 
-    def _slice_col(self):
-        if self.n_slices is None:
-            raise RuntimeError(
-                "n_slices unresolved — auto sizing happens at the first "
-                "build(); open an existing index or pass n_slices"
+    @staticmethod
+    def _slice_expr(n_slices: int):
+        """A doc's slice: Spark's own hash partitioning of doc_id
+        (Murmur3, seed 42), so ``repartition(n_slices, "doc_id")`` puts
+        slice p in partition p."""
+        return F.pmod(F.hash(F.col("doc_id")), F.lit(n_slices)).cast("int")
+
+    def _ranked(self, rows: DataFrame, n_slices: int) -> DataFrame:
+        """``rows`` (one per doc, with ``doc_id``) plus each doc's
+        ``slice`` and ``ord`` — its 0-based rank by doc_id within the
+        slice — the ONE numbering of the tokenize, the docs write,
+        compaction and prune: the identity exchange (one partition per
+        slice) sorted by doc_id, and the row index
+        in the partition, the low 33 bits of
+        ``monotonically_increasing_id`` (its high bits are the
+        partition id, checked against the slice)."""
+        m = F.col("_m")
+        rank = m.bitwiseAND(F.lit((1 << 33) - 1))
+        return (
+            rows.repartition(n_slices, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .withColumn("_m", F.monotonically_increasing_id())
+            .withColumn("slice", self._slice_expr(n_slices))
+            .withColumn(
+                "ord",
+                F.when(
+                    (F.shiftright(m, 33) == F.col("slice")) & (rank < F.lit(1 << ORD_BITS)),
+                    rank.cast("int"),
+                ).otherwise(
+                    F.raise_error(
+                        F.lit(f"a doc's exchange partition is not its slice, or a slice holds 2^{ORD_BITS} docs")
+                    )
+                ),
             )
-        return F.pmod(
-            F.xxhash64(F.lit(7), F.col("doc_id")), F.lit(self.n_slices)
-        ).cast("int")
+            .drop("_m")
+        )
 
     def _stage_docs(self, df: DataFrame, gen: int) -> int:
-        """Write the docs table for one generation; returns its row
-        count (observed on the write itself — no extra job). No
-        tokenization here: doc lengths live inline in the postings and
-        corpus stats derive from packed block metadata."""
+        """Write the docs table for one generation — doc_id, keys,
+        meta, slice and ord (:meth:`_ranked`, the tokenize's numbering)
+        — and return its row count (observed on the write itself — no
+        extra job). No tokenization here: doc lengths live inline in
+        the postings and corpus stats derive from packed block
+        metadata."""
         from pyspark.sql import Observation
 
         doc_id = self.doc_id_col()
-        docs = df.select(
-            doc_id.alias("doc_id"),
-            *[F.col(c) for c in self.key_cols if c != "doc_id"],
-            *[F.col(c) for c in self.meta_cols],
-        ).withColumn("slice", self._slice_col())
+        docs = self._ranked(
+            df.select(
+                doc_id.alias("doc_id"),
+                *[F.col(c) for c in self.key_cols if c != "doc_id"],
+                *[F.col(c) for c in self.meta_cols],
+            ),
+            self.n_slices,
+        )
         obs = Observation(f"docs_g{gen}_{time.time_ns()}")
         # per-generation subdir + overwrite => a crashed-and-retried
         # build is idempotent (append would duplicate the docs rows and
@@ -1011,28 +1103,30 @@ class IndexBuilder:
         ).parquet(self._p("docs", f"gen={gen}"))
         return int(obs.get["n"] or 0)
 
-    def _tokenized(self, df: DataFrame, n_map: int) -> DataFrame:
+    def _tokenized(self, df: DataFrame) -> DataFrame:
         """Input scan -> text exchange -> PARTIAL_SCHEMA rows (IN FLIGHT
         only).
 
-        The (slice, doc_id, text) rows are hash-exchanged on doc_id into
-        ``n_map`` partitions first, so the tokenize runs ``n_map`` tasks
-        whatever the input's split layout (a parquet row group cannot be
-        split: a small one-row-group input would otherwise tokenize in
-        one task). The hash key fixes WHICH rows a task reads and
-        spreads them evenly, doc_id being a key or an xxhash64; AQE
-        never coalesces an explicit partition count, so ``n_map`` is
+        The (doc_id, text) rows are ranked first (:meth:`_ranked`, the
+        docs write's numbering): hash-exchanged on doc_id into
+        ``n_slices`` partitions, the slice IS that hash partition
+        (:meth:`_slice_expr`), so partition p holds exactly slice p, and
+        the tokenize runs one task per slice whatever the input's split
+        layout (a parquet row group cannot be split: a small
+        one-row-group input would otherwise tokenize in one task). Do
+        not key the exchange on the slice column: hashing the slice
+        ids collides several slices into one partition. AQE never
+        coalesces an explicit partition count, so ``n_slices`` is
         exactly the task count the salting threshold is sized for.
 
-        The exchange does not fix their ORDER (remote shuffle blocks
-        arrive in any order), and the tokenize's output depends on it:
-        rows batch in arrival order and :class:`_LocalSalt` salts a
-        group once the task's running count crosses the threshold. So
-        each partition is sorted on all of its columns (doc_id first;
-        the text columns only break ties of duplicate doc_ids): a
-        retried tokenize task then emits the very partial rows, salts
-        included, that the pack reducers of its first attempt may
-        already have read.
+        Each partition is sorted by doc_id: a doc's ordinal is its row
+        index in the task. The sort also fixes the ORDER (remote
+        shuffle blocks arrive in any order), which the tokenize's
+        output depends on — rows batch in arrival order and
+        :class:`_LocalSalt` salts a group once the task's running count
+        crosses the threshold — so a retried tokenize task emits the
+        very partial rows, salts included, that the pack reducers of
+        its first attempt may already have read.
 
         Then ONE mapInArrow: tokenize, group term->positions linearly
         (batch-level factorize + lexsort, no per-doc Python beyond the
@@ -1041,21 +1135,18 @@ class IndexBuilder:
         (:class:`_LocalSalt`) — collapsing the pack exchange and both
         mapInArrow boundary crossings to O(blocks) rows. No action of
         its own — this plan feeds the pack shuffle directly."""
-        doc_id = self.doc_id_col()
         texts = [f"f{i}" for i in range(len(self.text_cols))]
-        src = (
+        ranked = self._ranked(
             df.select(
-                doc_id.alias("doc_id"),
+                self.doc_id_col().alias("doc_id"),
                 *[F.col(c).alias(f"f{i}") for i, c in enumerate(self.text_cols)],
-            )
-            .withColumn("slice", self._slice_col())
-            .select("slice", "doc_id", *texts)
+            ),
+            self.n_slices,
         )
-        exchanged = src.repartition(n_map, "doc_id").sortWithinPartitions("doc_id", *texts)
-        return exchanged.mapInArrow(
+        return ranked.select("slice", "ord", "doc_id", *texts).mapInArrow(
             _raw_postings_arrow_factory(
                 self.store_positions, len(self.text_cols), self.analyzer,
-                self._salt_threshold(n_map), self.block_size,
+                self._salt_threshold(self.n_slices), self.block_size,
             ),
             PARTIAL_SCHEMA,
         )
@@ -1297,15 +1388,13 @@ class IndexBuilder:
         -> pack, in ONE job (the build's only pass over the corpus
         text). Salting is decided INSIDE the tokenize tasks: no global
         heavy-term probe job runs, so nothing gates this job. The
-        tokenize runs one task per input split and at least one per
-        core (:meth:`_tokenized`)."""
-        t0 = time.time()
-        n_map = max(df.rdd.getNumPartitions(), self.spark.sparkContext.defaultParallelism)
-        self._write_packed(self._tokenized(df, n_map), gen, t0)
+        tokenize runs one task per slice (:meth:`_tokenized`)."""
+        self._write_packed(self._tokenized(df), gen, time.time())
 
     def _decoded_postings(self, gens: list[int]) -> DataFrame:
         """Posting rows (RAW_SCHEMA + ``gen``) decoded from the packed
-        blocks of ``gens``, for compaction/retention rewrites."""
+        blocks of ``gens``, for compaction/retention rewrites; each doc
+        is named by its source (gen, slice, ord)."""
         blocks = self.spark.read.option("basePath", self._p("postings")).parquet(
             *[self._p("postings", f"gen={g}") for g in gens]
         ).select(
@@ -1313,19 +1402,46 @@ class IndexBuilder:
         )
         return blocks.mapInArrow(_decode_postings_arrow_factory(), RAW_SCHEMA + ", gen int")
 
-    def _recut_and_write(self, postings: DataFrame, gen: int):
-        """compact()/prune_index() tail: the surviving posting rows take
-        the build's encoder — the map-side cut (the same cutter and
-        local salting as the tokenizer), then :meth:`_write_packed`.
-        The rows arrive from a join, so the map-task count is taken to
-        be the shuffle partition count."""
+    def _rewrite(self, kept: DataFrame, gens: list[int], target: int, n_slices: int):
+        """compact()/prune_index() body: write the surviving docs
+        ``kept`` (docs rows of ``gens`` with their ``gen``) and their
+        postings as generation ``target``, sliced ``n_slices`` ways.
+
+        The survivors are ranked the way the build ranks them
+        (:meth:`_ranked`); a join maps each surviving posting's source
+        (gen, slice, ord) to its new (slice, ord) and drops the
+        postings of every other doc. The rows then take the build's
+        encoder — the map-side cut (the same cutter and local salting
+        as the tokenizer), then :meth:`_write_packed`. They arrive from
+        a join, so the map-task count is taken to be the shuffle
+        partition count."""
         t0 = time.time()
+        ranked = self._ranked(
+            kept.withColumnRenamed("slice", "_src_slice").withColumnRenamed("ord", "_src_ord"),
+            n_slices,
+        )
+        # direct write to the FINAL directory: invisible until the
+        # caller's roll-forward commits the target's raw manifest
+        ranked.drop("gen", "_src_slice", "_src_ord").write.mode("overwrite").parquet(
+            self._p("docs", f"gen={target}")
+        )
+        remap = ranked.select(
+            "gen",
+            F.col("_src_slice").alias("slice"),
+            F.col("_src_ord").cast("long").alias("ord"),
+            F.col("slice").alias("_slice"),
+            F.col("ord").cast("long").alias("_ord"),
+        )
+        postings = self._decoded_postings(gens).join(remap, ["gen", "slice", "ord"]).select(
+            F.col("_slice").alias("slice"), F.col("_ord").alias("ord"),
+            "fld", "dl", "term", "tf", "positions",
+        )
         n_map = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         partials = postings.mapInArrow(
             _recut_arrow_factory(self.block_size, self._salt_threshold(n_map)),
             PARTIAL_SCHEMA,
         )
-        self._write_packed(partials, gen, t0)
+        self._write_packed(partials, target, t0)
 
     def repair(self) -> dict:
         """Roll pending compaction/prune markers forward, garbage-collect
@@ -1387,19 +1503,21 @@ class IndexBuilder:
           strictly ascending;
         - ``blocks_bad_range``: blocks whose ``min_doc``/``max_doc``
           are not the decoded extremes;
-        - ``duplicate_postings``: extra copies of a (doc, term, fld)
-          posting within one generation;
+        - ``duplicate_postings``: extra copies of a (slice, ord, term,
+          fld) posting within one generation;
         - ``groups_bad_block_ids``: (slice, term, fld, salt) groups
-          whose block_ids are not dense 0..k-1.
+          whose block_ids are not dense 0..k-1;
+        - ``docs_bad_ordinals``: docs whose ordinal is not one of
+          0..n-1 of its (gen, slice) of n docs, or repeats another's;
+        - ``postings_without_doc``: postings whose ordinal names no doc
+          of its (gen, slice).
 
         Doc-range pruning and the doc-gap codec trust the first two: a
-        violating block can be skipped although it holds a match. An
-        index built by the partial-block path between 4126dc7 and the
-        fix that sorts its postings by doc violates them. ``compact()``
-        repairs such an index, with any number of live generations:
-        it decodes every posting and re-cuts them sorted by doc. Three
-        Spark jobs; the decode touches doc ids only, never
-        positions."""
+        violating block can be skipped although it holds a match.
+        ``compact()`` repairs such blocks, with any number of live
+        generations: it decodes every posting and re-cuts them sorted
+        by ordinal. Four Spark jobs; the decode touches ordinals only,
+        never positions."""
         live = self._live_gens()
         out = {
             "blocks": 0,
@@ -1407,26 +1525,47 @@ class IndexBuilder:
             "blocks_bad_range": 0,
             "duplicate_postings": 0,
             "groups_bad_block_ids": 0,
+            "docs_bad_ordinals": 0,
+            "postings_without_doc": 0,
         }
         if live:
             blocks = self.spark.read.option("basePath", self._p("postings")).parquet(
                 *[self._p("postings", f"gen={g}") for g in live]
             )
+            docs = self.spark.read.option("basePath", self._p("docs")).parquet(
+                *[self._p("docs", f"gen={g}") for g in live]
+            ).select("gen", "slice", F.col("ord").cast("long").alias("ord"))
             post = blocks.select(
-                "gen", "term", "fld", "n", "min_doc", "max_doc", "doc_gaps", "tfs", "dls"
+                "gen", "slice", "term", "fld", "n", "min_doc", "max_doc", "doc_gaps", "tfs", "dls"
             ).mapInArrow(
                 _verify_blocks_arrow_factory(),
-                "gen int, term string, fld int, doc_id long, bad_order int, bad_range int",
+                "gen int, slice int, term string, fld int, ord long, bad_order int, bad_range int",
             )
+            key = ["gen", "slice", "ord"]
             r = (
-                post.groupBy("gen", "term", "fld", "doc_id")
+                post.groupBy(*key, "term", "fld")
                 .agg(
                     F.count("*").alias("c"),
                     F.sum("bad_order").alias("o"),
                     F.sum("bad_range").alias("r"),
                 )
-                .agg(F.sum(F.col("c") - 1), F.sum("o"), F.sum("r"))
+                .join(docs.distinct().withColumn("_doc", F.lit(1)), key, "left")
+                .agg(
+                    F.sum(F.col("c") - 1),
+                    F.sum("o"),
+                    F.sum("r"),
+                    F.sum(F.when(F.col("_doc").isNull(), F.col("c")).otherwise(0)),
+                )
                 .first()
+            )
+            n_of = docs.groupBy("gen", "slice").agg(F.count("*").alias("_n"))
+            in_range = (F.col("ord") >= 0) & (F.col("ord") < F.col("_n"))
+            bad_ords = (
+                docs.join(n_of, ["gen", "slice"])
+                .groupBy("gen", "slice", "_n")
+                .agg(F.countDistinct(F.when(in_range, F.col("ord"))).alias("_v"))
+                .agg(F.sum(F.col("_n") - F.col("_v")))
+                .first()[0]
             )
             g = (
                 blocks.groupBy("gen", "slice", "term", "fld", "salt")
@@ -1449,6 +1588,8 @@ class IndexBuilder:
                 blocks_bad_range=int(r[2] or 0),
                 duplicate_postings=int(r[0] or 0),
                 groups_bad_block_ids=int(g[1] or 0),
+                docs_bad_ordinals=int(bad_ords or 0),
+                postings_without_doc=int(r[3] or 0),
             )
         out["ok"] = not any(v for key, v in out.items() if key != "blocks")
         return out
@@ -1568,15 +1709,8 @@ class IndexBuilder:
             # never delete what it cannot date
             kept = docs_g.filter(
                 (F.col(ts_col) >= F.lit(cutoff_ts)) | F.col(ts_col).isNull()
-            )
-            kept.write.mode("overwrite").parquet(self._p("docs", f"gen={tgt}"))
-            kept_ids = self.spark.read.parquet(
-                self._p("docs", f"gen={tgt}")
-            ).select("doc_id")
-            self._recut_and_write(
-                self._decoded_postings([g]).drop("gen").join(kept_ids, "doc_id", "left_semi"),
-                tgt,
-            )
+            ).withColumn("gen", F.lit(g))
+            self._rewrite(kept, [g], tgt, self.n_slices)
             self._stage_gen_dict(tgt)
             pairs.append([g, tgt])
         self.fs.write_json_atomic(
@@ -1644,18 +1778,13 @@ class IndexBuilder:
         self.fs.delete(marker)
         return "completed"
 
-    def _slice_expr(self, n_slices: int):
-        return F.pmod(
-            F.xxhash64(F.lit(7), F.col("doc_id")), F.lit(n_slices)
-        ).cast("int")
-
     def compact(self, n_slices: int | None = None) -> dict:
         """Merge all generations into a single segment set.
 
-        ``n_slices`` re-slices the index during the merge (the slice
-        column is recomputed from doc_id for both the docs and the
-        decoded postings before the re-cut — no rebuild from source
-        text needed). This lifts the phrase-matching parallelism
+        ``n_slices`` re-slices the index during the merge (each
+        surviving doc's slice and ordinal are recomputed from its
+        doc_id, and its decoded postings renumbered before the re-cut
+        — no rebuild from source text needed). This lifts the phrase-matching parallelism
         ceiling of an index built with few slices (engine.py slice
         notes): build small, compact wider as the corpus grows. The new
         slicing goes live atomically with the compaction itself —
@@ -1683,6 +1812,8 @@ class IndexBuilder:
         t0 = time.time()
         self._finish_pending_compaction()
         new_n = self.n_slices if n_slices is None else int(n_slices)
+        if not 1 <= new_n <= self.MAX_SLICES:
+            raise ValueError(f"n_slices must be in 1..{self.MAX_SLICES}")
         gens = self._live_gens()
         if not gens:
             # nothing to merge; still heal any stale global view left
@@ -1704,7 +1835,7 @@ class IndexBuilder:
         # doc_id (the reference's DB unique constraint has no analog in
         # plain parquet appends). Compaction is the exact-once repair
         # pass: keep each doc_id's LATEST generation row and only that
-        # generation's postings.
+        # generation's postings (the renumbering join drops the rest).
         from pyspark.sql import Window
 
         docs_all = self.spark.read.option("basePath", self._p("docs")).parquet(
@@ -1716,23 +1847,7 @@ class IndexBuilder:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # direct write to the FINAL directories: invisible until the
-        # roll-forward commits the target's raw manifest
-        docs_out = docs_kept.drop("gen")
-        if new_n != self.n_slices:
-            docs_out = docs_out.withColumn("slice", self._slice_expr(new_n))
-        docs_out.write.mode("overwrite").parquet(self._p("docs", f"gen={target}"))
-        # postings reconstructed from the packed blocks (no raw table);
-        # the (doc_id, gen) semi-join drops superseded duplicates'
-        # postings along with their doc rows
-        merged = (
-            self._decoded_postings(gens)
-            .join(docs_kept.select("doc_id", "gen"), ["doc_id", "gen"], "left_semi")
-            .drop("gen")
-        )
-        if new_n != self.n_slices:
-            merged = merged.withColumn("slice", self._slice_expr(new_n))
-        self._recut_and_write(merged, target)
+        self._rewrite(docs_kept, gens, target, new_n)
         self._stage_gen_dict(target)
         self.fs.write_json_atomic(
             self._compact_marker(),

@@ -10,16 +10,19 @@ All encode/decode paths are vectorized numpy (no per-element Python
 loops over postings — only over the <=10 varint byte positions), so a
 pandas-UDF pack/unpack stage stays Arrow-fast.
 
-Doc ids are int64 and sorted in NATURAL SIGNED order (so Spark-side
-``min_doc``/``max_doc`` block pruning uses plain int64 comparisons).
-The first doc id is zigzag-encoded (it may be negative when ids come
-from xxhash64); the gaps between consecutive sorted int64 values are
-computed wraparound-safe in the uint64 domain and are always
-non-negative.
+A stored block names each doc by its ORDINAL, the doc's 0-based rank
+by doc_id within its (generation, slice) — dense, so the gaps between
+a block's docs are small and most take one varint byte (FTS5's
+doclists are delta-varints over dense rowids the same way). The codec
+itself takes any int64 values sorted in NATURAL SIGNED order (so
+Spark-side ``min_doc``/``max_doc`` block pruning uses plain int64
+comparisons): the first value is zigzag-encoded (it may be negative),
+and the gaps between consecutive sorted int64 values are computed
+wraparound-safe in the uint64 domain and are always non-negative.
 
 Layout of one packed block (all fields little-endian varint streams):
 
-- ``doc_gaps``:  varint(zigzag(first_doc)) then varint(gaps);
+- ``doc_gaps``:  varint(zigzag(first ordinal)) then varint(ordinal gaps);
 - ``tfs``:       varint term frequency per doc;
 - ``dls``:       varint document length (token count) per doc —
   stored inline so BM25 scoring needs no join back to the docs table;
@@ -289,8 +292,9 @@ def decode_blocks(batch, positions: str | None = None) -> dict | None:
     ``verify()``.
 
     Returns ``None`` when the rows hold no postings, else per-POSTING
-    arrays in stored order: ``blk`` (row of each posting), ``doc_id``
-    (int64), ``tf``/``dl`` (int64). Every varint column decodes in ONE
+    arrays in stored order: ``blk`` (row of each posting), ``ord``
+    (int64: the doc's ordinal within the block row's (gen, slice)),
+    ``tf``/``dl`` (int64). Every varint column decodes in ONE
     pass over the rows' adjacent payloads (varints are self-delimiting).
     ``positions``:
 
@@ -324,7 +328,7 @@ def decode_blocks(batch, positions: str | None = None) -> dict | None:
     base = csum[starts] - enc[starts]
     out = {
         "blk": np.repeat(np.arange(nb, dtype=np.int64), n_np),
-        "doc_id": (csum - np.repeat(base, n_np)).view(_I64),
+        "ord": (csum - np.repeat(base, n_np)).view(_I64),
         "tf": decode_varints(payload("tfs")).astype(np.int64),
         "dl": decode_varints(payload("dls")).astype(np.int64),
     }

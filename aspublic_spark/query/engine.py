@@ -10,6 +10,9 @@ and ONE evaluator answers it: the query terms' packed blocks are
 repartitioned by doc-hash slice (so every posting of a doc meets in
 one task) and a single mapInArrow pass decodes them, sums BM25 per doc
 and evaluates the tree over per-doc presence and positional masks.
+Postings name a doc by its ordinal within its (generation, slice); the
+evaluator keys docs by (gen, slice, ord) packed into one int64
+(:func:`doc_key_col`) and the docs join uses the same key.
 Around it:
 
 - tri-state role/tool, time range, conv_id prefix -> pushed-down
@@ -53,16 +56,49 @@ from pyspark.sql import functions as F
 from aspublic_spark import BM25_B, BM25_K1
 from aspublic_spark.index import codec
 from aspublic_spark.index.build import (
+    GEN_BITS,
+    ORD_BITS,
+    SLICE_BITS,
     dictionary_location,
-    live_gen_paths,
+    live_gens,
     read_index_meta,
     read_stats,
 )
 from aspublic_spark.index.fsio import fs_for
 from aspublic_spark.query.parser import Node, ParsedQuery, _col_conflicts, parse_query
 
-_UNPACK_SCHEMA = "term string, fld int, doc_id long, tf int, dl int"
+_UNPACK_SCHEMA = "term string, fld int, doc_key long, tf int, dl int"
 _UNPACK_POS_SCHEMA = _UNPACK_SCHEMA + ", positions array<int>"
+
+
+def doc_key_col(gens: tuple):
+    """A docs row's 64-bit doc key, ``rank << 43 | slice << 31 | ord``,
+    where rank is the row's generation's index in ``gens`` (the
+    engine's pinned live generations, ascending) — the bit budget of
+    build.py: GEN_BITS / SLICE_BITS / ORD_BITS."""
+    rank = F.create_map(*[x for i, g in enumerate(gens) for x in (F.lit(g), F.lit(i))])
+    return (
+        F.shiftleft(rank[F.col("gen")].cast("long"), SLICE_BITS + ORD_BITS)
+        .bitwiseOR(F.shiftleft(F.col("slice").cast("long"), ORD_BITS))
+        .bitwiseOR(F.col("ord").cast("long"))
+    )
+
+
+def _block_doc_keys(batch, d: dict, gens: np.ndarray) -> np.ndarray:
+    """Per-posting doc keys (:func:`doc_key_col`) of decoded block rows
+    (``d`` from codec.decode_blocks): each block row's generation rank
+    in ``gens`` and slice with each posting's ordinal, every field
+    checked against its bit budget."""
+    gen = batch.column("gen").to_numpy(zero_copy_only=False).astype(np.int64)
+    rank = np.searchsorted(gens, gen)
+    if (rank >= gens.size).any() or (gens[np.minimum(rank, gens.size - 1)] != gen).any():
+        raise RuntimeError("a block's generation is not in the engine's snapshot")
+    sl = batch.column("slice").to_numpy(zero_copy_only=False).astype(np.int64)
+    ords = d["ord"]
+    for v, bits in ((sl, SLICE_BITS), (ords, ORD_BITS)):
+        if v.min() < 0 or v.max() >= 1 << bits:
+            raise RuntimeError("doc key overflow: (slice, ord) out of its bit budget")
+    return ((rank << (SLICE_BITS + ORD_BITS)) | (sl << ORD_BITS))[d["blk"]] | ords
 
 # scoring-map keys are "term\x00fld" strings (NUL never survives the
 # FTS5 tokenizer, so the concatenation is unambiguous)
@@ -74,10 +110,14 @@ def _tf_key_col():
     return F.concat_ws("\x00", F.col("term"), F.col("fld").cast("string"))
 
 
-def _unpack_arrow_factory(with_positions: bool):
-    """mapInArrow fn: packed block rows -> per-posting rows
-    (_UNPACK_SCHEMA). Fully vectorized via :func:`codec.decode_blocks`."""
+def _unpack_arrow_factory(with_positions: bool, gens: tuple):
+    """mapInArrow fn: packed block rows (with ``gen`` and ``slice``) ->
+    per-posting rows (_UNPACK_SCHEMA), each doc named by its doc key
+    over the live generations ``gens``. Fully vectorized via
+    :func:`codec.decode_blocks`."""
     import pyarrow as pa
+
+    gens = np.asarray(gens, dtype=np.int64)
 
     def unpack(batches):
         for batch in batches:
@@ -92,11 +132,11 @@ def _unpack_arrow_factory(with_positions: bool):
             cols = [
                 term_col.take(pa.array(blk)),
                 pa.array(fld_np[blk], type=pa.int32()),
-                pa.array(d["doc_id"], type=pa.int64()),
+                pa.array(_block_doc_keys(batch, d, gens), type=pa.int64()),
                 pa.array(d["tf"].astype(np.int32), type=pa.int32()),
                 pa.array(d["dl"].astype(np.int32), type=pa.int32()),
             ]
-            names = ["term", "fld", "doc_id", "tf", "dl"]
+            names = ["term", "fld", "doc_key", "tf", "dl"]
             if with_positions:
                 offs = np.zeros(d["tf"].size + 1, dtype=np.int32)
                 np.cumsum(d["tf"], out=offs[1:])
@@ -128,7 +168,7 @@ def _near_set_from_cat(cat: dict, uniq: list, span: int) -> np.ndarray:
     (NEAR(a a, 0) matches a lone 'a'); matching never spans columns.
 
     Vectorized: occurrences pack into the phrase matcher's int64 keys
-    (doc ordinal << 32 | fld << 24 | pos); a phrase operand's start
+    (doc rank << 32 | fld << 24 | pos); a phrase operand's start
     keys are the same offset-corrected np.intersect1d chain. Every
     operand occurrence's END key is a candidate for min(end); at anchor
     e, operand i (length L) matches iff it has a start in
@@ -176,7 +216,7 @@ def _near_set_from_cat(cat: dict, uniq: list, span: int) -> np.ndarray:
         )
     )
     ok = np.ones(anchors.size, dtype=bool)
-    grp = anchors >> 24  # (doc ordinal, fld)
+    grp = anchors >> 24  # (doc rank, fld)
     base = grp << 24
     for i, op in enumerate(live_ops):
         ks = starts[i]
@@ -198,7 +238,7 @@ def _phrase_set_from_cat(cat: dict, slots: list, anchored: bool) -> np.ndarray:
     is a 1-member slot; a prefix marker is the stem's expansion).
 
     Vectorized: each term's (doc, fld, pos-offset) triples pack into
-    int64 keys (doc ordinal << 32 | fld << 24 | pos) and the phrase
+    int64 keys (doc rank << 32 | fld << 24 | pos) and the phrase
     match is a chain of np.intersect1d — no per-posting Python. The
     partition holds complete doc-hash slices, so the result is exact."""
     empty = np.empty(0, dtype=np.int64)
@@ -247,9 +287,14 @@ def _fused_score_factory(spec: dict):
     """mapInArrow fn, the engine's one query evaluator: over the PACKED
     blocks of a query it unpacks, scores and evaluates the query's
     boolean tree in ONE Python pass, emitting the matching
-    ``(doc_id, score)`` set.
+    ``(doc_key, score)`` set.
 
-    The evaluation is partition-local, so it is exact only when every
+    Postings carry doc ordinals; each doc is keyed by (gen, slice, ord)
+    packed into one int64 (:func:`doc_key_col`, the generation as its
+    rank in ``spec["gens"]``): ``gen`` and ``slice`` ride the block
+    rows (path partitions), the ordinal the decoded ``doc_gaps``. A doc present in two generations (a late duplicate
+    before compaction) is two keys and scores per copy. The
+    evaluation is partition-local, so it is exact only when every
     posting of a doc sits in one partition: the caller repartitions by
     ``slice`` (slice = hash(doc_id) co-locates every term's postings
     for a doc), or keeps the scan partitions when the query reads a
@@ -277,7 +322,7 @@ def _fused_score_factory(spec: dict):
     expansion terms (FTS5's bm25 counts a prefix as a single phrase; a
     term shared by two stems counts toward each).
 
-    ``spec`` is pure picklable data: need_pos, neg_universe, scaled
+    ``spec`` is pure picklable data: gens, need_pos, neg_universe, scaled
     {(label, fld): weight * idf}, avgdl {fld: a}, stems
     {label: (terms, flds)} and the tree. Tree nodes are ``("and",
     kids)``, ``("or", kids)``, ``("not", (left, right))``, ``("unot",
@@ -290,6 +335,7 @@ def _fused_score_factory(spec: dict):
     import pyarrow as pa
 
     k1p1 = BM25_K1 + 1.0
+    gens = np.asarray(spec["gens"], dtype=np.int64)
 
     def run(batches):
         batch_list = list(batches)
@@ -308,7 +354,7 @@ def _fused_score_factory(spec: dict):
         code_p = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)[blk]
         fld_p = rb.column("fld").to_numpy(zero_copy_only=False).astype(np.int64)[blk]
         neg_p = rb.column("_neg").to_numpy(zero_copy_only=False).astype(bool)[blk]
-        doc_p, tf_p, dl_p = d["doc_id"], d["tf"], d["dl"]
+        doc_p, tf_p, dl_p = _block_doc_keys(rb, d, gens), d["tf"], d["dl"]
         code_of = {t: i for i, t in enumerate(tstrings)}
         labels = tstrings + list(spec["stems"])
         label_of = {t: i for i, t in enumerate(labels)}
@@ -395,9 +441,9 @@ def _fused_score_factory(spec: dict):
             m = idx_in_g == j
             score[gid[m]] = score[gid[m]] + ws[m]
 
-        # -- each posting's doc ordinal in docs_u (-1: not a candidate) --
+        # -- each posting's row in docs_u (-1: not a candidate) ---------
         # Scaled postings already sit in the fold's doc groups, so their
-        # ordinal is a scatter through ``gid`` — no per-term binary
+        # row is a scatter through ``gid`` — no per-term binary
         # search (searchsorted over ~docs_u-sized term lists was HALF
         # the evaluator on heavy AND queries). Every other posting is
         # located with ONE shared searchsorted.
@@ -497,7 +543,7 @@ def _fused_score_factory(spec: dict):
                     pa.array(out_d, type=pa.int64()),
                     pa.array(score[ok], type=pa.float64()),
                 ],
-                names=["doc_id", "score"],
+                names=["doc_key", "score"],
             )
 
     return run
@@ -771,6 +817,7 @@ class SearchEngine:
         self._docs_df = None
         self._dict_df = None
         self._blocks_df = None
+        self._gens = None
         # driver-side (term, fld)->dictionary-row cache: repeat query
         # terms skip the dictionary lookup JOB entirely (the full
         # dictionary can be 10^8 terms — never materialized; only terms
@@ -826,8 +873,6 @@ class SearchEngine:
         plus the dictionary pointer. Changes on build/compact/prune —
         everything that should invalidate the snapshot — and costs one
         listdir + one small read, no Spark job."""
-        from aspublic_spark.index.build import live_gens
-
         ptr = self.fs.read_json(
             os.path.join(self.index_dir, "dictionary_CURRENT.json")
         )
@@ -839,12 +884,32 @@ class SearchEngine:
         fp = self._manifest_fingerprint()
         if fp != self._snap_fp:
             self.refresh()
+
+    def _pinned_gens(self) -> tuple:
+        """The live generations this engine reads, ascending, listed
+        once and pinned until refresh(): every table read and every doc
+        key (a generation's rank in this list, :func:`doc_key_col`)
+        comes from the same snapshot."""
+        if self._gens is None:
+            gens = tuple(live_gens(self.index_dir, self.fs))
+            if len(gens) > 1 << GEN_BITS:
+                raise ValueError(
+                    f"index holds {len(gens)} live generations (> 2^{GEN_BITS}): compact() it"
+                )
+            self._gens = gens
+        return self._gens
+
     def _live(self, sub: str) -> DataFrame:
         """Read only LIVE generations (raw manifest committed) — a
         half-written compaction/prune/build output directory is never
-        visible to queries. Snapshot semantics: the path list is pinned
-        until refresh()."""
-        paths = live_gen_paths(self.index_dir, sub, self.fs)
+        visible to queries. Snapshot semantics: the generation list is
+        pinned until refresh() (:meth:`_pinned_gens`)."""
+        root = os.path.join(self.index_dir, sub)
+        paths = [
+            os.path.join(root, f"gen={g}")
+            for g in self._pinned_gens()
+            if self.fs.isdir(os.path.join(root, f"gen={g}"))
+        ]
         if not paths:
             raise FileNotFoundError(
                 f"index at {self.index_dir} has no live generations with {sub}"
@@ -854,8 +919,10 @@ class SearchEngine:
         ).parquet(*paths)
 
     def docs(self) -> DataFrame:
+        """The live docs rows, each with its ``doc_key``
+        (:func:`doc_key_col`), the evaluator's key of the doc."""
         if self._docs_df is None:
-            df = self._live("docs")
+            df = self._live("docs").withColumn("doc_key", doc_key_col(self._pinned_gens()))
             if self._cache:
                 # server mode: cache in a handful of fat partitions —
                 # probing a few hundred thousand cached rows needs a few
@@ -888,7 +955,7 @@ class SearchEngine:
         for df in (self._docs_df, self._dict_df):
             if df is not None and self._cache:
                 df.unpersist()
-        self._docs_df = self._dict_df = self._blocks_df = None
+        self._docs_df = self._dict_df = self._blocks_df = self._gens = None
         self._term_cache.clear()
         self._prefix_cache.clear()
         self._snap_fp = self._manifest_fingerprint()
@@ -940,11 +1007,15 @@ class SearchEngine:
         )
 
     def unpack(self, blocks: DataFrame, with_positions: bool = False) -> DataFrame:
+        """Packed block rows (with their ``gen`` and ``slice``) -> one
+        row per posting, keyed by ``doc_key``."""
         schema = _UNPACK_POS_SCHEMA if with_positions else _UNPACK_SCHEMA
-        cols = ["term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
+        cols = ["gen", "slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
             ["positions"] if with_positions else []
         )
-        return blocks.select(*cols).mapInArrow(_unpack_arrow_factory(with_positions), schema)
+        return blocks.select(*cols).mapInArrow(
+            _unpack_arrow_factory(with_positions, self._pinned_gens()), schema
+        )
 
     # -- structured predicates (Q6-Q8) ---------------------------------
     @staticmethod
@@ -1054,22 +1125,29 @@ class SearchEngine:
         return {s: self._prefix_cache[s] for s in stems}
 
     def _coarse_intervals(self, rare: DataFrame, nbuck: int) -> DataFrame:
-        """Coarsen a term's (min_doc, max_doc) block intervals to at most
-        ``nbuck`` covering intervals, fully distributed: bucket by the
-        HIGH BITS of min_doc (one groupBy with map-side partial
-        aggregation; no window function — an ntile().over(...) would
-        funnel every metadata row of a dense Zipf-head term through a
-        single task; and no span pre-scan — high-bit bucketing needs no
-        lo/width job, saving one driver round-trip per pruned query).
-        doc_ids are xxhash64 outputs uniform over the FULL signed-64
-        range, so fixed-range buckets are uniformly filled; for skewed
-        external ids the buckets merely coarsen unevenly. Either way
-        the coarse intervals are a covering SUPERSET of the exact
-        union, so the downstream semi-join prune stays lossless."""
-        bits = max(1, min(62, int(math.log2(max(nbuck, 2)))))
+        """Coarsen a term's (gen, slice, min_doc, max_doc) block
+        intervals to covering intervals per (gen, slice): the ``nbuck``
+        buckets are shared over the snapshot's (gen, slice) groups, at
+        least one each, so at most max(nbuck, groups) intervals in all.
+        Fully distributed: one groupBy with map-side partial aggregation
+        on (gen, slice, high bits of min_doc) — no window function (an
+        ntile().over(...) would funnel every metadata row of a dense
+        Zipf-head term through a single task), no span pre-scan and no
+        filesystem listing (the group count is the pinned snapshot's),
+        so no driver round-trip. Intervals are in ordinal space: a (gen,
+        slice) holds dense ordinals 0..n-1, about n_docs / n_slices of them,
+        so each group's share of the buckets covers that span, and the
+        last bucket absorbs any overflow of a larger slice. The coarse
+        intervals are a covering SUPERSET of the exact union, so the
+        downstream semi-join prune stays lossless."""
+        groups = max(1, len(self._pinned_gens()) * self.n_slices)
+        per = max(1, nbuck // groups)
+        span = -(-max(self.n_docs, 1) // max(self.n_slices, 1))
+        shift = (-(-span // per) - 1).bit_length()
         return (
             rare.groupBy(
-                F.shiftright(F.col("min_doc"), 64 - bits).alias("_b")
+                "gen", "slice",
+                F.least(F.shiftright(F.col("min_doc"), shift), F.lit(per - 1)).alias("_b"),
             )
             .agg(
                 F.min("min_doc").alias("min_doc"),
@@ -1136,36 +1214,40 @@ class SearchEngine:
                 s["df"] for s in stats.get(t, {}).values()
             )
             rarest = min(and_like, key=df_of)
+            # ordinal intervals, meaningful within one (gen, slice) only
             rare = pos_blocks.filter(F.col("term") == rarest).select(
-                "min_doc", "max_doc"
+                "gen", "slice", "min_doc", "max_doc"
             )
             # Driver-safety: for a dense rarest term, collecting every
             # block interval is an unbounded driver materialization.
-            # Coarsen distributed first: uniform-width contiguous buckets
-            # over the doc-id span, one covering interval per bucket —
-            # a plain groupBy (map-side partial agg, no window), unlike
-            # the previous ntile().over(Window.orderBy(...)) which
-            # funneled every metadata row through ONE task. doc_ids are
-            # xxhash64 outputs, so uniform-width buckets are also
-            # uniformly filled; for skewed external single-key ids the
-            # buckets merely coarsen unevenly. Coarse intervals are a
-            # SUPERSET of the exact union either way, so the semi-join
-            # prune stays lossless (keeps more blocks, never fewer).
+            # Coarsen distributed first: contiguous ordinal buckets per
+            # (gen, slice), one covering interval per bucket — a plain
+            # groupBy (map-side partial agg, no window). Coarse
+            # intervals are a SUPERSET of the exact union, so the
+            # semi-join prune stays lossless (keeps more blocks, never
+            # fewer). Coarsening keeps one interval per (gen, slice),
+            # so the collect is at most max(256, live gens x n_slices)
+            # rows, not a function of the term's df.
             est_blocks = df_of(rarest) / max(self.block_size, 1) + 1
             if est_blocks > self.max_intervals_collect:
                 rare = self._coarse_intervals(
                     rare, min(256, self.max_intervals_collect)
                 )
-            ivals = rare.collect()
             merged = []
-            for lo, hi in sorted((r["min_doc"], r["max_doc"]) for r in ivals):
-                if merged and lo <= merged[-1][1]:
-                    merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
+            for r in sorted(rare.collect()):
+                g, sl, lo, hi = r["gen"], r["slice"], r["min_doc"], r["max_doc"]
+                if merged and merged[-1][:2] == (g, sl) and lo <= merged[-1][3]:
+                    merged[-1] = (g, sl, merged[-1][2], max(merged[-1][3], hi))
                 else:
-                    merged.append((lo, hi))
+                    merged.append((g, sl, lo, hi))
             if merged:
-                iv_df = self.spark.createDataFrame(merged, "lo long, hi long")
-                cond = (F.col("min_doc") <= F.col("hi")) & (F.col("max_doc") >= F.col("lo"))
+                iv_df = self.spark.createDataFrame(merged, "_g long, _s int, lo long, hi long")
+                cond = (
+                    (F.col("gen") == F.col("_g"))
+                    & (F.col("slice") == F.col("_s"))
+                    & (F.col("min_doc") <= F.col("hi"))
+                    & (F.col("max_doc") >= F.col("lo"))
+                )
                 pos_blocks = pos_blocks.join(F.broadcast(iv_df), cond, "left_semi")
                 if not_blocks is not None:
                     not_blocks = not_blocks.join(F.broadcast(iv_df), cond, "left_semi")
@@ -1220,7 +1302,7 @@ class SearchEngine:
                 not_terms,
             )
             if has_doc_filters:
-                qual1 = qual1.join(docs_filtered.select("doc_id"), "doc_id", "left_semi")
+                qual1 = qual1.join(docs_filtered.select("doc_key"), "doc_key", "left_semi")
             top = qual1.orderBy(F.col("score").desc()).limit(k).collect()
             if len(top) >= k:
                 theta = float(top[-1]["score"])
@@ -1292,7 +1374,7 @@ class SearchEngine:
         when a positional leaf exists. The exchange co-locates each
         doc's postings in ``n_slices`` partitions (slices auto-size
         with corpus volume at build time)."""
-        cols = ["slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
+        cols = ["gen", "slice", "term", "fld", "n", "doc_gaps", "tfs", "dls"] + (
             ["positions"] if spec["need_pos"] else []
         )
         src = reduce(
@@ -1305,7 +1387,10 @@ class SearchEngine:
         )
         if exchange:
             src = src.repartition(max(1, self.n_slices), "slice")
-        return src.mapInArrow(_fused_score_factory(spec), "doc_id long, score double")
+        return src.mapInArrow(
+            _fused_score_factory({**spec, "gens": self._pinned_gens()}),
+            "doc_key long, score double",
+        )
 
     def _annotate(self, node: Node, fs: frozenset) -> Node:
         """Dissolve ``col`` wrappers, intersecting nested specs (probed
@@ -1331,11 +1416,11 @@ class SearchEngine:
 
     def _stem_dfs(self, stems: dict) -> dict:
         """Exact per-field df of each virtual ``stem*`` label (distinct
-        docs holding any of its expansion terms): ONE job over the
+        doc keys holding any of its expansion terms): ONE job over the
         expansions' blocks, unpruned, bounded by the capped expansion."""
         parts = [
             self.unpack(self.blocks(terms).filter(F.col("fld").isin(flds)))
-            .select(F.lit(label).alias("label"), "fld", "doc_id")
+            .select(F.lit(label).alias("label"), "fld", "doc_key")
             for label, (terms, flds) in stems.items()
         ]
         u = reduce(DataFrame.unionByName, parts)
@@ -1621,7 +1706,7 @@ class SearchEngine:
         if total_df <= self.broadcast_cand_max_postings:
             cand = F.broadcast(cand)
         out = (
-            cand.join(docs_f.select("doc_id", *key_meta), "doc_id")
+            cand.join(docs_f.select("doc_key", "doc_id", *key_meta), "doc_key")
             .select("doc_id", *key_meta, "score")
             .orderBy(*order_cols)
             .limit(k)

@@ -29,6 +29,17 @@
                                              # groups), interleaved, median
                                              # of REPEATS, with each build's
                                              # tokenize-stage task count
+  python bench_extra.py format INDEX_DIR [CORPUS]
+                                             # where an index's bytes are,
+                                             # from the parquet footers:
+                                             # compressed bytes of each
+                                             # postings column, the docs
+                                             # and dictionary directories
+                                             # and the rest; each also per
+                                             # text byte when CORPUS (a
+                                             # parquet file holding the
+                                             # indexed text columns) is
+                                             # given. No Spark.
 
 Same conditions as the frozen bench: materialized sf input, local[32]
 (honouring $SPARK_GRAFT_CPUS), engine with cache_tables=True, one
@@ -384,6 +395,61 @@ def build_layouts(repeats: int = 5):
         shutil.rmtree(f"{root}/idx_{name}", ignore_errors=True)
 
 
+def _dir_files(path: str):
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            yield os.path.join(root, f)
+
+
+def index_format(index_dir: str, corpus: str | None = None):
+    """Print where the bytes of ``index_dir`` are: the compressed bytes
+    of each postings column (summed over every row group's column
+    chunk, read from the parquet footers), the rest of the postings
+    files (footers, headers), the docs and dictionary directories and
+    everything else; with ``corpus``, each per byte of the indexed text
+    columns (UTF-8, nulls 0), the perfbench ``index_bytes_per_text_byte``
+    denominator."""
+    import json
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cols: dict[str, int] = {}
+    postings_files = 0
+    for f in _dir_files(os.path.join(index_dir, "postings")):
+        postings_files += os.path.getsize(f)
+        if not f.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                ch = md.row_group(rg).column(c)
+                cols[ch.path_in_schema] = cols.get(ch.path_in_schema, 0) + ch.total_compressed_size
+    total = sum(os.path.getsize(f) for f in _dir_files(index_dir))
+    sub = {
+        name: sum(os.path.getsize(f) for f in _dir_files(os.path.join(index_dir, name)))
+        for name in ("docs", "dictionary_gens", "dictionary_v")
+    }
+    rows = [(f"postings.{c}", b) for c, b in sorted(cols.items(), key=lambda kv: -kv[1])]
+    rows.append(("postings (footers, headers)", postings_files - sum(cols.values())))
+    rows += [(name, b) for name, b in sub.items()]
+    rows.append(("other (manifests, json)", total - postings_files - sum(sub.values())))
+    rows.append(("total", total))
+    text = None
+    if corpus:
+        meta = json.load(open(os.path.join(index_dir, "index_meta.json")))
+        tbl = pq.read_table(corpus, columns=meta["text_cols"])
+        text = sum(
+            int(pc.sum(pc.fill_null(pc.binary_length(tbl.column(c)), 0)).as_py() or 0)
+            for c in meta["text_cols"]
+        )
+    print(f"{'part':<30} {'bytes':>12}" + (f" {'per text byte':>14}" if text else ""))
+    for name, b in rows:
+        print(f"{name:<30} {b:>12,}" + (f" {b / text:>14.4f}" if text else ""))
+    if text:
+        print(f"{'text bytes':<30} {text:>12,}")
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "plans":
@@ -398,6 +464,8 @@ if __name__ == "__main__":
         sf1_decade(int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000)
     elif cmd == "build":
         build_layouts(int(sys.argv[2]) if len(sys.argv) > 2 else 5)
+    elif cmd == "format":
+        index_format(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
     elif cmd == "lifecycle":
         lifecycle(
             int(sys.argv[2]) if len(sys.argv) > 2 else 5,

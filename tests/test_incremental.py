@@ -13,6 +13,7 @@ postings of EVERY generation are deleted — it cannot be reading them.
 import json
 import os
 import shutil
+from functools import reduce
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -50,13 +51,21 @@ def _stats_row(spark, idx):
 
 
 def index_postings(idx) -> list[tuple]:
-    """Every live posting, decoded from the stored blocks: sorted
-    (slice, term, fld, doc_id, tf, dl, positions) tuples."""
+    """Every live posting, decoded from the stored blocks, its (gen,
+    slice, ord) resolved to the doc_id through the generation's docs
+    table: sorted (slice, term, fld, doc_id, tf, dl, positions) tuples.
+    A posting whose ordinal names no doc raises."""
     rows = []
     for gen_dir in live_gen_paths(idx, "postings"):
+        docs = pq.read_table(
+            os.path.join(idx, "docs", os.path.basename(gen_dir)),
+            columns=["doc_id", "slice", "ord"],
+        ).to_pydict()
+        doc_of = dict(zip(zip(docs["slice"], docs["ord"]), docs["doc_id"]))
         for name in os.listdir(gen_dir):
             if not name.startswith("slice="):
                 continue
+            sl = int(name[len("slice="):])
             tbl = pq.read_table(os.path.join(gen_dir, name))
             d = codec.decode_blocks(tbl, "values")
             if d is None:
@@ -65,7 +74,7 @@ def index_postings(idx) -> list[tuple]:
             ps = np.concatenate([[0], np.cumsum(d["tf"])])
             for k, b in enumerate(d["blk"].tolist()):
                 rows.append((
-                    int(name[len("slice="):]), terms[b], flds[b], int(d["doc_id"][k]),
+                    sl, terms[b], flds[b], doc_of[(sl, int(d["ord"][k]))],
                     int(d["tf"][k]), int(d["dl"][k]), tuple(d["pos"][ps[k]:ps[k + 1]].tolist()),
                 ))
     return sorted(rows)
@@ -219,21 +228,24 @@ def test_reopen_adopts_stored_layout(spark, workdir):
 
 def test_other_raw_format_is_refused(spark, workdir):
     """An index whose meta records another raw postings format is
-    refused by every reader and writer, not only by build()."""
+    refused by every reader and writer, not only by build(): format 3,
+    and format 4, whose postings stored 64-bit doc ids where format 5
+    stores doc ordinals."""
     idx = os.path.join(workdir, "old_format_idx")
     shutil.rmtree(idx, ignore_errors=True)
     _builder(spark, idx).build(synth_transcripts(spark, 20, seed=3))
     meta_path = os.path.join(idx, "index_meta.json")
     meta = json.load(open(meta_path))
-    meta["raw_format"] = 3
-    json.dump(meta, open(meta_path, "w"))
-    for use in (
-        lambda: IndexBuilder(spark, idx).compact(),
-        lambda: IndexBuilder(spark, idx).verify(),
-        lambda: SearchEngine(spark, idx),
-    ):
-        with pytest.raises(ValueError, match="format 3.*rebuild into a fresh directory"):
-            use()
+    for fmt in (3, 4):
+        meta["raw_format"] = fmt
+        json.dump(meta, open(meta_path, "w"))
+        for use in (
+            lambda: IndexBuilder(spark, idx).compact(),
+            lambda: IndexBuilder(spark, idx).verify(),
+            lambda: SearchEngine(spark, idx),
+        ):
+            with pytest.raises(ValueError, match=f"format {fmt}.*rebuild into a fresh directory"):
+                use()
 
 
 def test_prune_crash_recovery_rolls_forward(spark, workdir):
@@ -288,3 +300,86 @@ def test_prune_crash_recovery_rolls_forward(spark, workdir):
     assert _dict_rows(spark, idx) == _dict_rows(spark, fresh_idx)
     assert SearchEngine(spark, idx).search("ancient", k=10).df.count() == 0
     assert not os.path.exists(os.path.join(idx, "manifest", "prune_pending.json"))
+
+
+def assert_dense_ordinals(idx):
+    """Each live generation's docs hold, per slice of n docs, the
+    ordinals 0..n-1 in doc_id order."""
+    for gen_dir in live_gen_paths(idx, "docs"):
+        docs = pq.read_table(gen_dir, columns=["doc_id", "slice", "ord"]).to_pandas()
+        for _sl, grp in docs.groupby("slice"):
+            assert grp.sort_values("doc_id")["ord"].tolist() == list(range(len(grp))), gen_dir
+
+
+def test_reslice_and_prune_renumber_ordinals(spark, workdir):
+    """compact(n_slices=3) re-slices three generations and a prune
+    rewrites a boundary generation: both renumber the surviving docs,
+    leave every (gen, slice)'s ordinals dense and in doc_id order, and
+    ``verify()`` reports no violation; the re-sliced index equals a
+    one-shot build at 3 slices."""
+    from datetime import datetime, timezone
+
+    idx = os.path.join(workdir, "renumber_idx")
+    shutil.rmtree(idx, ignore_errors=True)
+    b = _builder(spark, idx)
+    parts = [
+        _mk_rows(spark, "cOLD", 30, 1_000_000, "ancient alpha words"),
+        _mk_rows(spark, "cMID", 30, 2_000_000 - 15, "boundary bravo words"),
+        _mk_rows(spark, "cNEW", 30, 3_000_000, "recent charlie words"),
+    ]
+    for g, part in enumerate(parts):
+        b.build(part, gen=g)
+    assert b.compact(n_slices=3)["compacted"]
+    assert_dense_ordinals(idx)
+    fresh = os.path.join(workdir, "renumber_fresh_idx")
+    shutil.rmtree(fresh, ignore_errors=True)
+    IndexBuilder(
+        spark, fresh, key_cols=["conv_id", "turn_idx"], text_col="text",
+        meta_cols=["role", "tool", "ts"], n_slices=3, block_size=8,
+    ).build(reduce(lambda a, c: a.unionByName(c), parts))
+    assert_same_index(spark, idx, fresh)
+
+    cutoff = datetime.fromtimestamp(2_000_000, tz=timezone.utc).replace(tzinfo=None)
+    b.add_documents(parts[1].withColumn("conv_id", F.lit("cMID2")), gen=b._next_gen_id())
+    res = b.prune_index(cutoff)
+    assert res["pruned"] and len(res["rewritten"]) == 2, res
+    assert_dense_ordinals(idx)
+    rep = b.verify()
+    assert rep["ok"] and rep["blocks"] > 0 and rep["docs_bad_ordinals"] == 0, rep
+    assert SearchEngine(spark, idx).search("words", k=100).df.count() == 30 + 2 * 15
+
+
+def test_generation_ids_past_the_doc_key_budget(spark, workdir, monkeypatch):
+    """Generation ids only grow (streaming ingest takes one per batch,
+    every compaction and prune another), so an id past 2^GEN_BITS must
+    build, search and compact: the doc key holds a generation's RANK
+    among the live ones. What is bounded is the live count — a build
+    past it is refused, and compaction (which only lowers it) still
+    runs."""
+    from aspublic_spark.index import build as build_mod
+    from aspublic_spark.index.build import GEN_BITS, live_gens
+
+    idx = os.path.join(workdir, "big_gen_idx")
+    shutil.rmtree(idx, ignore_errors=True)
+    b = _builder(spark, idx)
+    b.build(_mk_rows(spark, "cA", 20, 1_000_000, "alpha words"), gen=0)
+    big = (1 << GEN_BITS) + 5
+    b.add_documents(_mk_rows(spark, "cB", 20, 2_000_000, "bravo words"), gen=big)
+    eng = SearchEngine(spark, idx)
+    assert eng.search("words", k=100).df.count() == 40
+    assert {r["conv_id"] for r in eng.search("bravo", k=100).df.collect()} == {"cB"}
+
+    assert b.compact()["compacted"]
+    assert live_gens(idx) == [big + 1]
+    assert_dense_ordinals(idx)
+    assert b.verify()["ok"]
+    eng.refresh()
+    assert eng.search("words", k=100).df.count() == 40
+    assert {r["conv_id"] for r in eng.search("alpha", k=100).df.collect()} == {"cA"}
+
+    monkeypatch.setattr(build_mod, "GEN_BITS", 1)  # at most 2 live gens
+    b.add_documents(_mk_rows(spark, "cC", 5, 3_000_000, "charlie words"), gen=b._next_gen_id())
+    with pytest.raises(ValueError, match="live generations"):
+        b.add_documents(_mk_rows(spark, "cD", 5, 4_000_000, "delta words"), gen=b._next_gen_id())
+    assert b.compact()["compacted"]
+    assert len(live_gens(idx)) == 1

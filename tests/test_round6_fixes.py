@@ -16,8 +16,8 @@ they rely on:
    oracle's top-k and scores for the AND/NOT/phrase shapes it covers,
    and the exhaustive plan's top-k under forced block pruning.
 4. The build tokenizes behind a hash exchange on doc_id: a one-row-group
-   input still tokenizes in max(input splits, defaultParallelism) tasks,
-   and the index does not depend on the input's row-group layout. The
+   input still tokenizes in n_slices tasks, one slice each, and the
+   index does not depend on the input's row-group layout. The
    tokenize's and the re-cut's partial rows do not depend on the order
    their rows arrive in, so a retried task repeats its first attempt.
 """
@@ -41,7 +41,7 @@ from tests.test_fts5_tree import _fts5_available
 
 def _collect_postings(factory, batch, store_positions):
     """Decode the factory's partial-block output back to sorted
-    (slice, term, fld, doc_id, tf, dl, positions) postings."""
+    (slice, term, fld, ord, tf, dl, positions) postings."""
     rows = []
     for rb in factory([batch]):
         d = codec.decode_blocks(rb, "values" if store_positions else None)
@@ -50,7 +50,7 @@ def _collect_postings(factory, batch, store_positions):
         for k, b in enumerate(d["blk"].tolist()):
             pos = tuple(d["pos"][ps[k] : ps[k + 1]].tolist()) if store_positions else ()
             rows.append((
-                cols["slice"][b], cols["term"][b], cols["fld"][b], int(d["doc_id"][k]),
+                cols["slice"][b], cols["term"][b], cols["fld"][b], int(d["ord"][k]),
                 int(d["tf"][k]), int(d["dl"][k]), pos,
             ))
     return sorted(rows)
@@ -92,13 +92,16 @@ def test_arrow_tokenize_path_matches_python_path():
         "99 bottles of beer",
     ]
     n = len(texts)
+    # one slice's rows, sorted by doc_id and ranked: the tokenize's
+    # input
     batch = pa.record_batch(
         [
-            pa.array(np.arange(n) % 4, type=pa.int32()),
+            pa.array(np.zeros(n, dtype=np.int32), type=pa.int32()),
+            pa.array(np.arange(n, dtype=np.int32), type=pa.int32()),
             pa.array(np.arange(n, dtype=np.int64), type=pa.int64()),
             pa.array(texts, type=pa.string()),
         ],
-        names=["slice", "doc_id", "f0"],
+        names=["slice", "ord", "doc_id", "f0"],
     )
     for store_positions in (True, False):
         new = _collect_postings(_factory(store_positions), batch, store_positions)
@@ -257,8 +260,10 @@ def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
     df = synth_transcripts(spark, 2000, seed=11)
 
     texts = [r.text for r in df.select("text").collect()]
+    # slice 0's rows as partition 0, sorted by doc_id and ranked
     batch = pa.RecordBatch.from_pydict({
-        "slice": pa.array([i % 2 for i in range(len(texts))], pa.int32()),
+        "slice": pa.array([0] * len(texts), pa.int32()),
+        "ord": pa.array(range(len(texts)), pa.int32()),
         "doc_id": pa.array(range(len(texts)), pa.int64()),
         "f0": pa.array(texts, pa.string()),
     })
@@ -310,10 +315,11 @@ def test_single_task_build_salts_heavy_terms_from_task_zero(spark, workdir):
 def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
     """The build hash-exchanges its text rows before the tokenize: a
     corpus in ONE parquet row group (which Spark cannot split) still
-    tokenizes in max(input splits, defaultParallelism) tasks, several
-    of them non-empty, and the index equals a build of the same rows
-    from an 8-row-group file read as ~8 splits."""
+    tokenizes in n_slices tasks, each holding exactly one slice (its
+    partition id) and none empty, and the index equals a build of the
+    same rows from an 8-row-group file read as ~8 splits."""
     import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
 
     from bench_extra import _tokenize_tasks
     from tests.test_incremental import assert_same_index
@@ -336,14 +342,16 @@ def test_one_row_group_input_tokenizes_in_every_task(spark, workdir):
         shutil.rmtree(idx, ignore_errors=True)
         group = f"{name}_{os.getpid()}"
         sc.setJobGroup(group, name)
+        b = IndexBuilder(spark, idx, n_slices=2, block_size=16, salt_max_postings=40)
         try:
-            IndexBuilder(spark, idx, n_slices=2, block_size=16, salt_max_postings=40).build(df)
+            b.build(df)
         finally:
             sc.setJobGroup("", "")
         n_tasks, busy, rows = _tokenize_tasks(spark, group)
-        assert n_tasks == max(n_in, sc.defaultParallelism), (n_tasks, n_in)
+        assert n_tasks == busy == 2, (n_tasks, busy, n_in)
         assert rows == tbl.num_rows
-        assert busy > 1, (n_tasks, busy)
+        held = b._tokenized(df).select(F.spark_partition_id().alias("p"), "slice").distinct()
+        assert sorted(tuple(r) for r in held.collect()) == [(0, 0), (1, 1)]
         return idx, n_in
 
     idx_one, n_one = build(one, "r6_spread_one")
@@ -392,7 +400,7 @@ def test_tokenize_output_does_not_depend_on_row_arrival_order(spark, workdir):
     )
 
     def partials(path):
-        rows = b._tokenized(spark.read.parquet(path), 4).collect()
+        rows = b._tokenized(spark.read.parquet(path)).collect()
         return collections.Counter(
             tuple(bytes(v) if isinstance(v, bytearray) else v for v in r) for r in rows
         )
@@ -421,8 +429,9 @@ def test_recut_output_does_not_depend_on_row_order():
     vocab = [f"w{i}" for i in range(60)]
     texts = [" ".join(vocab[min(int(z), 59)] for z in rng.zipf(1.6, 12)) for _ in range(600)]
     batch = pa.RecordBatch.from_pydict({
-        "slice": pa.array([i % 2 for i in range(len(texts))], pa.int32()),
-        "doc_id": pa.array(rng.permutation(10**6)[: len(texts)], pa.int64()),
+        "slice": pa.array([0] * len(texts), pa.int32()),
+        "ord": pa.array(range(len(texts)), pa.int32()),
+        "doc_id": pa.array(np.sort(rng.permutation(10**6)[: len(texts)]), pa.int64()),
         "f0": pa.array(texts, pa.string()),
     })
     parts = [
@@ -469,7 +478,7 @@ def test_block_ids_dense_and_full_blocks_pass_through(spark, workdir):
     IndexBuilder(
         spark, idx, n_slices=2, block_size=16, salt_max_postings=200
     ).build(synth_transcripts(spark, 3000, seed=42))
-    blocks = spark.read.parquet(idx + "/postings/gen=0")
+    blocks = spark.read.option("basePath", idx + "/postings").parquet(idx + "/postings/gen=0")
     assert blocks.filter(F.col("n") == 16).count() > 0  # (1)
     bad = (
         blocks.groupBy("slice", "term", "fld", "salt")
@@ -485,5 +494,5 @@ def test_block_ids_dense_and_full_blocks_pass_through(spark, workdir):
     eng = SearchEngine(spark, idx)
     unp = eng.unpack(blocks)
     total = unp.count()
-    distinct = unp.select("doc_id", "term", "fld").distinct().count()
+    distinct = unp.select("doc_key", "term", "fld").distinct().count()
     assert total == distinct > 0  # (3)

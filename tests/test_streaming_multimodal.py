@@ -577,9 +577,11 @@ def test_ingest_after_compaction_no_resurrection(spark, workdir):
 
 def test_compact_heals_late_duplicates(spark, workdir):
     """A key re-ingested outside the dedup horizon exists twice under
-    the same doc_id (documented TTL semantics); compaction is the
-    exact-once repair pass — afterwards the index equals a fresh build
-    over the unique latest rows."""
+    the same doc_id (documented TTL semantics). Before compaction each
+    copy is its own doc of its own generation — postings name docs by
+    (gen, slice, ord) — so each copy scores alone and both are
+    returned; compaction is the exact-once repair pass — afterwards the
+    index equals a fresh build over the unique latest rows."""
     from aspublic_spark.index.build import IndexBuilder
     from tests.test_incremental import assert_same_index
 
@@ -593,7 +595,7 @@ def test_compact_heals_late_duplicates(spark, workdir):
     assert ing.ingest_batch(base) == 6
     late_dup = base.withColumn("ts", F.col("ts") + F.expr("interval 30 days"))
     assert ing.ingest_batch(late_dup) == 6  # outside horizon: re-accepted
-    # duplicates are visible pre-compaction (scores double-counted)
+    # duplicates are visible pre-compaction (each copy scored alone)
     assert SearchEngine(spark, idx).n_docs == 12
 
     res = ing.builder.compact()
